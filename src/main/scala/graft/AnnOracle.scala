@@ -28,8 +28,9 @@ import graft.operators.Ann
   *
   * The murmur LSH hyperplanes need no capture at all: `planeComp` is a
   * pure hash of (bit, dim), so the plane matrix is embedded directly and
-  * the whole non-portable LSH tier (home-ball, query-adaptive multiprobe,
-  * and its partitioned twin — spec-pinned identical) replays statically.
+  * the whole LSH tier (Hamming-ball probes, query-adaptive multiprobe,
+  * their partitioned and join forms — spec-pinned identical, and the
+  * recall rows) replays statically.
   *
   * Reference anchor: the ANN tier is the scale path for the reference's
   * vector-store probe (chroma_utils.py:237-263 — a Chroma collection
@@ -209,22 +210,23 @@ private[graft] object AnnOracle {
        |FROM ranked WHERE rank <= $k
        |ORDER BY query_id, rank""".stripMargin
 
-  /** `ann_lsh_topk` / `ann_lsh_join` mirrors: murmur signatures, the
-    * Hamming-≤2 probe ball as a `bit_count(xor(...)) <= 2` bucket join
-    * (the probe SET of [[Ann.probeSignatures]] at probeBits=2 is exactly
-    * that ball), exact cosine rerank. The join form replays identically:
-    * broadcast-vs-shuffled-layout probing is a physical choice, the
-    * probe ball and scoring are shared code on the Spark side.
+  /** `ann_lsh_topk` / `ann_lsh_join` / `ann_lsh_probe1` /
+    * `ann_lsh_partitioned` mirrors: murmur signatures, the
+    * Hamming-≤probeBits probe ball as a `bit_count(xor(...)) <= probeBits`
+    * bucket join (the probe SET of [[Ann.probeSignatures]] is exactly
+    * that ball), exact cosine rerank. The join and partitioned forms
+    * replay identically: broadcast-vs-layout probing is a physical
+    * choice, the probe ball and scoring are shared code on the Spark side.
     */
-  def lshTopKSql(nq: Int = 5, k: Int = 2): String =
+  def lshTopKSql(nq: Int = 5, k: Int = 2, probeBits: Int = 2): String =
     s"""WITH
        |$sigCtes,
        |q AS (
        |  SELECT s.vec_id AS query_id, e.embedding AS qe, s.sig
        |  FROM sigs s JOIN embeddings e USING (vec_id) WHERE s.vec_id < $nq),
        |${cosineRankTail(
-        """SELECT q.query_id, q.qe, s.vec_id, e.embedding
-          |  FROM q JOIN sigs s ON bit_count(xor(q.sig, s.sig)) <= 2
+        s"""SELECT q.query_id, q.qe, s.vec_id, e.embedding
+          |  FROM q JOIN sigs s ON bit_count(xor(q.sig, s.sig)) <= $probeBits
           |  JOIN embeddings e ON e.vec_id = s.vec_id""".stripMargin, k)}""".stripMargin
 
   /** `ann_lsh_multiprobe` (and its spec-pinned-identical partitioned
@@ -274,15 +276,14 @@ private[graft] object AnnOracle {
           |  JOIN sigs s ON s.sig = p.psig
           |  JOIN embeddings e ON e.vec_id = s.vec_id""".stripMargin, k)}""".stripMargin
 
-  /** `ann_recall_murmur` mirror: recall@10 of the murmur home-ball tier
-    * ([[Ann.lshTopK]] at probeBits=2, raw-sim rank) against the exact
-    * brute-force top-10, per query plus the macro mean (query_id = -1) —
-    * the quality-contract row `ann_recall` gives the portable tier,
-    * now expressible for the murmur tier too since its signatures
-    * replay. The +1e-9 pre-floor on the macro mean absorbs ulp-order
-    * differences in the 5-row average (the RetrievalEval convention).
+  /** `ann_recall` / `ann_recall_murmur` mirror: recall@10 of the murmur
+    * Hamming-ball tier ([[Ann.lshTopK]] at `probeBits`, raw-sim rank)
+    * against the exact brute-force top-10, per query plus the macro mean
+    * (query_id = -1). The +1e-9 pre-floor on the macro mean absorbs
+    * ulp-order differences in the 5-row average (the RetrievalEval
+    * convention).
     */
-  def lshRecallSql: String =
+  def lshRecallSql(probeBits: Int): String =
     s"""WITH
        |$sigCtes,
        |q AS (
@@ -291,7 +292,7 @@ private[graft] object AnnOracle {
        |cand AS (
        |  SELECT q.query_id, s.vec_id,
        |    ${cosine("q.qe", "e.embedding")} AS sim
-       |  FROM q JOIN sigs s ON bit_count(xor(q.sig, s.sig)) <= 2
+       |  FROM q JOIN sigs s ON bit_count(xor(q.sig, s.sig)) <= $probeBits
        |  JOIN embeddings e ON e.vec_id = s.vec_id),
        |ar AS (
        |  SELECT query_id, vec_id FROM (
@@ -827,7 +828,7 @@ private[graft] object AnnOracle {
        |${adcTail(10)}""".stripMargin
 
   // ------------------------------------------------------------ assembly
-  /** The entries available under the current captures. The LSH trio is
+  /** The entries available under the current captures. The LSH tier is
     * static; trained tiers appear once their registry queries have run
     * (cold cache ⇒ omitted ⇒ rows-only fallback).
     */
@@ -879,15 +880,20 @@ private[graft] object AnnOracle {
     Map(
       "ann_lsh_topk" -> lshTopKSql(),
       "ann_lsh_join" -> lshTopKSql(nq = 50, k = 5),
+      "ann_lsh_probe1" -> lshTopKSql(probeBits = 1),
+      // Spec-pinned identical to the in-memory probe (AnnSpec) — the
+      // layout is a physical optimization.
+      "ann_lsh_partitioned" -> lshTopKSql(probeBits = 1),
       "ann_lsh_multiprobe" -> lshMultiprobeSql(),
       // Spec-pinned identical to the in-memory adaptive form
-      // (AnnPartitionedSpec) — the layout is a physical optimization.
+      // (MultiProbeSpec) — the layout is a physical optimization.
       "ann_lsh_partitioned_adaptive" -> lshMultiprobeSql(),
       // The JOIN form of the adaptive probe (r18): distributed query
       // frame, same probe set and rank tail — the mirror is the same
       // multiprobe replay at the join's (nq, k).
       "ann_lsh_join_adaptive" -> lshMultiprobeSql(nq = 50, k = 5),
-      "ann_recall_murmur" -> lshRecallSql) ++
+      "ann_recall" -> lshRecallSql(probeBits = 1),
+      "ann_recall_murmur" -> lshRecallSql(probeBits = 2)) ++
       ivf ++ pq ++ res ++ loc ++ opqFlat ++ opqIvf
   }
 }

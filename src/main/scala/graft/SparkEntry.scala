@@ -1032,19 +1032,12 @@ object SparkEntry {
       // serializing what one adaptive execution overlaps. Measured r19:
       // lex checkpointed 2.08 s vs 1.23-1.41 s inline at sf0.1, and the
       // labels checkpoint loses at EVERY probed scale now that the melt
-      // cut its consumers from 18 to 3 (R19ScaleProbe, SCALE.md:
-      // ratio_off_over_on 0.93 at 80k docs, 0.80 at 320k docs — the
-      // three overlapped label passes beat one serialized pass until
-      // raw tokenize CPU, not stage latency, dominates). The
-      // `spark.graft.retrievaleval.labelsCheckpoint=true` knob re-enables
-      // the materialize-once shape for that regime and for the probe.
-      val labels0 =
-        operators.RetrievalEval.gradedTermOverlapLabels(docs, textQueries)
+      // cut its consumers from 18 to 3 (SCALE.md: inline/checkpoint
+      // 0.93 at 80k docs, 0.80 at 320k docs — the three overlapped label
+      // passes beat one serialized pass until raw tokenize CPU, not
+      // stage latency, dominates).
       val labels =
-        if (s.conf.getOption("spark.graft.retrievaleval.labelsCheckpoint")
-            .contains("true"))
-          operators.LoopCheckpoint.transient(labels0, eager = false)
-        else labels0
+        operators.RetrievalEval.gradedTermOverlapLabels(docs, textQueries)
       // ONE corpus tokenize per pass: the k=5 list is a rank filter of
       // the k=20 list (row_number ranks are prefix-stable), not a second
       // bm25TopK run — the r7 verdict flagged the double tokenize.
@@ -1953,19 +1946,13 @@ object SparkEntry {
       // (doc_id, lang, h, fp, q, n_tokens). Values are expression-
       // identical to the previous inline forms, so the packed-bin output
       // (which never needed text) is row-identical — same oracle.
-      // `spark.graft.pretrain.proxyCheckpoint=false` disables the
-      // materialization — the R19ScaleProbe evidence knob (SCALE.md).
-      val proxyCkpt =
-        !s.conf.getOption("spark.graft.pretrain.proxyCheckpoint").contains("false")
-      val proxySel = (corpus.select(
+      // The checkpoint wins 1.04x at 16x rows and 1.35x at 64x (SCALE.md).
+      val proxy = operators.LoopCheckpoint.transient(corpus.select(
         col("doc_id"), col("lang"),
         sha2(col("text"), 256).as("h"),
         TextAnalysis.fingerprintModUdf(col("text")).as("fp"),
         (TextAnalysis.qualityScore(col("text")) >= 0.5).as("q"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens")))
-      val proxy =
-        if (proxyCkpt) operators.LoopCheckpoint.transient(proxySel, eager = false)
-        else proxySel
+        TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens")), eager = false)
       // exact dedup: min doc_id per content hash (T-6 semantics)
       val exactKept = proxy
         .withColumn("keep", min("doc_id").over(Window.partitionBy("h")))
@@ -2267,15 +2254,15 @@ object SparkEntry {
         .orderBy("query_id", "rank")
     }),
 
-    "ann_lsh_portable" -> ((s, dir) => {
-      // Verification twin of ann_lsh_topk: portable signature + bit-flip
-      // multiprobe + bucket join + floored cosine rerank, every stage
-      // replicated in the oracle — the approximate path itself is
-      // hash-checked, not just recall-gated.
+    "ann_lsh_probe1" -> ((s, dir) => {
+      // ann_lsh_topk's narrow probe: the home bucket plus every
+      // single-bit flip (9 buckets at nBits=8 instead of the Hamming-2
+      // ball's 37), hash-checked by the same static murmur replay.
       val emb = Tables.embeddings(s, dir)
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      operators.Ann.lshTopKPortable(qs, emb, k = 2, nBits = 8, probeBits = 1)
+      operators.Ann.lshTopK(qs, emb, k = 2, nBits = 8, probeBits = 1)
+        .withColumn("sim", TextAnalysis.floorScale(col("sim"), 6))
         .orderBy("query_id", "rank")
     }),
 
@@ -2290,7 +2277,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val base = new java.io.File(
         sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.signaturePartitionedLayoutMurmur(s, emb, base, nBits = 8)
+      val layout = operators.Ann.signaturePartitionedLayout(s, emb, base, nBits = 8)
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       val out = operators.Ann.lshTopKPartitionedAdaptive(
@@ -2310,13 +2297,13 @@ object SparkEntry {
 
     "ann_lsh_partitioned" -> ((s, dir) => {
       // The 100 TB ANN layout as an oracle-checked query: the corpus is
-      // written PARTITIONED BY its portable LSH signature to a scratch
+      // written PARTITIONED BY its murmur LSH signature to a scratch
       // dir, then the probe set becomes a STATIC isin filter on the
       // partition column — genuine PartitionFilters pruning (the scan
       // touches only probed signature directories; spec-asserted in
-      // AnnPartitionedSpec) — followed by the floored cosine rerank.
-      // Pruning is physical, not semantic, so the result hash-matches
-      // the same SQL mirror as ann_lsh_portable.
+      // AnnSpec) — followed by the exact cosine rerank. Pruning is
+      // physical, not semantic, so the result hash-matches the same
+      // SQL mirror as ann_lsh_probe1.
       // Build-once index: the layout write happens on the first call per
       // corpus content (fingerprint-keyed path) and is reused after —
       // probes pay probe cost, not the one-time 256-directory write.
@@ -2326,8 +2313,8 @@ object SparkEntry {
       val layout = operators.Ann.signaturePartitionedLayout(s, emb, base, nBits = 8)
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      operators.Ann.lshTopKPartitionedPortable(
-        s, layout, qs, k = 2, nBits = 8, probeBits = 1)
+      operators.Ann.lshTopKPartitioned(s, layout, qs, k = 2, nBits = 8, probeBits = 1)
+        .withColumn("sim", TextAnalysis.floorScale(col("sim"), 6))
         .orderBy("query_id", "rank")
     }),
 
@@ -2343,7 +2330,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val base = new java.io.File(
         sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.signaturePartitionedLayoutMurmur(s, emb, base, nBits = 8)
+      val layout = operators.Ann.signaturePartitionedLayout(s, emb, base, nBits = 8)
       val qs = emb.filter(col("vec_id") < 50)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       operators.Ann.lshJoin(s, layout, qs, k = 5, nBits = 8, probeBits = 2)
@@ -2366,7 +2353,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val base = new java.io.File(
         sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.signaturePartitionedLayoutMurmur(s, emb, base, nBits = 8)
+      val layout = operators.Ann.signaturePartitionedLayout(s, emb, base, nBits = 8)
       val qs = emb.filter(col("vec_id") < 50)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       operators.Ann.lshJoinAdaptive(s, layout, qs, k = 5, nBits = 8, nProbes = 16)
@@ -2374,67 +2361,9 @@ object SparkEntry {
         .orderBy("query_id", "rank")
     }),
 
-    "ann_recall" -> ((s, dir) => {
-      // The Verify recall gate as a first-class HASH-CHECKED metric:
-      // recall@10 of the portable LSH path against exact brute force,
-      // per query plus a macro mean (query_id = -1). Both top-k sets are
-      // themselves deterministic oracle-mirrored paths, so their
-      // intersection size — the recall numerator — hashes exactly; this
-      // is the number an ANN operator's quality contract is written in.
-      val emb = Tables.embeddings(s, dir)
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      val k = 10
-      val approx = operators.Ann
-        .lshTopKPortable(qs, emb, k = k, nBits = 8, probeBits = 1)
-        .select("query_id", "vec_id")
-      val exact = Retrieval.knnJoin(qs, emb, k = k).select("query_id", "vec_id")
-      val inter = exact.join(approx, Seq("query_id", "vec_id"))
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      val per = qs.select("query_id").join(inter, Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          TextAnalysis.floorScale(
-            coalesce(col("n_hit"), lit(0L)) / lit(k.toDouble), 6).as("recall_at_k"))
-      per.unionByName(per.agg(
-          sum(col("n_hit")).as("n_hit"),
-          // +1e-9 pre-floor: averages of exact 1e-6 multiples sit ON a
-          // floor boundary whenever divisible by the query count (see
-          // RetrievalEval.evaluateWithMacro)
-          TextAnalysis.floorScale(avg(col("recall_at_k")) + lit(1e-9), 6)
-            .as("recall_at_k"))
-        .select(lit(-1L).as("query_id"), col("n_hit"), col("recall_at_k")))
-        .orderBy("query_id")
-    }),
-
-    "ann_recall_murmur" -> ((s, dir) => {
-      // The quality-contract row for the MURMUR LSH tier — the twin of
-      // `ann_recall` (portable tier), hash-checkable since r15 because
-      // the murmur signatures replay in the oracle: recall@10 of the
-      // Hamming-2 home-ball probe vs the exact brute force, per query
-      // plus the macro mean (query_id = -1).
-      val emb = Tables.embeddings(s, dir)
-      val qs = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      val k = 10
-      val approx = operators.Ann
-        .lshTopK(qs, emb, k = k, nBits = 8, probeBits = 2)
-        .select("query_id", "vec_id")
-      val exact = Retrieval.knnJoin(qs, emb, k = k).select("query_id", "vec_id")
-      val inter = exact.join(approx, Seq("query_id", "vec_id"))
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      val per = qs.select("query_id").join(inter, Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          TextAnalysis.floorScale(
-            coalesce(col("n_hit"), lit(0L)) / lit(k.toDouble), 6).as("recall_at_k"))
-      per.unionByName(per.agg(
-          sum(col("n_hit")).as("n_hit"),
-          TextAnalysis.floorScale(avg(col("recall_at_k")) + lit(1e-9), 6)
-            .as("recall_at_k"))
-        .select(lit(-1L).as("query_id"), col("n_hit"), col("recall_at_k")))
-        .orderBy("query_id")
-    }),
+    // Hash-checked recall@10 at the Hamming-1 and Hamming-2 probe balls.
+    "ann_recall" -> ((s, dir) => annRecall(s, dir, probeBits = 1)),
+    "ann_recall_murmur" -> ((s, dir) => annRecall(s, dir, probeBits = 2)),
 
     "ann_ivf_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
@@ -3412,6 +3341,40 @@ object SparkEntry {
         .orderBy("id_a", "id_b")
     })
   )
+
+  /** `ann_recall` / `ann_recall_murmur`: recall@10 of [[operators.Ann.lshTopK]]
+    * at `probeBits` against exact brute force, per query plus a macro mean
+    * (query_id = -1). Both top-k sets are deterministic oracle-mirrored
+    * paths, so their intersection size — the recall numerator — hashes
+    * exactly; this is the number an ANN operator's quality contract is
+    * written in.
+    */
+  private def annRecall(s: SparkSession, dir: String, probeBits: Int): DataFrame = {
+    val emb = Tables.embeddings(s, dir)
+    val qs = emb.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
+    val k = 10
+    val approx = operators.Ann
+      .lshTopK(qs, emb, k = k, nBits = 8, probeBits = probeBits)
+      .select("query_id", "vec_id")
+    val exact = Retrieval.knnJoin(qs, emb, k = k).select("query_id", "vec_id")
+    val inter = exact.join(approx, Seq("query_id", "vec_id"))
+      .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
+    val per = qs.select("query_id").join(inter, Seq("query_id"), "left")
+      .select(col("query_id"),
+        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
+        TextAnalysis.floorScale(
+          coalesce(col("n_hit"), lit(0L)) / lit(k.toDouble), 6).as("recall_at_k"))
+    per.unionByName(per.agg(
+        sum(col("n_hit")).as("n_hit"),
+        // +1e-9 pre-floor: averages of exact 1e-6 multiples sit ON a
+        // floor boundary whenever divisible by the query count (see
+        // RetrievalEval.evaluateWithMacro)
+        TextAnalysis.floorScale(avg(col("recall_at_k")) + lit(1e-9), 6)
+          .as("recall_at_k"))
+      .select(lit(-1L).as("query_id"), col("n_hit"), col("recall_at_k")))
+      .orderBy("query_id")
+  }
 
   // ------------------------------------------------------------------ //
   //  DuckDB oracle SQL (ANSI), one per SQL-expressible query above.    //
@@ -6626,154 +6589,6 @@ object SparkEntry {
         |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY approx_sim DESC, vec_id) AS INT) AS rank
         |  FROM pairs)
         |SELECT query_id, rank, vec_id, approx_sim FROM r WHERE rank <= 2
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // Portable-signature LSH ANN, fully hash-checked: corpus signatures,
-    // query multiprobe set (signature plus every single-bit flip),
-    // bucket equi-join, floored cosine rerank, rank cut — each stage the
-    // exact SQL mirror of lshTopKPortable.
-    "ann_lsh_portable" ->
-      """WITH s AS (
-        |  SELECT vec_id, embedding,
-        |    CAST(list_sum(list_transform(range(8), b ->
-        |      CASE WHEN list_reduce(list_prepend(0.0, list_transform(range(64), i ->
-        |          CAST(embedding[CAST(i+1 AS INT)] AS DOUBLE) *
-        |          (((((48271*(b*1024+i)+16807) % 2147483647) * ((48271*(b*1024+i)+16807) % 2147483647)) % 2147483647) * 2.0 / 2147483647 - 1))),
-        |        (x, y) -> x + y) >= 0
-        |      THEN CAST(1 AS BIGINT) << CAST(b AS INT) ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS sig
-        |  FROM embeddings),
-        |pr AS (
-        |  SELECT vec_id AS query_id, embedding AS qe,
-        |    unnest(list_prepend(sig, list_transform(range(8), b ->
-        |      xor(sig, CAST(1 AS BIGINT) << CAST(b AS INT))))) AS psig
-        |  FROM s WHERE vec_id < 5),
-        |x AS (
-        |  SELECT pr.query_id, s.vec_id,
-        |    floor(
-        |      list_reduce(list_prepend(0.0,
-        |        list_transform(range(64),
-        |          i -> CAST(pr.qe[i+1] AS DOUBLE) * CAST(s.embedding[i+1] AS DOUBLE))),
-        |        (a, b) -> a + b)
-        |      / (sqrt(list_reduce(list_prepend(0.0,
-        |           list_transform(pr.qe, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))), (a, b) -> a + b))
-        |       * sqrt(list_reduce(list_prepend(0.0,
-        |           list_transform(s.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))), (a, b) -> a + b)))
-        |      * 1000000) / 1000000 AS sim
-        |  FROM s JOIN pr ON s.sig = pr.psig),
-        |r AS (
-        |  SELECT query_id, vec_id, sim,
-        |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS INT) AS rank
-        |  FROM x)
-        |SELECT query_id, rank, vec_id, sim FROM r WHERE rank <= 2
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // Recall numerator = |LSH top-10 ∩ brute top-10| per query: the LSH
-    // chain is ann_lsh_portable's CTEs at k=10, the brute chain is
-    // t4_knn_cosine's; both deterministic, so the intersection hashes.
-    "ann_recall" ->
-      """WITH s AS (
-        |  SELECT vec_id, embedding,
-        |    CAST(list_sum(list_transform(range(8), b ->
-        |      CASE WHEN list_reduce(list_prepend(0.0, list_transform(range(64), i ->
-        |          CAST(embedding[CAST(i+1 AS INT)] AS DOUBLE) *
-        |          (((((48271*(b*1024+i)+16807) % 2147483647) * ((48271*(b*1024+i)+16807) % 2147483647)) % 2147483647) * 2.0 / 2147483647 - 1))),
-        |        (x, y) -> x + y) >= 0
-        |      THEN CAST(1 AS BIGINT) << CAST(b AS INT) ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS sig
-        |  FROM embeddings),
-        |pr AS (
-        |  SELECT vec_id AS query_id, embedding AS qe,
-        |    unnest(list_prepend(sig, list_transform(range(8), b ->
-        |      xor(sig, CAST(1 AS BIGINT) << CAST(b AS INT))))) AS psig
-        |  FROM s WHERE vec_id < 5),
-        |x AS (
-        |  SELECT pr.query_id, s.vec_id,
-        |    floor(
-        |      list_reduce(list_prepend(0.0,
-        |        list_transform(range(64),
-        |          i -> CAST(pr.qe[i+1] AS DOUBLE) * CAST(s.embedding[i+1] AS DOUBLE))),
-        |        (a, b) -> a + b)
-        |      / (sqrt(list_reduce(list_prepend(0.0,
-        |           list_transform(pr.qe, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))), (a, b) -> a + b))
-        |       * sqrt(list_reduce(list_prepend(0.0,
-        |           list_transform(s.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))), (a, b) -> a + b)))
-        |      * 1000000) / 1000000 AS sim
-        |  FROM s JOIN pr ON s.sig = pr.psig),
-        |ar AS (
-        |  SELECT query_id, vec_id FROM (
-        |    SELECT query_id, vec_id,
-        |      row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rank
-        |    FROM x) t WHERE rank <= 10),
-        |q AS (
-        |  SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
-        |scored AS (
-        |  SELECT q.query_id, e.vec_id,
-        |    list_reduce(list_prepend(0.0,
-        |      list_transform(range(64),
-        |        i -> CAST(q.qe[i+1] AS DOUBLE) * CAST(e.embedding[i+1] AS DOUBLE))),
-        |      (a, b) -> a + b)
-        |    / (sqrt(list_reduce(list_prepend(0.0,
-        |         list_transform(q.qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (a,b) -> a+b))
-        |     * sqrt(list_reduce(list_prepend(0.0,
-        |         list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (a,b) -> a+b)))
-        |    AS sim
-        |  FROM q CROSS JOIN embeddings e),
-        |bq AS (
-        |  SELECT query_id, vec_id FROM (
-        |    SELECT query_id, vec_id,
-        |      row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rank
-        |    FROM scored) t WHERE rank <= 10),
-        |inter AS (
-        |  SELECT query_id, CAST(count(*) AS BIGINT) AS n_hit
-        |  FROM ar JOIN bq USING (query_id, vec_id) GROUP BY 1),
-        |per AS (
-        |  SELECT q.query_id, coalesce(i.n_hit, 0) AS n_hit,
-        |    floor(coalesce(i.n_hit, 0) / 10.0 * 1000000) / 1000000 AS recall_at_k
-        |  FROM q LEFT JOIN inter i ON q.query_id = i.query_id)
-        |SELECT query_id, n_hit, recall_at_k FROM per
-        |UNION ALL
-        |SELECT CAST(-1 AS BIGINT) AS query_id, CAST(sum(n_hit) AS BIGINT) AS n_hit,
-        |  floor((avg(recall_at_k) + 1e-9) * 1000000) / 1000000 AS recall_at_k
-        |FROM per
-        |ORDER BY query_id""".stripMargin,
-
-    // The signature-partitioned layout prunes partitions; it does not
-    // change results — so the partitioned query is checked against the
-    // SAME logical mirror as ann_lsh_portable (signature, multiprobe,
-    // bucket join, floored rerank, rank cut). A hash mismatch here would
-    // mean the physical layout altered semantics.
-    "ann_lsh_partitioned" ->
-      """WITH s AS (
-        |  SELECT vec_id, embedding,
-        |    CAST(list_sum(list_transform(range(8), b ->
-        |      CASE WHEN list_reduce(list_prepend(0.0, list_transform(range(64), i ->
-        |          CAST(embedding[CAST(i+1 AS INT)] AS DOUBLE) *
-        |          (((((48271*(b*1024+i)+16807) % 2147483647) * ((48271*(b*1024+i)+16807) % 2147483647)) % 2147483647) * 2.0 / 2147483647 - 1))),
-        |        (x, y) -> x + y) >= 0
-        |      THEN CAST(1 AS BIGINT) << CAST(b AS INT) ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS sig
-        |  FROM embeddings),
-        |pr AS (
-        |  SELECT vec_id AS query_id, embedding AS qe,
-        |    unnest(list_prepend(sig, list_transform(range(8), b ->
-        |      xor(sig, CAST(1 AS BIGINT) << CAST(b AS INT))))) AS psig
-        |  FROM s WHERE vec_id < 5),
-        |x AS (
-        |  SELECT pr.query_id, s.vec_id,
-        |    floor(
-        |      list_reduce(list_prepend(0.0,
-        |        list_transform(range(64),
-        |          i -> CAST(pr.qe[i+1] AS DOUBLE) * CAST(s.embedding[i+1] AS DOUBLE))),
-        |        (a, b) -> a + b)
-        |      / (sqrt(list_reduce(list_prepend(0.0,
-        |           list_transform(pr.qe, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))), (a, b) -> a + b))
-        |       * sqrt(list_reduce(list_prepend(0.0,
-        |           list_transform(s.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))), (a, b) -> a + b)))
-        |      * 1000000) / 1000000 AS sim
-        |  FROM s JOIN pr ON s.sig = pr.psig),
-        |r AS (
-        |  SELECT query_id, vec_id, sim,
-        |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS INT) AS rank
-        |  FROM x)
-        |SELECT query_id, rank, vec_id, sim FROM r WHERE rank <= 2
         |ORDER BY query_id, rank""".stripMargin,
 
     // Same int8 coarse chain, cut at rank <= 8 (k*overfetch), then exact

@@ -399,7 +399,7 @@ object Verify {
       // (same Hamming-2 probe ball, same codegen cosine, same cut) —
       // raw doubles included.
       {
-        val sigPath = operators.Ann.signaturePartitionedLayoutMurmur(
+        val sigPath = operators.Ann.signaturePartitionedLayout(
           spark, emb,
           new java.io.File(sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath,
           nBits = 8)

@@ -479,7 +479,7 @@ object Ann {
       else adaptiveProbes(v, nBits, nProbes))
 
   /** LSH similarity JOIN over a [[writeSignaturePartitioned]] /
-    * [[signaturePartitionedLayoutMurmur]] layout: top-k bucket-probed
+    * [[signaturePartitionedLayout]] layout: top-k bucket-probed
     * neighbors for EVERY row of an arbitrarily large query frame — the
     * [[ivfJoin]] / [[ivfPqJoin]] treatment applied to the LSH tier.
     * [[lshTopK]] keeps queries distributed but BROADCASTS the probed
@@ -591,35 +591,6 @@ object Ann {
       k)
   }
 
-  /** [[lshTopK]] with the PORTABLE squared-Lehmer signature
-    * ([[Dedup.portableSignature]]) instead of murmur hyperplanes: every
-    * stage — signature, the multiprobe bit-flip set, the bucket
-    * equi-join, the floored cosine rerank, the rank cut — is exactly
-    * reproducible in ANSI SQL, so the WHOLE approximate search path is
-    * hash-checked by the oracle (`ann_lsh_portable`), not just
-    * recall-gated. The murmur variant stays the scale default; this is
-    * its verification twin, the same relationship
-    * [[Dedup.minHashLshPairsPortable]] has to the murmur MinHash.
-    */
-  def lshTopKPortable(
-      queries: DataFrame,
-      corpus: DataFrame,
-      k: Int,
-      nBits: Int = 16,
-      probeBits: Int = 1): DataFrame = {
-    val sigU = udf((v: Seq[Float]) =>
-      if (v == null) null else Integer.valueOf(Dedup.portableSignature(v, nBits)))
-    val probesU = udf((v: Seq[Float]) =>
-      if (v == null) Array.empty[Int]
-      else probeSignatures(Dedup.portableSignature(v, nBits), nBits, probeBits).toArray)
-    val bucketed = corpus.withColumn("sig", sigU(col("embedding")))
-    val probed = queries.withColumn("sig", explode(probesU(col("q_embedding"))))
-    rankTopK(bucketed.join(broadcast(probed), "sig")
-      .withColumn("sim", graft.functions.TextAnalysis.floorScale(
-        VectorExpressions.cosineSim(col("q_embedding"), col("embedding")), 6)),
-      k)
-  }
-
   /** Write the corpus PARTITIONED BY its LSH signature bucket — the
     * physical layout that turns [[lshTopK]]'s candidate pruning into a
     * file-level skip at 100 TB: each signature value becomes a parquet
@@ -643,23 +614,6 @@ object Ann {
     writeKeyStats(corpus.sparkSession, path, "sig")
   }
 
-  /** [[writeSignaturePartitioned]] with the PORTABLE squared-Lehmer
-    * signature ([[Dedup.portableSignature]]) — the layout whose probe
-    * results the oracle can replicate in ANSI SQL, so the WHOLE
-    * partition-pruned search path is hash-checked (`ann_lsh_partitioned`),
-    * the same twin relationship [[lshTopKPortable]] has to [[lshTopK]].
-    */
-  def writeSignaturePartitionedPortable(
-      corpus: DataFrame, path: String, nBits: Int = 8): Unit = {
-    val sigU = udf((v: Seq[Float]) =>
-      if (v == null) null else Integer.valueOf(Dedup.portableSignature(v, nBits)))
-    corpus
-      .withColumn("sig", sigU(col("embedding")))
-      .repartition(col("sig"))
-      .write.mode("overwrite").partitionBy("sig").parquet(path)
-    writeKeyStats(corpus.sparkSession, path, "sig")
-  }
-
   /** [[lshTopK]] over a [[writeSignaturePartitioned]] layout. The probe
     * signature set is tiny and driver-known (nQueries × probe fan-out),
     * so it becomes a STATIC `isin` filter on the partition column —
@@ -677,8 +631,7 @@ object Ann {
       nBits: Int = 8,
       probeBits: Int = 1): DataFrame =
     lshPartitionedCore(spark, path, queries, k,
-      v => probeSignatures(signature(v, nBits), nBits, probeBits),
-      floorSim = false)
+      v => probeSignatures(signature(v, nBits), nBits, probeBits))
 
   /** [[lshTopKPartitioned]] with the query-adaptive probe order
     * ([[adaptiveProbes]]): the probe count IS the partition-directory
@@ -696,19 +649,23 @@ object Ann {
       nBits: Int = 8,
       nProbes: Int = 16): DataFrame =
     lshPartitionedCore(spark, path, queries, k,
-      v => adaptiveProbes(v, nBits, nProbes).toSeq,
-      floorSim = false)
+      v => adaptiveProbes(v, nBits, nProbes).toSeq)
 
-  /** Build-once [[writeSignaturePartitionedPortable]] layout keyed by a
-    * corpus content fingerprint — the index-build half of partitioned
-    * ANN. The layout is written ONCE per corpus content and probed by
-    * every subsequent query (the production lifecycle: a 100 TB layout
-    * write is a batch job, not a per-query cost), so repeated calls over
-    * an unchanged corpus return the existing directory. The fingerprint
+  /** Build-once [[writeSignaturePartitioned]] layout keyed by a corpus
+    * content fingerprint — the index-build half of partitioned ANN. The
+    * layout is written ONCE per corpus content and probed by every
+    * subsequent query (the production lifecycle: a 100 TB layout write
+    * is a batch job, not a per-query cost), so repeated calls over an
+    * unchanged corpus return the existing directory. The fingerprint
     * (row count + order-insensitive `bit_xor(xxhash64(...))`, the same
     * discipline as [[buildIvfCached]]) is part of the path, so a mutated
-    * corpus gets a fresh layout and stale probes are impossible.
-    * Returns the layout path for [[lshTopKPartitionedPortable]].
+    * corpus gets a fresh layout and stale probes are impossible. The
+    * `sigm` prefix keeps these murmur-signature layouts apart from the
+    * retired squared-Lehmer `sig` layouts an older build may have left
+    * under the same base directory: the path carries no signature
+    * family, so reusing `sig` would probe a stale layout. Returns the
+    * layout path for [[lshTopKPartitioned]] /
+    * [[lshTopKPartitionedAdaptive]] / [[lshJoin]].
     */
   def signaturePartitionedLayout(
       spark: SparkSession,
@@ -719,7 +676,8 @@ object Ann {
       count(lit(1)).as("n"),
       coalesce(expr("bit_xor(xxhash64(vec_id, embedding))"), lit(0L)).as("fp"))
       .head()
-    val path = s"$baseDir/sig${nBits}_n${fpRow.getLong(0)}_fp${java.lang.Long.toHexString(fpRow.getLong(1))}"
+    val path = s"$baseDir/sigm${nBits}_n${fpRow.getLong(0)}" +
+      s"_fp${java.lang.Long.toHexString(fpRow.getLong(1))}"
     // Existence through Hadoop's FileSystem, not java.io.File, so the
     // build-once contract holds on HDFS/S3 too (a local-only check would
     // silently rebuild the layout on every call there). Concurrent
@@ -729,57 +687,16 @@ object Ann {
     val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
     val fs = success.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(success))
-      writeSignaturePartitionedPortable(corpus, path, nBits)
-    path
-  }
-
-  /** Build-once MURMUR-signature layout (the scale-default signature),
-    * fingerprint discipline of [[signaturePartitionedLayout]] with a
-    * distinct `sigm` prefix so the two signature families never share a
-    * directory. The probe side for this layout is
-    * [[lshTopKPartitioned]] / [[lshTopKPartitionedAdaptive]].
-    */
-  def signaturePartitionedLayoutMurmur(
-      spark: SparkSession,
-      corpus: DataFrame,
-      baseDir: String,
-      nBits: Int = 8): String = {
-    val fpRow = corpus.agg(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(vec_id, embedding))"), lit(0L)).as("fp"))
-      .head()
-    val path = s"$baseDir/sigm${nBits}_n${fpRow.getLong(0)}" +
-      s"_fp${java.lang.Long.toHexString(fpRow.getLong(1))}"
-    val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = success.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(success))
       writeSignaturePartitioned(corpus, path, nBits)
     path
   }
-
-  /** [[lshTopKPartitioned]] over a [[writeSignaturePartitionedPortable]]
-    * layout: portable signatures + floored cosine, so the partition-pruned
-    * path itself hash-matches the `ann_lsh_portable` SQL mirror — pruning
-    * is a physical optimization, the logical result is identical.
-    */
-  def lshTopKPartitionedPortable(
-      spark: SparkSession,
-      path: String,
-      queries: DataFrame,
-      k: Int,
-      nBits: Int = 8,
-      probeBits: Int = 1): DataFrame =
-    lshPartitionedCore(spark, path, queries, k,
-      v => probeSignatures(Dedup.portableSignature(v, nBits), nBits, probeBits),
-      floorSim = true)
 
   private def lshPartitionedCore(
       spark: SparkSession,
       path: String,
       queries: DataFrame,
       k: Int,
-      probesOf: Seq[Float] => Seq[Int],
-      floorSim: Boolean): DataFrame = {
+      probesOf: Seq[Float] => Seq[Int]): DataFrame = {
     import spark.implicits._
     val qRows = queries.select("query_id", "q_embedding").collect()
     val probes: Seq[(Long, Int)] = qRows.toSeq.flatMap { r =>
@@ -790,10 +707,8 @@ object Ann {
     val corpus = spark.read.parquet(path).filter(col("sig").isin(sigSet: _*))
     val probed = probes.toDF("query_id", "sig")
       .join(queries, "query_id") // re-attach q_embedding (queries are small)
-    val rawSim = VectorExpressions.cosineSim(col("q_embedding"), col("embedding"))
     rankTopK(corpus.join(broadcast(probed), "sig")
-      .withColumn("sim",
-        if (floorSim) graft.functions.TextAnalysis.floorScale(rawSim, 6) else rawSim),
+      .withColumn("sim", VectorExpressions.cosineSim(col("q_embedding"), col("embedding"))),
       k)
   }
 

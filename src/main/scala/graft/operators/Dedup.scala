@@ -437,14 +437,6 @@ object Dedup {
       .select("doc_a", "doc_b", "est_jaccard")
   }
 
-  /** [[minHashLshPairs]] with the portable mod-p signature
-    * ([[TextAnalysis.minHashSignaturePortable]]): identical join/banding
-    * shape (explode band keys → equi-join → distinct pairs → signature
-    * agreement), but every hash is exactly reproducible in ANSI SQL, so
-    * the whole operator — candidate generation included — is
-    * oracle-checkable. 16 hashes × 4 bands keeps the oracle SQL tractable;
-    * the murmur double-hashing variant remains the scale default.
-    */
   /** (doc_id, sig, band) rows with the portable mod-p MinHash signature
     * and one row per LSH band key — the shared index shape for the
     * portable near-dup operators. At 100 TB this frame IS the dedup
@@ -496,6 +488,14 @@ object Dedup {
     bandedSignaturesPortable(existing, shingleWords, numHashes, bands)
       .groupBy("band").agg(min(col("doc_id")).as("blocker"))
 
+  /** [[minHashLshPairs]] with the portable mod-p signature
+    * ([[TextAnalysis.minHashSignaturePortable]]): identical join/banding
+    * shape (explode band keys → equi-join → distinct pairs → signature
+    * agreement), but every hash is exactly reproducible in ANSI SQL, so
+    * the whole operator — candidate generation included — is
+    * oracle-checkable. 16 hashes × 4 bands keeps the oracle SQL tractable;
+    * the murmur double-hashing variant remains the scale default.
+    */
   def minHashLshPairsPortable(
       docs: DataFrame,
       shingleWords: Int = 3,
@@ -1215,8 +1215,10 @@ object Dedup {
     * dot-product accumulation — is replicated operation-for-operation in
     * the oracle SQL (`list_reduce` folds left exactly like the
     * while-loop), so candidate generation itself is hash-checkable, the
-    * same trick as [[minHashLshPairsPortable]]. [[Ann.signature]] (murmur
-    * hyperplanes) remains the non-oracle scale default for ANN search.
+    * same trick as [[minHashLshPairsPortable]]. Used by the near-dup
+    * operators ([[embeddingNearDupBucketed]], the `graft_lsh_signature`
+    * SQL function); ANN search uses [[Ann.signature]] (murmur
+    * hyperplanes), which the oracle replays from its literal planes.
     */
   def portableSignature(v: Seq[Float], nBits: Int): Int = {
     var sig = 0

@@ -51,6 +51,10 @@ class AnnOracleSpec extends AnyFunSuite {
       assert(keys.contains("ann_lsh_join"))
       assert(keys.contains("ann_lsh_multiprobe"))
       assert(keys.contains("ann_lsh_partitioned_adaptive"))
+      assert(keys.contains("ann_lsh_probe1"))
+      assert(keys.contains("ann_lsh_partitioned"))
+      assert(keys.contains("ann_recall"))
+      assert(keys.contains("ann_recall_murmur"))
       // trained tiers absent without captures — the rows-only fallback
       assert(!keys.contains("ann_ivf_topk"))
       assert(!keys.contains("ann_ivfpq_topk"))
@@ -71,8 +75,8 @@ class AnnOracleSpec extends AnyFunSuite {
       val entries = AnnOracle.sqlEntries
       val expected = Set(
         "ann_lsh_topk", "ann_lsh_join", "ann_lsh_join_adaptive",
-        "ann_lsh_multiprobe",
-        "ann_lsh_partitioned_adaptive", "ann_recall_murmur",
+        "ann_lsh_multiprobe", "ann_lsh_probe1", "ann_lsh_partitioned",
+        "ann_lsh_partitioned_adaptive", "ann_recall", "ann_recall_murmur",
         "ann_ivf_topk", "ann_ivf_join", "ann_ivf_join_salted",
         "ann_ivf_join_adaptive",
         "ann_rule_topk", "ann_rule_ivfpq",
@@ -89,7 +93,7 @@ class AnnOracleSpec extends AnyFunSuite {
       entries.foreach { case (name, sql) =>
         val cols =
           if (name.startsWith("ann_rule_")) Seq("vec_id", "sim")
-          else if (name == "ann_recall_murmur") Seq("query_id", "n_hit", "recall_at_k")
+          else if (name.startsWith("ann_recall")) Seq("query_id", "n_hit", "recall_at_k")
           else if (name.endsWith("_rerank")) Seq("query_id", "rank", "vec_id", "d2")
           else if (name.startsWith("ann_lsh") || name == "ann_ivf_topk" ||
             name == "ann_ivf_join" || name == "ann_ivf_join_salted" ||
@@ -97,6 +101,9 @@ class AnnOracleSpec extends AnyFunSuite {
             Seq("query_id", "rank", "vec_id", "sim")
           else Seq("query_id", "rank", "vec_id", "adc_dist")
         cols.foreach(c => assert(sql.contains(c), s"$name missing column $c"))
+        // a `$x` left in a non-interpolated fragment reaches DuckDB as a
+        // prepared-statement parameter and the mirror errors
+        assert(!sql.contains("$"), s"$name has an uninterpolated placeholder")
       }
     }
   }

@@ -379,38 +379,16 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     assert(r1 >= 0.2, s"single-cell recall suspiciously low: $r1")
   }
 
-  test("portable LSH twin: self-retrieval, useful recall, floored sims") {
-    val out = Ann.lshTopKPortable(queries, corpus, k = 5, nBits = 8, probeBits = 2)
-      .select("query_id", "vec_id").as[(Long, Long)].collect()
-    assert(out.count { case (q, v) => q == v } == 20, "every query finds itself")
-    val r = recall(out)
-    assert(r >= 0.3, s"portable LSH recall too low: $r")
-  }
-
   test("signature-partitioned corpus: probes prune partitions, match in-memory LSH") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sigpart").toString
     Ann.writeSignaturePartitioned(corpus.select("vec_id", "embedding"), dir, nBits = 8)
     val df = Ann.lshTopKPartitioned(spark, dir, queries, k = 5, nBits = 8, probeBits = 2)
-    val out = df.select("query_id", "rank", "vec_id")
-      .as[(Long, Int, Long)].collect().toSet
-    val mem = Ann.lshTopK(queries, corpus, k = 5, nBits = 8, probeBits = 2)
-      .select("query_id", "rank", "vec_id").as[(Long, Int, Long)].collect().toSet
-    assert(out == mem, "partitioned layout must not change results")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("sig"),
-      s"probe must prune partitions, not post-filter:\n${plan.take(800)}")
-  }
-
-  test("portable signature-partitioned layout: prunes partitions, matches portable LSH") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sigpart_portable").toString
-    Ann.writeSignaturePartitionedPortable(corpus.select("vec_id", "embedding"), dir, nBits = 8)
-    val df = Ann.lshTopKPartitionedPortable(spark, dir, queries, k = 5, nBits = 8, probeBits = 2)
     val out = df.select("query_id", "rank", "vec_id", "sim")
       .as[(Long, Int, Long, Double)].collect().toSet
-    val mem = Ann.lshTopKPortable(queries, corpus, k = 5, nBits = 8, probeBits = 2)
+    val mem = Ann.lshTopK(queries, corpus, k = 5, nBits = 8, probeBits = 2)
       .select("query_id", "rank", "vec_id", "sim")
       .as[(Long, Int, Long, Double)].collect().toSet
-    assert(out == mem, "partitioned portable layout must not change results")
+    assert(out == mem, "partitioned layout must not change results")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("sig"),
       s"probe must prune partitions, not post-filter:\n${plan.take(800)}")
@@ -434,6 +412,8 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
   test("fingerprint-keyed layout: reused for identical corpus, rebuilt on mutation") {
     val base = java.nio.file.Files.createTempDirectory("graft_layout_fp").toString
     val p1 = Ann.signaturePartitionedLayout(spark, corpus.select("vec_id", "embedding"), base)
+    // murmur layouts live under `sigm…`, never the retired portable `sig…` paths
+    assert(new java.io.File(p1).getName.startsWith("sigm8_"))
     val marker = new java.io.File(p1, "_SUCCESS")
     assert(marker.exists())
     val mtime = marker.lastModified()

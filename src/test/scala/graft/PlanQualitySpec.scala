@@ -253,7 +253,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestSession {
     assert(plan("dsir_weights").contains("ExistingRDD"),
       "dsir_weights must read the materialized raw feature stream")
     // retrieval_eval (r19): the melted single-pass shape replaced the
-    // per-retriever label materialization entirely — R19ScaleProbe
+    // per-retriever label materialization entirely — the r19 probe
     // measured the labels checkpoint SLOWER at every probed scale once
     // the melt cut its consumers to 3, and the interleaved-bench
     // worktree A/B retired the bm25 dl checkpoint too — so this query
