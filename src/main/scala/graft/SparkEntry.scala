@@ -384,115 +384,63 @@ object SparkEntry {
     }),
 
     "dedup_minhash_lsh" -> ((s, dir) => {
-      Dedup.minHashLshPairsPortable(Tables.documents(s, dir).filter(col("doc_id") < 200))
+      Dedup.minHashLshPairsPortable(DedupOracle.slice(s, dir))
         .withColumn("est_jaccard", round(col("est_jaccard"), 6))
         .orderBy("doc_a", "doc_b")
     }),
 
     "dedup_simhash_hubcap" -> ((s, dir) => {
       // The SimHash twin of dedup_minhash_hubcap: same Zipf-head
-      // fixture (30 planted copies of doc 0 over cap 10 — all three
-      // portable-fingerprint bands go hot), same star semantics, same
-      // full DuckDB replay of the decision chain.
-      val base = Tables.documents(s, dir)
-        .filter(col("doc_id") < 200).select("doc_id", "text")
-      val hotCopies = base.filter(col("doc_id") === 0)
-        .select(explode(sequence(lit(0L), lit(29L))).as("i"), col("text"))
-        .select((col("i") + lit(50000L)).as("doc_id"), col("text"))
+      // fixture (all three portable-fingerprint bands go hot), same star
+      // semantics.
       Dedup.simHashPairsHubCapped(
-        base.unionByName(hotCopies), maxHamming = 2, maxBandSize = 10)
+        DedupOracle.withHotCopies(DedupOracle.slice(s, dir)),
+        maxHamming = DedupOracle.SimHashMaxHamming, maxBandSize = DedupOracle.HubCap)
         .orderBy("doc_a", "doc_b")
     }),
 
     "dedup_minhash_hubcap" -> ((s, dir) => {
-      // Zipf-head guard under the hard signal: the base slice plus 30
-      // planted copies of doc 0's text — every band bucket of that text
-      // holds 31 docs > cap 10, so the bucket emits a STAR to its
-      // min-id hub (doc 0 itself) instead of 465 quadratic pairs, while
-      // cold buckets stay byte-identical to dedup_minhash_lsh. The
-      // oracle replays the whole thing: bucket sizes, hot set, hub
-      // attach, star emission.
-      val base = Tables.documents(s, dir)
-        .filter(col("doc_id") < 200).select("doc_id", "text")
-      // explode(sequence), not crossJoin(range): keeps the fixture
-      // expansion join-free (RegistryPlanAuditSpec forbids the
-      // BroadcastNestedLoopJoin a 1-row cross product plans as)
-      val hotCopies = base.filter(col("doc_id") === 0)
-        .select(explode(sequence(lit(0L), lit(29L))).as("i"), col("text"))
-        .select((col("i") + lit(50000L)).as("doc_id"), col("text"))
+      // Zipf-head guard: every band bucket of doc 0's text holds 31 docs
+      // over the cap, so it emits a STAR to hub doc 0 instead of 465
+      // quadratic pairs; cold buckets stay byte-identical to
+      // dedup_minhash_lsh.
       Dedup.minHashLshPairsHubCapped(
-        base.unionByName(hotCopies), maxBandSize = 10)
+        DedupOracle.withHotCopies(DedupOracle.slice(s, dir)),
+        maxBandSize = DedupOracle.HubCap)
         .withColumn("est_jaccard", round(col("est_jaccard"), 6))
         .orderBy("doc_a", "doc_b")
     }),
 
     "dedup_minhash_verified" -> ((s, dir) => {
-      // Two-stage near-dup: LOOSE LSH candidate generation (signature
-      // agreement >= 0.25) -> exact edit-distance verification on the
-      // candidate set only. The input salts the base slice with BOTH
-      // candidate classes: +30000 = suffix near-copies (tiny edit ->
-      // verified) and +40000 = 100-char ROTATIONS of their base (the
-      // shingle SET barely changes, so MinHash sees a near-dup and the
-      // pair becomes a candidate — but the text moved wholesale, so the
-      // edit check REJECTS it: exactly the false-positive class a
-      // set-based estimate cannot see, made visible in the output as
-      // verified=false rows).
-      val base = Tables.documents(s, dir).filter(col("doc_id") < 200)
-        .select(col("doc_id"), col("text"))
-      val nearCopies = base.filter(col("doc_id") < 40)
-        .select((col("doc_id") + 30000).as("doc_id"),
-          concat(col("text"), lit(" graft salt")).as("text"))
-      val rotations = base.filter(col("doc_id") < 40)
-        .select((col("doc_id") + 40000).as("doc_id"),
-          concat(substring(col("text"), 101, 1000000), lit(" "),
-            substring(col("text"), 1, 100)).as("text"))
+      // Two-stage near-dup: LOOSE LSH candidates -> exact edit-distance
+      // verification on the candidate set only. The rotations are the
+      // false-positive class a set-based estimate cannot see, visible in
+      // the output as verified=false rows.
       Dedup.minHashVerifiedPairs(
-        base.unionByName(nearCopies).unionByName(rotations),
-        minAgreement = 0.25, minEditSim = 0.9)
+        DedupOracle.salted(DedupOracle.slice(s, dir)),
+        minAgreement = DedupOracle.LooseFloor, minEditSim = DedupOracle.EditFloor)
         .withColumn("est_jaccard", round(col("est_jaccard"), 6))
         .orderBy("doc_a", "doc_b")
     }),
 
     "dedup_minhash_verified_hubcap" -> ((s, dir) => {
-      // Two-stage near-dup under the Zipf-head guard: the verified
-      // fixture's BOTH candidate classes (+30000 suffix near-copies →
-      // verified; +40000 rotations → edit-REJECTED) plus the hubcap
-      // fixture's 30 planted copies of doc 0 (+50000) over cap 10 — the
-      // hot buckets emit a STAR to hub doc 0 and only star pairs pay
-      // the levenshtein (linear, not 465 quadratic verifications),
-      // while cold candidates verify byte-identically to
-      // dedup_minhash_verified. Leaf↔leaf verdicts inside the hot
-      // bucket come from cluster closure over verified hub edges, never
-      // a direct edit check (the operator's documented semantics). The
-      // oracle replays the full decision chain: bucket sizes, hot set,
-      // hub attach, star emission, then the edit verify.
-      val base = Tables.documents(s, dir).filter(col("doc_id") < 200)
-        .select(col("doc_id"), col("text"))
-      val nearCopies = base.filter(col("doc_id") < 40)
-        .select((col("doc_id") + 30000).as("doc_id"),
-          concat(col("text"), lit(" graft salt")).as("text"))
-      val rotations = base.filter(col("doc_id") < 40)
-        .select((col("doc_id") + 40000).as("doc_id"),
-          concat(substring(col("text"), 101, 1000000), lit(" "),
-            substring(col("text"), 1, 100)).as("text"))
-      val hotCopies = base.filter(col("doc_id") === 0)
-        .select(explode(sequence(lit(0L), lit(29L))).as("i"), col("text"))
-        .select((col("i") + lit(50000L)).as("doc_id"), col("text"))
+      // Two-stage near-dup under the Zipf-head guard: only star pairs
+      // pay the levenshtein (linear, not 465 quadratic verifications),
+      // cold candidates verify byte-identically to
+      // dedup_minhash_verified, and leaf↔leaf verdicts inside the hot
+      // bucket come from cluster closure over verified hub edges.
       Dedup.minHashVerifiedPairsHubCapped(
-        base.unionByName(nearCopies).unionByName(rotations).unionByName(hotCopies),
-        minAgreement = 0.25, minEditSim = 0.9, maxBandSize = 10)
+        DedupOracle.withHotCopies(DedupOracle.salted(DedupOracle.slice(s, dir))),
+        minAgreement = DedupOracle.LooseFloor, minEditSim = DedupOracle.EditFloor,
+        maxBandSize = DedupOracle.HubCap)
         .withColumn("est_jaccard", round(col("est_jaccard"), 6))
         .orderBy("doc_a", "doc_b")
     }),
 
     "dedup_minhash_full" -> ((s, dir) => {
-      // UNCAPPED: the whole documents table (5,000 docs at sf0.1 — 25×
-      // the doc_id<200 slice the other dedup queries use to keep their
-      // oracle SQL tractable), so the oracle gate itself exercises the
-      // banded candidate join at corpus scale, not just the golden-count
-      // spec in DedupScaleSpec. Output stays small (near-dup pairs, not
-      // candidates), so the hash compare is cheap even though the input
-      // is the full corpus.
+      // UNCAPPED: the whole documents table (5,000 docs at sf0.1, 25× the
+      // slice), so the oracle gate exercises the banded candidate join at
+      // corpus scale; the output (near-dup pairs) stays small.
       Dedup.minHashLshPairsPortable(Tables.documents(s, dir))
         .withColumn("est_jaccard", round(col("est_jaccard"), 6))
         .orderBy("doc_a", "doc_b")
@@ -579,13 +527,14 @@ object SparkEntry {
     }),
 
     "dedup_incremental" -> ((s, dir) => {
-      // Daily-crawl shape: docs < 150 are the standing corpus, 150-299
-      // the new batch; each batch doc is admitted unless it near-dups
-      // the corpus or a lower-id batch sibling.
+      // Daily-crawl shape: a standing corpus and a new batch; each batch
+      // doc is admitted unless it near-dups the corpus or a lower-id
+      // batch sibling.
       val docs = Tables.documents(s, dir)
       Dedup.incrementalAdmit(
-        docs.filter(col("doc_id") < 150),
-        docs.filter(col("doc_id") >= 150 && col("doc_id") < 300))
+        docs.filter(col("doc_id") < DedupOracle.CorpusEnd),
+        docs.filter(col("doc_id") >= DedupOracle.CorpusEnd &&
+          col("doc_id") < DedupOracle.BatchEnd))
         .orderBy("doc_id")
     }),
 
@@ -625,13 +574,12 @@ object SparkEntry {
     }),
 
     "dedup_simhash" -> ((s, dir) => {
-      // maxHamming 2 of 31 bits: the synthetic docs share vocabulary so
-      // random pairs center at distance ~7; 2 keeps the output a
-      // discriminating near-dup set rather than most of the cross product.
-      // Banded form: 3-band pigeonhole makes it provably equal to the
-      // exact all-pairs result (which remains the oracle SQL), with an
-      // equi-join plan instead of the O(n²) theta self-join.
-      Dedup.simHashPairsBanded(Tables.documents(s, dir).filter(col("doc_id") < 200), maxHamming = 2)
+      // maxHamming 2 of 31 bits (random synthetic pairs center at ~7).
+      // The 3-band pigeonhole makes it provably equal to the exact
+      // all-pairs result (the oracle SQL), with an equi-join plan instead
+      // of the O(n²) theta self-join.
+      Dedup.simHashPairsBanded(DedupOracle.slice(s, dir),
+        maxHamming = DedupOracle.SimHashMaxHamming)
         .orderBy("doc_a", "doc_b")
     }),
 
@@ -746,12 +694,12 @@ object SparkEntry {
       // against the same exact-form oracle; PlanQualitySpec asserts the
       // nested-loop join is gone.
       GraftExtensions.register(s)
-      val hashed = Tables.documents(s, dir).filter(col("doc_id") < 200)
+      val hashed = DedupOracle.slice(s, dir)
         .select(col("doc_id"), TextAnalysis.simHashModUdf(col("text")).as("simhash"))
       val a = hashed.select(col("doc_id").as("doc_a"), col("simhash").as("sim_a"))
       val b = hashed.select(col("doc_id").as("doc_b"), col("simhash").as("sim_b"))
       a.join(b, col("doc_a") < col("doc_b") &&
-          TextAnalysis.hamming(col("sim_a"), col("sim_b")) <= 2)
+          TextAnalysis.hamming(col("sim_a"), col("sim_b")) <= DedupOracle.SimHashMaxHamming)
         .withColumn("hamming", TextAnalysis.hamming(col("sim_a"), col("sim_b")))
         .select("doc_a", "doc_b", "hamming")
         .orderBy("doc_a", "doc_b")
@@ -805,13 +753,7 @@ object SparkEntry {
       // any cosine is computed; candidate generation is hash-checked via
       // the signature-replicating oracle.
       val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val jit = emb.select(
-        (col("vec_id") + 1000000L).as("vec_id"),
-        transform(col("embedding"), (x, i) =>
-          (x.cast("double") +
-            when(pmod(i, lit(2)) === 0, lit(0.01)).otherwise(lit(-0.01)))
-            .cast("float")).as("embedding"))
-      Dedup.embeddingNearDupBucketed(emb.unionByName(jit), threshold = 0.95,
+      Dedup.embeddingNearDupBucketed(DedupOracle.withTwins(emb), threshold = 0.95,
         nBits = 28, bands = 4)
         .withColumn("cos_sim", round(col("cos_sim"), 6))
         .orderBy("id_a", "id_b")
@@ -826,13 +768,7 @@ object SparkEntry {
       // (lloydIter = 0) keep the cell assignment oracle-replicable; the
       // Lloyd-refined path is spec-checked (SemanticDedupSpec).
       val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      val jit = emb.select(
-        (col("vec_id") + 1000000L).as("vec_id"),
-        transform(col("embedding"), (x, i) =>
-          (x.cast("double") +
-            when(pmod(i, lit(2)) === 0, lit(0.01)).otherwise(lit(-0.01)))
-            .cast("float")).as("embedding"))
-      Dedup.semanticDedup(emb.unionByName(jit), nCells = 32, threshold = 0.95)
+      Dedup.semanticDedup(DedupOracle.withTwins(emb), nCells = 32, threshold = 0.95)
         .orderBy("vec_id")
     }),
 
@@ -2546,8 +2482,8 @@ object SparkEntry {
       val layout = operators.Ann.ivfPqLayout(s, emb, base, centroids, books)
       plans.AnnTopKRewrite.registerPq(embPath,
         plans.AnnTopKRewrite.RegisteredPqLayout(
-          // Operating point from the r17 sweep (AnnRuleSweep @sf0.1,
-          // k=11): ADC ordering on the isotropic fixture is weakly
+          // Operating point from the r17 sweep (the AnnRuleSweep main,
+          // now kept only in git history; @sf0.1, k=11): ADC ordering on the isotropic fixture is weakly
           // informative (m=8/kStar=16 on 64-dim near-random data), so
           // the over-fetch — the CHEAP stage: candidates only widen the
           // broadcast semi join — does the quality work. Measured
@@ -2597,8 +2533,9 @@ object SparkEntry {
       // codegen'd CASE over the cell partition column. Constants
       // (nProbe, overfetch, k, gate) shared with the AnnOracle mirror
       // and the Verify gate via plans.AnnRulePoints; the operating
-      // point is the r18 AnnRuleSweep measurement @sf0.1 (see
-      // AnnRulePoints' comment for the frontier).
+      // point is the r18 measurement @sf0.1 from the AnnRuleSweep main,
+      // now kept only in git history (see AnnRulePoints' comment for
+      // the frontier).
       GraftExtensions.register(s)
       val embPath = s"$dir/embeddings.parquet"
       val emb = Tables.embeddings(s, dir)
@@ -3736,11 +3673,8 @@ object SparkEntry {
        |FROM chunks0 c JOIN nrm n USING (chunk_id)
        |ORDER BY c.file_id, c.chunk_index""".stripMargin
 
-  // The optimizer-rule variant computes the identical exact result, so it
-  // shares dedup_simhash's oracle verbatim.
   def oracleSql: Map[String, String] =
     oracleMap +
-      ("dedup_simhash_auto" -> oracleMap("dedup_simhash")) +
       ("graph_pagerank" -> pageRankOracleSql) ++
       qualityModelOracleSql ++
       Map(
@@ -3760,7 +3694,9 @@ object SparkEntry {
       // LSH tier statically, the trained tiers under structures captured
       // from the registry queries' own memoized training runs. The Verify
       // recall/equality gates stay as the second, independent signal.
-      AnnOracle.sqlEntries
+      AnnOracle.sqlEntries ++
+      // Generated near-dup mirrors (see [[graft.DedupOracle]]).
+      DedupOracle.sqlEntries
 
   /** DuckDB mirrors of the unigram-tokenizer family under the trained
     * model ([[graft.UnigramOracle]]): the piece table as literals
@@ -3845,16 +3781,14 @@ object SparkEntry {
       val bias = w(nBuckets)
       "quality_model_score" ->
         s"""WITH tk AS (
-           |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\\p{L}\\p{N}]+'), x -> x <> '') AS toks
+           |  SELECT doc_id, ${DedupOracle.tokensSql("text")} AS toks
            |  FROM documents),
            |f0 AS (
            |  SELECT doc_id, unnest(list_concat(toks,
            |    [toks[i+1] || ' ' || toks[i+2] FOR i IN range(greatest(len(toks)-1, 0))])) AS term
            |  FROM tk),
            |fb AS (
-           |  SELECT doc_id, list_reduce(list_prepend(CAST(7 AS BIGINT),
-           |      list_transform(range(length(term)), i -> CAST(unicode(term[i+1]) AS BIGINT))),
-           |      (a, b) -> (31 * a + b) % 2147483647) % $nBuckets AS bucket
+           |  SELECT doc_id, ${DedupOracle.hashModSql("term")} % $nBuckets AS bucket
            |  FROM f0),
            |cnt AS (SELECT doc_id, bucket, CAST(count(*) AS BIGINT) AS c FROM fb GROUP BY 1, 2),
            |tot AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS t FROM cnt GROUP BY 1),
@@ -4091,7 +4025,7 @@ object SparkEntry {
     // t6_exact_dedup / text_fingerprint_mod / text_quality /
     // mix_temperature_sample / pack_sequences.
     "pretrain_corpus_pipeline" ->
-      """WITH d0 AS (
+      raw"""WITH d0 AS (
         |  SELECT doc_id, text, lang FROM documents
         |  UNION ALL SELECT doc_id + 10000, text, lang FROM documents WHERE doc_id < 50
         |  UNION ALL SELECT doc_id + 20000, upper(text), lang FROM documents WHERE doc_id < 30),
@@ -4105,10 +4039,7 @@ object SparkEntry {
         |    trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t FROM ex),
         |nf AS (
         |  SELECT doc_id, text, lang,
-        |    list_reduce(
-        |      list_prepend(CAST(7 AS BIGINT),
-        |        list_transform(range(length(t)), i -> CAST(unicode(t[i+1]) AS BIGINT))),
-        |      (a, b) -> (31 * a + b) % 2147483647) AS fp
+        |    ${DedupOracle.hashModSql("t")} AS fp
         |  FROM nf0),
         |nd AS (
         |  SELECT doc_id, text, lang FROM (
@@ -4531,55 +4462,13 @@ object SparkEntry {
         |               CAST(inter AS DOUBLE) / CAST(sb.n AS DOUBLE)) >= 0.8
         |ORDER BY doc_a, doc_b""".stripMargin,
 
-    // Step-for-step mirror of the registered query: jittered-twin union
-    // (±0.01 alternating per component, double-add then REAL cast ==
-    // Spark's cast chain), then embeddingNearDupBucketed(nBits=28,
-    // bands=4) — squared-Lehmer hyperplane components over index b*1024+i
-    // mapped to [-1,1), left-fold dot product (list_reduce == the Scala
-    // while-loop accumulation order), sign bit -> 28-bit signature, 4
-    // seven-bit band keys, band equi-join for candidates, exact cosine
-    // recheck. Candidate generation itself is oracle-checked, like
-    // dedup_minhash_lsh.
+    // Step-for-step mirror of the registered query: the jittered-twin
+    // union, then embeddingNearDupBucketed(nBits=28, bands=4) with its
+    // candidate generation oracle-checked.
     "dedup_embedding_cosine" ->
-      """WITH u AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 1000000 AS vec_id,
-        |    list_transform(range(64), i ->
-        |      CAST(CAST(embedding[CAST(i+1 AS INT)] AS DOUBLE) +
-        |        CASE WHEN i % 2 = 0 THEN 0.01 ELSE -0.01 END AS REAL)) AS embedding
-        |  FROM embeddings),
-        |s AS (
-        |  SELECT vec_id, embedding,
-        |    CAST(list_sum(list_transform(range(28), b ->
-        |      CASE WHEN list_reduce(list_prepend(0.0, list_transform(range(64), i ->
-        |          CAST(embedding[CAST(i+1 AS INT)] AS DOUBLE) *
-        |          (((((48271*(b*1024+i)+16807) % 2147483647) * ((48271*(b*1024+i)+16807) % 2147483647)) % 2147483647) * 2.0 / 2147483647 - 1))),
-        |        (x, y) -> x + y) >= 0
-        |      THEN CAST(1 AS BIGINT) << CAST(b AS INT) ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS sig
-        |  FROM u),
-        |bd AS (
-        |  SELECT vec_id, embedding, unnest(list_transform(range(4), k ->
-        |    CAST(k AS VARCHAR) || '_' || CAST((sig >> CAST(7*k AS INT)) & 127 AS VARCHAR))) AS band
-        |  FROM s),
-        |cand AS (
-        |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    a.embedding AS emb_a, b.embedding AS emb_b
-        |  FROM bd a JOIN bd b ON a.band = b.band AND a.vec_id < b.vec_id),
-        |p AS (
-        |  SELECT id_a, id_b,
-        |    list_reduce(list_prepend(0.0,
-        |      list_transform(range(64),
-        |        i -> CAST(emb_a[i+1] AS DOUBLE) * CAST(emb_b[i+1] AS DOUBLE))),
-        |      (x, y) -> x + y)
-        |    / (sqrt(list_reduce(list_prepend(0.0,
-        |         list_transform(emb_a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (x,y) -> x+y))
-        |     * sqrt(list_reduce(list_prepend(0.0,
-        |         list_transform(emb_b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (x,y) -> x+y)))
-        |    AS cos_sim
-        |  FROM cand)
-        |SELECT id_a, id_b, round(cos_sim, 6) AS cos_sim FROM p
-        |WHERE cos_sim >= 0.95 ORDER BY id_a, id_b""".stripMargin,
+      s"""WITH u AS (
+        |  ${DedupOracle.twinsSql}),
+        |${DedupOracle.embeddingNearDupSql("u", dim = 64, nBits = 28, bands = 4, threshold = 0.95)}""".stripMargin,
 
     // SemDeDup mirror: same jittered-twin union as dedup_embedding_cosine,
     // centroids = embeddings of the 32 smallest vec_ids (cell = seed
@@ -4587,29 +4476,15 @@ object SparkEntry {
     // row_number sort mirrors assignCells' strict `>` update), dropped =
     // has a >=0.95 neighbor with smaller id in the same cell.
     "dedup_semantic" ->
-      """WITH u AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 1000000 AS vec_id,
-        |    list_transform(range(64), i ->
-        |      CAST(CAST(embedding[CAST(i+1 AS INT)] AS DOUBLE) +
-        |        CASE WHEN i % 2 = 0 THEN 0.01 ELSE -0.01 END AS REAL)) AS embedding
-        |  FROM embeddings),
+      s"""WITH u AS (
+        |  ${DedupOracle.twinsSql}),
         |sd AS (
         |  SELECT embedding AS cent, CAST(rn - 1 AS INT) AS cell FROM (
         |    SELECT embedding, row_number() OVER (ORDER BY vec_id) AS rn FROM u) t
         |  WHERE rn <= 32),
         |asg AS (
         |  SELECT u.vec_id, u.embedding, sd.cell,
-        |    list_reduce(list_prepend(0.0,
-        |      list_transform(range(64),
-        |        i -> CAST(u.embedding[i+1] AS DOUBLE) * CAST(sd.cent[i+1] AS DOUBLE))),
-        |      (x, y) -> x + y)
-        |    / (sqrt(list_reduce(list_prepend(0.0,
-        |         list_transform(u.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (x,y) -> x+y))
-        |     * sqrt(list_reduce(list_prepend(0.0,
-        |         list_transform(sd.cent, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (x,y) -> x+y)))
-        |    AS sim
+        |    ${DedupOracle.cosineSql("u.embedding", "sd.cent", 64)} AS sim
         |  FROM u CROSS JOIN sd),
         |best AS (
         |  SELECT vec_id, embedding, cell FROM (
@@ -4619,15 +4494,7 @@ object SparkEntry {
         |dup AS (
         |  SELECT DISTINCT b.vec_id FROM best a JOIN best b
         |    ON a.cell = b.cell AND a.vec_id < b.vec_id
-        |  WHERE list_reduce(list_prepend(0.0,
-        |      list_transform(range(64),
-        |        i -> CAST(a.embedding[i+1] AS DOUBLE) * CAST(b.embedding[i+1] AS DOUBLE))),
-        |      (x, y) -> x + y)
-        |    / (sqrt(list_reduce(list_prepend(0.0,
-        |         list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (x,y) -> x+y))
-        |     * sqrt(list_reduce(list_prepend(0.0,
-        |         list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (x,y) -> x+y)))
-        |    >= 0.95)
+        |  WHERE ${DedupOracle.cosineSql("a.embedding", "b.embedding", 64)} >= 0.95)
         |SELECT best.vec_id, best.cell, (dup.vec_id IS NULL) AS kept
         |FROM best LEFT JOIN dup ON best.vec_id = dup.vec_id
         |ORDER BY best.vec_id""".stripMargin,
@@ -5119,17 +4986,15 @@ object SparkEntry {
     // 65536 at every test SF, so knuthHash32(doc_id+seed) reduces to
     // ((doc_id+seed)*2654435761) % 2^32 exactly as in sample_weighted.
     "dsir_weights" ->
-      """WITH tk AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), x -> x <> '') AS toks
+      s"""WITH tk AS (
+        |  SELECT doc_id, ${DedupOracle.tokensSql("text")} AS toks
         |  FROM documents),
         |f0 AS (
         |  SELECT doc_id, unnest(list_concat(toks,
         |    [toks[i+1] || ' ' || toks[i+2] FOR i IN range(greatest(len(toks)-1, 0))])) AS term
         |  FROM tk),
         |fb AS (
-        |  SELECT doc_id, list_reduce(list_prepend(CAST(7 AS BIGINT),
-        |      list_transform(range(length(term)), i -> CAST(unicode(term[i+1]) AS BIGINT))),
-        |      (a, b) -> (31 * a + b) % 2147483647) % 1024 AS bucket
+        |  SELECT doc_id, ${DedupOracle.hashModSql("term")} % 1024 AS bucket
         |  FROM f0),
         |tcnt AS (
         |  SELECT bucket, CAST(count(*) AS BIGINT) AS ct
@@ -5151,17 +5016,15 @@ object SparkEntry {
         |ORDER BY top.logw DESC, top.doc_id""".stripMargin,
 
     "dsir_select" ->
-      """WITH tk AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), x -> x <> '') AS toks
+      s"""WITH tk AS (
+        |  SELECT doc_id, ${DedupOracle.tokensSql("text")} AS toks
         |  FROM documents),
         |f0 AS (
         |  SELECT doc_id, unnest(list_concat(toks,
         |    [toks[i+1] || ' ' || toks[i+2] FOR i IN range(greatest(len(toks)-1, 0))])) AS term
         |  FROM tk),
         |fb AS (
-        |  SELECT doc_id, list_reduce(list_prepend(CAST(7 AS BIGINT),
-        |      list_transform(range(length(term)), i -> CAST(unicode(term[i+1]) AS BIGINT))),
-        |      (a, b) -> (31 * a + b) % 2147483647) % 1024 AS bucket
+        |  SELECT doc_id, ${DedupOracle.hashModSql("term")} % 1024 AS bucket
         |  FROM f0),
         |tcnt AS (
         |  SELECT bucket, CAST(count(*) AS BIGINT) AS ct
@@ -5234,14 +5097,10 @@ object SparkEntry {
         |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
     "text_fingerprint_mod" ->
-      """WITH n AS (
+      raw"""WITH n AS (
         |  SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
         |  FROM documents)
-        |SELECT doc_id,
-        |  list_reduce(
-        |    list_prepend(CAST(7 AS BIGINT),
-        |      list_transform(range(length(t)), i -> CAST(unicode(t[i+1]) AS BIGINT))),
-        |    (a, b) -> (31 * a + b) % 2147483647) AS fp
+        |SELECT doc_id, ${DedupOracle.hashModSql("t")} AS fp
         |FROM n ORDER BY doc_id""".stripMargin,
 
     "text_redact_pii" ->
@@ -5847,316 +5706,6 @@ object SparkEntry {
         |            THEN h - CAST('18446744073709551616' AS HUGEINT) ELSE h END AS BIGINT) AS fingerprint
         |FROM u ORDER BY doc_id""".stripMargin,
 
-    // Portable MinHash (16 perms, 4 bands of 4): the banding is part of the
-    // semantics, so the oracle reproduces candidate generation too — pairs
-    // sharing at least one band, kept when signature agreement >= 0.5.
-    "dedup_minhash_lsh" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), x -> x <> '') AS toks
-        |  FROM documents WHERE doc_id < 200),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
-        |         WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |         ELSE list_transform(range(len(toks) - 2),
-        |           i -> toks[CAST(i+1 AS INT)] || ' ' || toks[CAST(i+2 AS INT)] || ' ' || toks[CAST(i+3 AS INT)]) END AS shingles
-        |  FROM t),
-        |hs AS (
-        |  SELECT doc_id,
-        |    list_transform(shingles, s ->
-        |      list_reduce(
-        |        list_prepend(CAST(7 AS BIGINT),
-        |          list_transform(range(length(s)), i -> CAST(unicode(s[CAST(i+1 AS INT)]) AS BIGINT))),
-        |        (a, b) -> (31 * a + b) % 2147483647)) AS hashes
-        |  FROM sh),
-        |sg AS (
-        |  SELECT doc_id,
-        |    list_transform(range(16), k -> coalesce(
-        |      list_min(list_transform(hashes,
-        |        h -> ((48271 * (k + 1)) % 2147483647 * h + (16807 * (k + 1) + 11) % 2147483647) % 2147483647)),
-        |      2147483647)) AS sig
-        |  FROM hs),
-        |bd AS (
-        |  SELECT doc_id, sig, unnest(range(4)) AS b FROM sg),
-        |bd2 AS (
-        |  SELECT doc_id, sig, b, sig[CAST(4*b+1 AS INT):CAST(4*b+4 AS INT)] AS band FROM bd),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, a.sig AS sig_a, b.sig AS sig_b
-        |  FROM bd2 a JOIN bd2 b ON a.b = b.b AND a.band = b.band AND a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b,
-        |  round(CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0, 6) AS est_jaccard
-        |FROM cand
-        |WHERE CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0 >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // The SimHash hub-cap mirror: the dedup_simhash portable-fingerprint
-    // chain over the salted input, bands cut at bit offsets 0/10/20
-    // (widths 10/10/11 — b*31/3 like the operator), then the shared
-    // bucket-size -> hot-set -> hub-attach -> star-emission replay.
-    "dedup_simhash_hubcap" ->
-      """WITH input AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id < 200
-        |  UNION ALL
-        |  SELECT 50000 + i AS doc_id,
-        |    (SELECT text FROM documents WHERE doc_id = 0) AS text
-        |  FROM range(30) t0(i)),
-        |t AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), x -> x <> '') AS toks
-        |  FROM input),
-        |f AS (
-        |  SELECT doc_id, list_concat(toks,
-        |    CASE WHEN len(toks) > 1 THEN list_transform(range(len(toks) - 1),
-        |      i -> toks[CAST(i+1 AS INT)] || '_' || toks[CAST(i+2 AS INT)]) ELSE CAST([] AS VARCHAR[]) END) AS feats
-        |  FROM t),
-        |hs AS (
-        |  SELECT doc_id,
-        |    list_transform(feats, s ->
-        |      list_reduce(
-        |        list_prepend(CAST(7 AS BIGINT),
-        |          list_transform(range(length(s)), i -> CAST(unicode(s[CAST(i+1 AS INT)]) AS BIGINT))),
-        |        (a, b) -> (31 * a + b) % 2147483647)) AS hashes
-        |  FROM f),
-        |sm AS (
-        |  SELECT doc_id,
-        |    coalesce(list_sum(list_transform(range(31), b ->
-        |      CASE WHEN coalesce(list_sum(list_transform(hashes,
-        |             h -> ((h >> CAST(b AS INT)) & 1) * 2 - 1)), 0) > 0
-        |           THEN (CAST(1 AS BIGINT) << CAST(b AS INT)) ELSE 0 END)), 0) AS simhash
-        |  FROM hs),
-        |bd AS (
-        |  SELECT doc_id, simhash, b,
-        |    CASE b WHEN 0 THEN (simhash >> 0) & 1023
-        |           WHEN 1 THEN (simhash >> 10) & 1023
-        |           ELSE (simhash >> 20) & 2047 END AS band
-        |  FROM sm, unnest(range(3)) AS t2(b)),
-        |bsz AS (
-        |  SELECT b, band, count(*) AS n, min(doc_id) AS hub FROM bd GROUP BY 1, 2),
-        |hot AS (SELECT b, band, hub FROM bsz WHERE n > 10),
-        |hubsig AS (
-        |  SELECT h.b, h.band, h.hub, d.simhash AS hub_sim
-        |  FROM hot h JOIN bd d ON d.b = h.b AND d.band = h.band AND d.doc_id = h.hub),
-        |cold AS (
-        |  SELECT d.doc_id, d.simhash, d.b, d.band FROM bd d
-        |  ANTI JOIN hot h ON d.b = h.b AND d.band = h.band),
-        |cand AS (
-        |  SELECT DISTINCT doc_a, doc_b, sim_a, sim_b FROM (
-        |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.simhash AS sim_a, b.simhash AS sim_b
-        |    FROM cold a JOIN cold b ON a.b = b.b AND a.band = b.band AND a.doc_id < b.doc_id
-        |    UNION ALL
-        |    SELECT h.hub AS doc_a, d.doc_id AS doc_b, h.hub_sim AS sim_a, d.simhash AS sim_b
-        |    FROM bd d JOIN hubsig h ON d.b = h.b AND d.band = h.band
-        |    WHERE d.doc_id <> h.hub))
-        |SELECT doc_a, doc_b, CAST(bit_count(xor(sim_a, sim_b)) AS INT) AS hamming
-        |FROM cand
-        |WHERE bit_count(xor(sim_a, sim_b)) <= 2
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // The hub-capped chain: same portable signature/banding mirror, then
-    // bucket sizes, the >cap hot set, the min-id hub with its signature,
-    // anti-joined cold pairwise candidates, and star emission for hot
-    // buckets — replaying Dedup.minHashLshPairsHubCapped decision for
-    // decision on the 30-planted-copy fixture.
-    "dedup_minhash_hubcap" ->
-      """WITH input AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id < 200
-        |  UNION ALL
-        |  SELECT 50000 + i AS doc_id,
-        |    (SELECT text FROM documents WHERE doc_id = 0) AS text
-        |  FROM range(30) t(i)),
-        |t AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), x -> x <> '') AS toks
-        |  FROM input),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
-        |         WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |         ELSE list_transform(range(len(toks) - 2),
-        |           i -> toks[CAST(i+1 AS INT)] || ' ' || toks[CAST(i+2 AS INT)] || ' ' || toks[CAST(i+3 AS INT)]) END AS shingles
-        |  FROM t),
-        |hs AS (
-        |  SELECT doc_id,
-        |    list_transform(shingles, s ->
-        |      list_reduce(
-        |        list_prepend(CAST(7 AS BIGINT),
-        |          list_transform(range(length(s)), i -> CAST(unicode(s[CAST(i+1 AS INT)]) AS BIGINT))),
-        |        (a, b) -> (31 * a + b) % 2147483647)) AS hashes
-        |  FROM sh),
-        |sg AS (
-        |  SELECT doc_id,
-        |    list_transform(range(16), k -> coalesce(
-        |      list_min(list_transform(hashes,
-        |        h -> ((48271 * (k + 1)) % 2147483647 * h + (16807 * (k + 1) + 11) % 2147483647) % 2147483647)),
-        |      2147483647)) AS sig
-        |  FROM hs),
-        |bd AS (
-        |  SELECT doc_id, sig, unnest(range(4)) AS b FROM sg),
-        |bd2 AS (
-        |  SELECT doc_id, sig, b, sig[CAST(4*b+1 AS INT):CAST(4*b+4 AS INT)] AS band FROM bd),
-        |bsz AS (
-        |  SELECT b, band, count(*) AS n, min(doc_id) AS hub FROM bd2 GROUP BY b, band),
-        |hot AS (SELECT b, band, hub FROM bsz WHERE n > 10),
-        |hubsig AS (
-        |  SELECT h.b, h.band, h.hub, d.sig AS hub_sig
-        |  FROM hot h JOIN bd2 d ON d.b = h.b AND d.band = h.band AND d.doc_id = h.hub),
-        |cold AS (
-        |  SELECT d.doc_id, d.sig, d.b, d.band FROM bd2 d
-        |  ANTI JOIN hot h ON d.b = h.b AND d.band = h.band),
-        |cand AS (
-        |  SELECT DISTINCT doc_a, doc_b, sig_a, sig_b FROM (
-        |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.sig AS sig_a, b.sig AS sig_b
-        |    FROM cold a JOIN cold b ON a.b = b.b AND a.band = b.band AND a.doc_id < b.doc_id
-        |    UNION ALL
-        |    SELECT h.hub AS doc_a, d.doc_id AS doc_b, h.hub_sig AS sig_a, d.sig AS sig_b
-        |    FROM bd2 d JOIN hubsig h ON d.b = h.b AND d.band = h.band
-        |    WHERE d.doc_id <> h.hub))
-        |SELECT doc_a, doc_b,
-        |  round(CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0, 6) AS est_jaccard
-        |FROM cand
-        |WHERE CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0 >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // Two-stage near-dup: the same portable-MinHash chain at the LOOSE
-    // 0.25 agreement floor over the salted input (suffix near-copies +
-    // 100-char rotations), then the edit-distance verify — DuckDB's
-    // levenshtein mirrors Spark's builtin, and edit_sim replays
-    // floorScale (floor(x*1e6)/1e6) so the float hashes bit-match.
-    "dedup_minhash_verified" ->
-      """WITH input AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id < 200
-        |  UNION ALL
-        |  SELECT doc_id + 30000, text || ' graft salt' FROM documents WHERE doc_id < 40
-        |  UNION ALL
-        |  SELECT doc_id + 40000, substr(text, 101) || ' ' || substr(text, 1, 100)
-        |  FROM documents WHERE doc_id < 40),
-        |t AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), x -> x <> '') AS toks
-        |  FROM input),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
-        |         WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |         ELSE list_transform(range(len(toks) - 2),
-        |           i -> toks[CAST(i+1 AS INT)] || ' ' || toks[CAST(i+2 AS INT)] || ' ' || toks[CAST(i+3 AS INT)]) END AS shingles
-        |  FROM t),
-        |hs AS (
-        |  SELECT doc_id,
-        |    list_transform(shingles, s ->
-        |      list_reduce(
-        |        list_prepend(CAST(7 AS BIGINT),
-        |          list_transform(range(length(s)), i -> CAST(unicode(s[CAST(i+1 AS INT)]) AS BIGINT))),
-        |        (a, b) -> (31 * a + b) % 2147483647)) AS hashes
-        |  FROM sh),
-        |sg AS (
-        |  SELECT doc_id,
-        |    list_transform(range(16), k -> coalesce(
-        |      list_min(list_transform(hashes,
-        |        h -> ((48271 * (k + 1)) % 2147483647 * h + (16807 * (k + 1) + 11) % 2147483647) % 2147483647)),
-        |      2147483647)) AS sig
-        |  FROM hs),
-        |bd AS (
-        |  SELECT doc_id, sig, unnest(range(4)) AS b FROM sg),
-        |bd2 AS (
-        |  SELECT doc_id, sig, b, sig[CAST(4*b+1 AS INT):CAST(4*b+4 AS INT)] AS band FROM bd),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, a.sig AS sig_a, b.sig AS sig_b
-        |  FROM bd2 a JOIN bd2 b ON a.b = b.b AND a.band = b.band AND a.doc_id < b.doc_id),
-        |agreed AS (
-        |  SELECT doc_a, doc_b,
-        |    CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0 AS est_jaccard
-        |  FROM cand
-        |  WHERE CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0 >= 0.25),
-        |scored AS (
-        |  SELECT g.doc_a, g.doc_b, g.est_jaccard,
-        |    floor((CASE WHEN greatest(length(ta.text), length(tb.text)) = 0 THEN 1.0
-        |           ELSE 1.0 - CAST(levenshtein(ta.text, tb.text) AS DOUBLE) /
-        |                CAST(greatest(length(ta.text), length(tb.text)) AS DOUBLE) END) * 1000000.0) / 1000000.0 AS edit_sim
-        |  FROM agreed g
-        |  JOIN input ta ON ta.doc_id = g.doc_a
-        |  JOIN input tb ON tb.doc_id = g.doc_b)
-        |SELECT doc_a, doc_b, round(est_jaccard, 6) AS est_jaccard, edit_sim,
-        |  (edit_sim >= 0.9) AS verified
-        |FROM scored ORDER BY doc_a, doc_b""".stripMargin,
-
-    // Hub-capped two-stage near-dup: the dedup_minhash_hubcap decision
-    // chain (bucket sizes -> hot set -> hub attach -> star emission ->
-    // cold all-pairs) at the LOOSE 0.25 floor over the verified
-    // fixture + 30 hot copies, then the dedup_minhash_verified edit
-    // tail (levenshtein + floorScale) over the capped candidate set.
-    "dedup_minhash_verified_hubcap" ->
-      """WITH input AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id < 200
-        |  UNION ALL
-        |  SELECT doc_id + 30000, text || ' graft salt' FROM documents WHERE doc_id < 40
-        |  UNION ALL
-        |  SELECT doc_id + 40000, substr(text, 101) || ' ' || substr(text, 1, 100)
-        |  FROM documents WHERE doc_id < 40
-        |  UNION ALL
-        |  SELECT 50000 + i AS doc_id,
-        |    (SELECT text FROM documents WHERE doc_id = 0) AS text
-        |  FROM range(30) t(i)),
-        |t AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), x -> x <> '') AS toks
-        |  FROM input),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
-        |         WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |         ELSE list_transform(range(len(toks) - 2),
-        |           i -> toks[CAST(i+1 AS INT)] || ' ' || toks[CAST(i+2 AS INT)] || ' ' || toks[CAST(i+3 AS INT)]) END AS shingles
-        |  FROM t),
-        |hs AS (
-        |  SELECT doc_id,
-        |    list_transform(shingles, s ->
-        |      list_reduce(
-        |        list_prepend(CAST(7 AS BIGINT),
-        |          list_transform(range(length(s)), i -> CAST(unicode(s[CAST(i+1 AS INT)]) AS BIGINT))),
-        |        (a, b) -> (31 * a + b) % 2147483647)) AS hashes
-        |  FROM sh),
-        |sg AS (
-        |  SELECT doc_id,
-        |    list_transform(range(16), k -> coalesce(
-        |      list_min(list_transform(hashes,
-        |        h -> ((48271 * (k + 1)) % 2147483647 * h + (16807 * (k + 1) + 11) % 2147483647) % 2147483647)),
-        |      2147483647)) AS sig
-        |  FROM hs),
-        |bd AS (
-        |  SELECT doc_id, sig, unnest(range(4)) AS b FROM sg),
-        |bd2 AS (
-        |  SELECT doc_id, sig, b, sig[CAST(4*b+1 AS INT):CAST(4*b+4 AS INT)] AS band FROM bd),
-        |bsz AS (
-        |  SELECT b, band, count(*) AS n, min(doc_id) AS hub FROM bd2 GROUP BY b, band),
-        |hot AS (SELECT b, band, hub FROM bsz WHERE n > 10),
-        |hubsig AS (
-        |  SELECT h.b, h.band, h.hub, d.sig AS hub_sig
-        |  FROM hot h JOIN bd2 d ON d.b = h.b AND d.band = h.band AND d.doc_id = h.hub),
-        |cold AS (
-        |  SELECT d.doc_id, d.sig, d.b, d.band FROM bd2 d
-        |  ANTI JOIN hot h ON d.b = h.b AND d.band = h.band),
-        |cand AS (
-        |  SELECT DISTINCT doc_a, doc_b, sig_a, sig_b FROM (
-        |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.sig AS sig_a, b.sig AS sig_b
-        |    FROM cold a JOIN cold b ON a.b = b.b AND a.band = b.band AND a.doc_id < b.doc_id
-        |    UNION ALL
-        |    SELECT h.hub AS doc_a, d.doc_id AS doc_b, h.hub_sig AS sig_a, d.sig AS sig_b
-        |    FROM bd2 d JOIN hubsig h ON d.b = h.b AND d.band = h.band
-        |    WHERE d.doc_id <> h.hub)),
-        |agreed AS (
-        |  SELECT doc_a, doc_b,
-        |    CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0 AS est_jaccard
-        |  FROM cand
-        |  WHERE CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0 >= 0.25),
-        |scored AS (
-        |  SELECT g.doc_a, g.doc_b, g.est_jaccard,
-        |    floor((CASE WHEN greatest(length(ta.text), length(tb.text)) = 0 THEN 1.0
-        |           ELSE 1.0 - CAST(levenshtein(ta.text, tb.text) AS DOUBLE) /
-        |                CAST(greatest(length(ta.text), length(tb.text)) AS DOUBLE) END) * 1000000.0) / 1000000.0 AS edit_sim
-        |  FROM agreed g
-        |  JOIN input ta ON ta.doc_id = g.doc_a
-        |  JOIN input tb ON tb.doc_id = g.doc_b)
-        |SELECT doc_a, doc_b, round(est_jaccard, 6) AS est_jaccard, edit_sim,
-        |  (edit_sim >= 0.9) AS verified
-        |FROM scored ORDER BY doc_a, doc_b""".stripMargin,
-
     // Line ranks mirror the Spark window exactly (partition by line,
     // order by doc_id then position); reassembly via ORDER BY inside
     // string_agg; an all-boilerplate doc yields '' on both engines.
@@ -6292,51 +5841,8 @@ object SparkEntry {
         |FROM tk LEFT JOIN cov ON tk.doc_id = cov.doc_id AND tk.tok_idx = cov.tok_idx
         |GROUP BY tk.doc_id ORDER BY tk.doc_id""".stripMargin,
 
-    // dedup_minhash_lsh without the doc_id cap: the identical portable
-    // shingle→minhash→band chain over the ENTIRE documents table.
-    "dedup_minhash_full" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
-        |         WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |         ELSE list_transform(range(len(toks) - 2),
-        |           i -> toks[CAST(i+1 AS INT)] || ' ' || toks[CAST(i+2 AS INT)] || ' ' || toks[CAST(i+3 AS INT)]) END AS shingles
-        |  FROM t),
-        |hs AS (
-        |  SELECT doc_id,
-        |    list_transform(shingles, s ->
-        |      list_reduce(
-        |        list_prepend(CAST(7 AS BIGINT),
-        |          list_transform(range(length(s)), i -> CAST(unicode(s[CAST(i+1 AS INT)]) AS BIGINT))),
-        |        (a, b) -> (31 * a + b) % 2147483647)) AS hashes
-        |  FROM sh),
-        |sg AS (
-        |  SELECT doc_id,
-        |    list_transform(range(16), k -> coalesce(
-        |      list_min(list_transform(hashes,
-        |        h -> ((48271 * (k + 1)) % 2147483647 * h + (16807 * (k + 1) + 11) % 2147483647) % 2147483647)),
-        |      2147483647)) AS sig
-        |  FROM hs),
-        |bd AS (
-        |  SELECT doc_id, sig, unnest(range(4)) AS b FROM sg),
-        |bd2 AS (
-        |  SELECT doc_id, sig, b, sig[CAST(4*b+1 AS INT):CAST(4*b+4 AS INT)] AS band FROM bd),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, a.sig AS sig_a, b.sig AS sig_b
-        |  FROM bd2 a JOIN bd2 b ON a.b = b.b AND a.band = b.band AND a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b,
-        |  round(CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0, 6) AS est_jaccard
-        |FROM cand
-        |WHERE CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0 >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // Same portable MinHash signature machinery as dedup_minhash_lsh,
-    // split into a standing corpus (doc_id < 150) and a new batch
-    // (150-299): a batch doc is blocked by its smallest >=0.5-estimated-
-    // Jaccard match among corpus docs and lower-id batch siblings.
+    // Exact NOT EXISTS anti-join: the Bloom-gated operator must equal it
+    // row for row.
     "dedup_bloom_gate" ->
       """SELECT b.l_orderkey, b.l_linenumber, b.l_partkey, b.l_suppkey
         |FROM lineitem b
@@ -6347,86 +5853,6 @@ object SparkEntry {
         |    WHERE h.l_shipdate < TIMESTAMP '1997-01-01'
         |      AND h.l_partkey = b.l_partkey AND h.l_suppkey = b.l_suppkey)
         |ORDER BY b.l_orderkey, b.l_linenumber, b.l_partkey, b.l_suppkey""".stripMargin,
-
-    "dedup_incremental" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), x -> x <> '') AS toks
-        |  FROM documents WHERE doc_id < 300),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
-        |         WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |         ELSE list_transform(range(len(toks) - 2),
-        |           i -> toks[CAST(i+1 AS INT)] || ' ' || toks[CAST(i+2 AS INT)] || ' ' || toks[CAST(i+3 AS INT)]) END AS shingles
-        |  FROM t),
-        |hs AS (
-        |  SELECT doc_id,
-        |    list_transform(shingles, s ->
-        |      list_reduce(
-        |        list_prepend(CAST(7 AS BIGINT),
-        |          list_transform(range(length(s)), i -> CAST(unicode(s[CAST(i+1 AS INT)]) AS BIGINT))),
-        |        (a, b) -> (31 * a + b) % 2147483647)) AS hashes
-        |  FROM sh),
-        |sg AS (
-        |  SELECT doc_id,
-        |    list_transform(range(16), k -> coalesce(
-        |      list_min(list_transform(hashes,
-        |        h -> ((48271 * (k + 1)) % 2147483647 * h + (16807 * (k + 1) + 11) % 2147483647) % 2147483647)),
-        |      2147483647)) AS sig
-        |  FROM hs),
-        |bd AS (
-        |  SELECT doc_id, sig, unnest(range(4)) AS b FROM sg),
-        |bd2 AS (
-        |  SELECT doc_id, sig, b, sig[CAST(4*b+1 AS INT):CAST(4*b+4 AS INT)] AS band FROM bd),
-        |corp AS (SELECT * FROM bd2 WHERE doc_id < 150),
-        |batch AS (SELECT * FROM bd2 WHERE doc_id >= 150),
-        |cand AS (
-        |  SELECT DISTINCT n.doc_id AS doc_id, o.doc_id AS blocker, n.sig AS sig_a, o.sig AS sig_b
-        |  FROM batch n JOIN corp o ON n.b = o.b AND n.band = o.band
-        |  UNION
-        |  SELECT DISTINCT b2.doc_id AS doc_id, a.doc_id AS blocker, b2.sig AS sig_a, a.sig AS sig_b
-        |  FROM batch a JOIN batch b2 ON a.b = b2.b AND a.band = b2.band AND a.doc_id < b2.doc_id),
-        |blk AS (
-        |  SELECT doc_id, min(blocker) AS blocked_by FROM cand
-        |  WHERE CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0 >= 0.5
-        |  GROUP BY doc_id)
-        |SELECT d.doc_id, blk.blocked_by IS NULL AS admitted,
-        |  CAST(coalesce(blk.blocked_by, -1) AS BIGINT) AS blocked_by
-        |FROM (SELECT doc_id FROM documents WHERE doc_id >= 150 AND doc_id < 300) d
-        |LEFT JOIN blk USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // Portable 31-bit SimHash, exact all-pairs form (doc_id < 200 keeps the
-    // quadratic join bounded; the banded form is the scale path).
-    "dedup_simhash" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), x -> x <> '') AS toks
-        |  FROM documents WHERE doc_id < 200),
-        |f AS (
-        |  SELECT doc_id, list_concat(toks,
-        |    CASE WHEN len(toks) > 1 THEN list_transform(range(len(toks) - 1),
-        |      i -> toks[CAST(i+1 AS INT)] || '_' || toks[CAST(i+2 AS INT)]) ELSE CAST([] AS VARCHAR[]) END) AS feats
-        |  FROM t),
-        |hs AS (
-        |  SELECT doc_id,
-        |    list_transform(feats, s ->
-        |      list_reduce(
-        |        list_prepend(CAST(7 AS BIGINT),
-        |          list_transform(range(length(s)), i -> CAST(unicode(s[CAST(i+1 AS INT)]) AS BIGINT))),
-        |        (a, b) -> (31 * a + b) % 2147483647)) AS hashes
-        |  FROM f),
-        |sm AS (
-        |  SELECT doc_id,
-        |    coalesce(list_sum(list_transform(range(31), b ->
-        |      CASE WHEN coalesce(list_sum(list_transform(hashes,
-        |             h -> ((h >> CAST(b AS INT)) & 1) * 2 - 1)), 0) > 0
-        |           THEN (CAST(1 AS BIGINT) << CAST(b AS INT)) ELSE 0 END)), 0) AS simhash
-        |  FROM hs)
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |  CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-        |FROM sm a JOIN sm b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.simhash, b.simhash)) <= 2
-        |ORDER BY doc_a, doc_b""".stripMargin,
 
     // Shard-parallel contiguous packing: running token sum per shard in
     // doc_id order, bin = floor(cum_before / budget).
@@ -6649,7 +6075,7 @@ object SparkEntry {
     // dedup_embedding_cosine (nBits=16, bands=4 wide bands for the 0.98
     // near-dup threshold) -> exact cosine recheck.
     "multimodal_near_dup" ->
-      """WITH h AS (
+      s"""WITH h AS (
         |  SELECT doc_id, hex(encode(text)) AS hx, octet_length(encode(text)) AS nb
         |  FROM documents WHERE doc_id < 200),
         |b AS (
@@ -6669,37 +6095,7 @@ object SparkEntry {
         |        CAST(len(list_filter(bytes, v -> v % 16 = j)) AS BIGINT)
         |        * CAST(len(list_filter(bytes, v -> v % 16 = j)) AS BIGINT))) AS nrm2
         |    FROM b)),
-        |s AS (
-        |  SELECT vec_id, embedding,
-        |    CAST(list_sum(list_transform(range(16), b ->
-        |      CASE WHEN list_reduce(list_prepend(0.0, list_transform(range(16), i ->
-        |          CAST(embedding[CAST(i+1 AS INT)] AS DOUBLE) *
-        |          (((((48271*(b*1024+i)+16807) % 2147483647) * ((48271*(b*1024+i)+16807) % 2147483647)) % 2147483647) * 2.0 / 2147483647 - 1))),
-        |        (x, y) -> x + y) >= 0
-        |      THEN CAST(1 AS BIGINT) << CAST(b AS INT) ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS sig
-        |  FROM f),
-        |bd AS (
-        |  SELECT vec_id, embedding, unnest(list_transform(range(4), k ->
-        |    CAST(k AS VARCHAR) || '_' || CAST((sig >> CAST(4*k AS INT)) & 15 AS VARCHAR))) AS band
-        |  FROM s),
-        |cand AS (
-        |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    a.embedding AS emb_a, b.embedding AS emb_b
-        |  FROM bd a JOIN bd b ON a.band = b.band AND a.vec_id < b.vec_id),
-        |p AS (
-        |  SELECT id_a, id_b,
-        |    list_reduce(list_prepend(0.0,
-        |      list_transform(range(16),
-        |        i -> CAST(emb_a[i+1] AS DOUBLE) * CAST(emb_b[i+1] AS DOUBLE))),
-        |      (x, y) -> x + y)
-        |    / (sqrt(list_reduce(list_prepend(0.0,
-        |         list_transform(emb_a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (x, y) -> x + y))
-        |     * sqrt(list_reduce(list_prepend(0.0,
-        |         list_transform(emb_b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (x, y) -> x + y)))
-        |    AS cos_sim
-        |  FROM cand)
-        |SELECT id_a, id_b, round(cos_sim, 6) AS cos_sim FROM p
-        |WHERE cos_sim >= 0.98 ORDER BY id_a, id_b""".stripMargin,
+        |${DedupOracle.embeddingNearDupSql("f", dim = 16, nBits = 16, bands = 4, threshold = 0.98)}""".stripMargin,
 
     // The decode STUB's exact arithmetic (Arrays.hashCode + byte histogram)
     // over UTF-8 bytes, recovered from hex pairs.

@@ -455,7 +455,8 @@ object Verify {
         // nProbe must justify itself on the registry query's own shape
         // (nq=50, k=5): recall ≥ the fixed nProbe=3 join's on the same
         // queries, with the mean probe count ≤ nProbeMax printed for
-        // the record (the AdaptiveJoinSweep frontier: (5, 1.5) reads
+        // the record (the frontier from the AdaptiveJoinSweep main, now
+        // kept only in git history: (5, 1.5) reads
         // 0.884/0.872 recall at 4.2/4.3 mean probes vs fixed-3's
         // 0.776/0.736 and fixed-4's 0.868/0.848 at sf0.01/sf0.1 —
         // above the fixed frontier at its own spend).

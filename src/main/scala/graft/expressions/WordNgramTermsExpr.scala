@@ -14,7 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `concat(toks, zip_with(slice(toks,1,n-1), slice(toks,2,n-1), concat))`
   * whose slice/zip_with lambdas evaluate interpreted per token — the
   * bigram stage alone measured ~3× the cost of the codegen'd tokenize
-  * it builds on (ExprBench `dsir_terms` vs `tokens_only`).
+  * it builds on (`dsir_terms` vs `tokens_only` in the `graft.ExprBench`
+  * main, now kept only in git history).
   *
   * Bit-identical by construction: tokenization calls the SAME kernels
   * the composed form bottoms out in — `UTF8String.toLowerCase` (what

@@ -330,7 +330,10 @@ object TextAnalysis extends Serializable {
     * h -> (A_k·h + B_k) mod p with A_k = 48271(k+1) mod p,
     * B_k = (16807(k+1)+11) mod p (both derived, no constant table to keep
     * in sync with the oracle SQL). Exact same output in any 64-bit-integer
-    * engine; the murmur-based [[minHashSignature]] stays the scale default.
+    * engine. The murmur-based [[minHashSignature]] stays on the curate
+    * path: this affine family over-estimates Jaccard at curate's 64
+    * hashes / 16 bands and plants spurious duplicate clusters there (see
+    * [[graft.operators.Dedup.minHashLshPairsPortable]]).
     */
   def minHashSignaturePortable(shingles: Array[String], numHashes: Int): Array[Long] = {
     val sig = Array.fill(numHashes)(EmptySigSlot)
@@ -417,7 +420,10 @@ object TextAnalysis extends Serializable {
     * (Kirsch-Mitzenmacher) — two murmur3 calls per shingle instead of
     * `numHashes`, a ~32× hash-cost cut that matters when signatures run
     * over billions of shingles. Same accuracy guarantees as independent
-    * hash functions for MinHash estimation.
+    * hash functions for MinHash estimation. It is the signature of
+    * [[graft.operators.Dedup.minHashLshPairs]], the curate path, where the
+    * portable affine family measurably fails (see
+    * [[graft.operators.Dedup.minHashLshPairsPortable]]).
     */
   def minHashSignature(shingles: Array[String], numHashes: Int): Array[Long] = {
     val sig = Array.fill(numHashes)(Long.MaxValue)

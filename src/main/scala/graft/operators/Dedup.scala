@@ -493,8 +493,16 @@ object Dedup {
     * shape (explode band keys → equi-join → distinct pairs → signature
     * agreement), but every hash is exactly reproducible in ANSI SQL, so
     * the whole operator — candidate generation included — is
-    * oracle-checkable. 16 hashes × 4 bands keeps the oracle SQL tractable;
-    * the murmur double-hashing variant remains the scale default.
+    * oracle-checkable. 16 hashes × 4 bands keeps the oracle SQL tractable.
+    *
+    * Not a drop-in for [[minHashLshPairs]]: delegated to this operator at
+    * curate's parameters (3-word shingles, 64 hashes, 16 bands), the
+    * `perfbench` curate workload failed every operation (seed 101: 9/9,
+    * each pass finding every planted group plus 3 spurious clusters;
+    * seed 102: 7/7, 2 spurious) against 0 failed with the murmur
+    * signature. The affine family over-estimates Jaccard at those
+    * parameters, so the murmur double-hashing variant stays curate's
+    * signature.
     */
   def minHashLshPairsPortable(
       docs: DataFrame,
@@ -569,17 +577,8 @@ object Dedup {
       docs: DataFrame,
       maxHamming: Int = 2,
       maxBandSize: Int = 64): DataFrame = {
-    val nBands = maxHamming + 1
     val hashed = docs.select(col("doc_id"), TextAnalysis.simHashModUdf(col("text")).as("simhash"))
-    val offsets = (0 to nBands).map(b => b * 31 / nBands)
-    val banded = hashed.select(
-      col("doc_id"), col("simhash"),
-      explode(array((0 until nBands).map { b =>
-        val width = offsets(b + 1) - offsets(b)
-        concat(lit(s"$b:"), shiftright(col("simhash"), offsets(b))
-          .bitwiseAND(lit((1L << width) - 1)).cast("string"))
-      }: _*)).as("band"))
-    hubCappedCandidates(banded, "simhash", maxBandSize)
+    hubCappedCandidates(simHashBands(hashed, 31, maxHamming), "simhash", maxBandSize)
       .withColumn("hamming", TextAnalysis.hamming(col("simhash_a"), col("simhash_b")))
       .filter(col("hamming") <= maxHamming)
       .select("doc_a", "doc_b", "hamming")
@@ -956,27 +955,17 @@ object Dedup {
       .select("doc_a", "doc_b", "hamming")
   }
 
-  /** SimHash near-dup pairs within a Hamming-distance budget. Candidates via
-    * 16-bit band equality (any doc pair within distance <= 3 shares at least
-    * one of 4 bands, pigeonhole), verified by exact bit_count.
+  /** SimHash near-dup pairs over the 64-bit murmur fingerprint
+    * ([[TextAnalysis.simHash]]) within a Hamming-distance budget:
+    * candidates via equality on one of `maxHamming + 1` contiguous bands
+    * (pigeonhole: a pair within the budget agrees on at least one),
+    * verified by exact bit_count. At the default budget of 3 that is four
+    * 16-bit bands.
     */
-  def simHashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val hashed = docs.select(col("doc_id"), TextAnalysis.simHashUdf(col("text")).as("simhash"))
-    val banded = hashed.select(
-      col("doc_id"), col("simhash"),
-      explode(array((0 until 4).map(b =>
-        concat(lit(s"$b:"), (shiftright(col("simhash"), b * 16)
-          .bitwiseAND(lit(0xFFFFL))).cast("string"))): _*)).as("band"))
-    val a = banded.as("a"); val b = banded.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.simhash").as("sim_a"), col("b.simhash").as("sim_b"))
-      .dropDuplicates("doc_a", "doc_b")
-      .withColumn("hamming", TextAnalysis.hamming(col("sim_a"), col("sim_b")))
-      .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
-  }
+  def simHashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame =
+    simHashBandPairs(
+      docs.select(col("doc_id"), TextAnalysis.simHashUdf(col("text")).as("simhash")),
+      64, maxHamming)
 
   /** Banded SimHash near-dup pairs over the PORTABLE 31-bit fingerprint
     * ([[TextAnalysis.simHashMod]]) — the scale-registered form of
@@ -989,18 +978,41 @@ object Dedup {
     * while the plan is hash-partitioned equi-joins on short band keys —
     * no O(n²) theta self-join.
     */
-  def simHashPairsBanded(docs: DataFrame, maxHamming: Int = 2): DataFrame = {
-    val nBands = maxHamming + 1
-    val hashed = docs.select(col("doc_id"), TextAnalysis.simHashModUdf(col("text")).as("simhash"))
-    // Band b covers bits [off(b), off(b+1)): widths differ by at most 1.
-    val offsets = (0 to nBands).map(b => b * 31 / nBands)
-    val banded = hashed.select(
+  def simHashPairsBanded(docs: DataFrame, maxHamming: Int = 2): DataFrame =
+    simHashBandPairs(
+      docs.select(col("doc_id"), TextAnalysis.simHashModUdf(col("text")).as("simhash")),
+      31, maxHamming)
+
+  /** Contiguous cut of a `bits`-wide fingerprint into `nBands` bands, as
+    * (offset, mask) per band; widths differ by at most one. A 64-bit band
+    * masks with `-1L >>> 0`: `(1L << 64) - 1` is 0 on the JVM. The
+    * [[graft.DedupOracle]] mirror cuts its bands from the same list.
+    */
+  private[graft] def bandCut(bits: Int, nBands: Int): Seq[(Int, Long)] = {
+    val offsets = (0 to nBands).map(b => b * bits / nBands)
+    (0 until nBands).map { b =>
+      val width = offsets(b + 1) - offsets(b)
+      (offsets(b), if (width == 0) 0L else -1L >>> (64 - width))
+    }
+  }
+
+  /** (doc_id, simhash, band) rows: one `b:value` key per band of the
+    * `maxHamming + 1`-band [[bandCut]] of a `bits`-wide fingerprint.
+    */
+  private def simHashBands(hashed: DataFrame, bits: Int, maxHamming: Int): DataFrame =
+    hashed.select(
       col("doc_id"), col("simhash"),
-      explode(array((0 until nBands).map { b =>
-        val width = offsets(b + 1) - offsets(b)
-        concat(lit(s"$b:"), shiftright(col("simhash"), offsets(b))
-          .bitwiseAND(lit((1L << width) - 1)).cast("string"))
+      explode(array(bandCut(bits, maxHamming + 1).zipWithIndex.map {
+        case ((offset, mask), b) =>
+          concat(lit(s"$b:"), shiftright(col("simhash"), offset)
+            .bitwiseAND(lit(mask)).cast("string"))
       }: _*)).as("band"))
+
+  /** Band equi-join of (doc_id, simhash) rows, verified by exact Hamming
+    * distance — shared by the murmur and portable fingerprints.
+    */
+  private def simHashBandPairs(hashed: DataFrame, bits: Int, maxHamming: Int): DataFrame = {
+    val banded = simHashBands(hashed, bits, maxHamming)
     val a = banded.as("a"); val b = banded.as("b")
     a.join(b, col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
       .select(

@@ -5,8 +5,8 @@ package graft.plans
   * hand in three places (the SparkEntry registration, the AnnOracle
   * mirror's probe/cut CTEs, and the Verify recall gate — r17 ADVICE #4:
   * editing one without the others silently broke the mirror or the
-  * gate). Every value is a measurement from [[graft.AnnRuleSweep]] at
-  * sf0.1, k = [[K]]; gates sit at ~half the sf0.1 measurement (the
+  * gate). Every value is a measurement from the `graft.AnnRuleSweep`
+  * main (now kept only in git history) at sf0.1, k = [[K]]; gates sit at ~half the sf0.1 measurement (the
   * repo's gate discipline — above the broken-probe and halved-recall
   * regression classes, under data-drift noise).
   */

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Ingest, Retrieval, Sessions}
-import graft.functions.VectorOps
+import graft.functions.{TextAnalysis, VectorOps}
 
 /** DataFrame-level operator specs over tiny in-memory fixtures
   * (FIXTURES.md §B).
@@ -374,6 +374,43 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     val dup = out.find(r => r.getAs[Long]("doc_a") == 1L && r.getAs[Long]("doc_b") == 2L)
     assert(dup.isDefined)
     assert(dup.get.getAs[Int]("hamming") == 0)
+  }
+
+  test("simhash pairs equal the all-pairs Hamming filter above a 4-band budget") {
+    // Variants of one sentence, each with two words replaced: some pairs
+    // within the budget differ in all four 16-bit quarters of the
+    // fingerprint, the pairs a fixed four-band cut cannot generate.
+    val words = ("the quick brown fox jumps over the lazy dog near the river " +
+      "bank today while birds sing").split(" ")
+    val subs = Seq("red", "slow", "cat", "walks", "under", "busy", "lake", "shore",
+      "night", "cows")
+    val texts = (0 until 40).map { i =>
+      val w = words.clone()
+      w(i % w.length) = subs(i % subs.length)
+      w((i * 7 + 3) % w.length) = subs((i / 3) % subs.length)
+      (i.toLong, w.mkString(" "))
+    }
+    val maxHamming = 8
+    val fp = texts.map { case (id, t) => id -> TextAnalysis.simHash(t) }.toMap
+    val expected = (for {
+      (a, fa) <- fp; (b, fb) <- fp if a < b
+      d = java.lang.Long.bitCount(fa ^ fb) if d <= maxHamming
+    } yield (a, b, d)).toSet
+    def quarters(x: Long) = (0 until 4).map(q => (x >>> (16 * q)) & 0xFFFFL)
+    assert(expected.exists { case (a, b, _) =>
+      quarters(fp(a)).zip(quarters(fp(b))).forall { case (x, y) => x != y }
+    }, "fixture has no in-budget pair outside every 16-bit band")
+    val got = Dedup.simHashPairs(texts.toDF("doc_id", "text"), maxHamming).collect()
+      .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"), r.getAs[Int]("hamming")))
+    assert(got.length == got.toSet.size)
+    assert(got.toSet == expected)
+  }
+
+  test("band cut: contiguous widths, masks exact up to a 64-bit band") {
+    assert(Dedup.bandCut(64, 4) == Seq((0, 0xFFFFL), (16, 0xFFFFL), (32, 0xFFFFL), (48, 0xFFFFL)))
+    assert(Dedup.bandCut(31, 3) == Seq((0, 1023L), (10, 1023L), (20, 2047L)))
+    assert(Dedup.bandCut(64, 1) == Seq((0, -1L)))
+    assert(Dedup.bandCut(64, 9).map(_._2).map(java.lang.Long.bitCount).sum == 64)
   }
 
   test("portable minhash/simhash agree with murmur variants on dup detection") {
