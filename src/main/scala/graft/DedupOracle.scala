@@ -272,15 +272,21 @@ private[graft] object DedupOracle {
        |        CASE WHEN i % 2 = 0 THEN 0.01 ELSE -0.01 END AS REAL)) AS embedding
        |  FROM embeddings""".stripMargin
 
-  /** Cosine of two float arrays of `dim` components: double left folds
-    * of the dot product and both squared norms, the Scala loop order. */
-  def cosineSql(a: String, b: String, dim: Int): String = {
-    def fold(xs: String) = s"list_reduce(list_prepend(0.0, $xs), (x, y) -> x + y)"
-    def norm(e: String) =
-      s"sqrt(${fold(s"list_transform($e, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")})"
-    s"(${fold(s"list_transform(range($dim), i -> CAST($a[i+1] AS DOUBLE) * CAST($b[i+1] AS DOUBLE))")}" +
-      s"\n      / (${norm(a)}\n       * ${norm(b)}))"
-  }
+  private def foldSql(xs: String) = s"list_reduce(list_prepend(0.0, $xs), (x, y) -> x + y)"
+
+  /** Dot product of two float arrays of `dim` components: a double left
+    * fold, the Scala loop order. */
+  def dotSql(a: String, b: String, dim: Int): String =
+    foldSql(s"list_transform(range($dim), i -> CAST($a[i+1] AS DOUBLE) * CAST($b[i+1] AS DOUBLE))")
+
+  /** L2 norm of a float array: sqrt of the double left fold of its squares. */
+  def normSql(e: String): String =
+    s"sqrt(${foldSql(s"list_transform($e, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")})"
+
+  /** Cosine of two float arrays of `dim` components: [[dotSql]] over the
+    * product of both [[normSql]]s. */
+  def cosineSql(a: String, b: String, dim: Int): String =
+    s"(${dotSql(a, b, dim)}\n      / (${normSql(a)}\n       * ${normSql(b)}))"
 
   /** ↔ `Dedup.embeddingNearDupBucketed` over relation `src` (vec_id,
     * embedding of `dim` floats): `Dedup.portableSignature` (squared-Lehmer

@@ -3456,13 +3456,8 @@ object SparkEntry {
        |    CASE WHEN den = 0 THEN 0.0 ELSE dot / den END AS sim
        |  FROM (
        |    SELECT q.query_id, ch.vec_id, ch.text,
-       |      list_reduce(list_prepend(0.0,
-       |        list_transform(range(64), i -> CAST(qe[i+1] AS DOUBLE) * CAST(ch.embedding[i+1] AS DOUBLE))),
-       |        (ca, cb) -> ca + cb) AS dot,
-       |      sqrt(list_reduce(list_prepend(0.0,
-       |          list_transform(qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (ca, cb) -> ca + cb))
-       |      * sqrt(list_reduce(list_prepend(0.0,
-       |          list_transform(ch.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (ca, cb) -> ca + cb)) AS den
+       |      ${DedupOracle.dotSql("qe", "ch.embedding", 64)} AS dot,
+       |      ${DedupOracle.normSql("qe")} * ${DedupOracle.normSql("ch.embedding")} AS den
        |    FROM qemb q CROSS JOIN chunks ch)),
        |ranked AS (
        |  SELECT query_id, vec_id, text, sim,
@@ -3532,13 +3527,8 @@ object SparkEntry {
        |    CASE WHEN den = 0 THEN 0.0 ELSE dot / den END AS sim
        |  FROM (
        |    SELECT q.query_id, ch.vec_id,
-       |      list_reduce(list_prepend(0.0,
-       |        list_transform(range(64), i -> CAST(qe[i+1] AS DOUBLE) * CAST(ch.embedding[i+1] AS DOUBLE))),
-       |        (ca, cb) -> ca + cb) AS dot,
-       |      sqrt(list_reduce(list_prepend(0.0,
-       |          list_transform(qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (ca, cb) -> ca + cb))
-       |      * sqrt(list_reduce(list_prepend(0.0,
-       |          list_transform(ch.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (ca, cb) -> ca + cb)) AS den
+       |      ${DedupOracle.dotSql("qe", "ch.embedding", 64)} AS dot,
+       |      ${DedupOracle.normSql("qe")} * ${DedupOracle.normSql("ch.embedding")} AS den
        |    FROM qemb q CROSS JOIN chunks ch)),
        |sr AS (
        |  SELECT query_id, vec_id AS doc_id,
@@ -4343,19 +4333,11 @@ object SparkEntry {
         |ORDER BY doc_id, chunk_index""".stripMargin,
 
     "t4_knn_cosine" ->
-      """WITH q AS (
+      s"""WITH q AS (
         |  SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
         |scored AS (
         |  SELECT q.query_id, e.vec_id,
-        |    list_reduce(list_prepend(0.0,
-        |      list_transform(range(64),
-        |        i -> CAST(q.qe[i+1] AS DOUBLE) * CAST(e.embedding[i+1] AS DOUBLE))),
-        |      (a, b) -> a + b)
-        |    / (sqrt(list_reduce(list_prepend(0.0,
-        |         list_transform(q.qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (a,b) -> a+b))
-        |     * sqrt(list_reduce(list_prepend(0.0,
-        |         list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (a,b) -> a+b)))
-        |    AS sim
+        |    ${DedupOracle.cosineSql("q.qe", "e.embedding", 64)} AS sim
         |  FROM q CROSS JOIN embeddings e),
         |ranked AS (
         |  SELECT query_id, vec_id, sim,
@@ -4365,19 +4347,11 @@ object SparkEntry {
         |FROM ranked WHERE rank <= 2 ORDER BY query_id, rank""".stripMargin,
 
     "p9_filtered_knn" ->
-      """WITH q AS (
+      s"""WITH q AS (
         |  SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
         |scored AS (
         |  SELECT q.query_id, e.vec_id,
-        |    list_reduce(list_prepend(0.0,
-        |      list_transform(range(64),
-        |        i -> CAST(q.qe[i+1] AS DOUBLE) * CAST(e.embedding[i+1] AS DOUBLE))),
-        |      (a, b) -> a + b)
-        |    / (sqrt(list_reduce(list_prepend(0.0,
-        |         list_transform(q.qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (a,b) -> a+b))
-        |     * sqrt(list_reduce(list_prepend(0.0,
-        |         list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (a,b) -> a+b)))
-        |    AS sim
+        |    ${DedupOracle.cosineSql("q.qe", "e.embedding", 64)} AS sim
         |  FROM q CROSS JOIN (SELECT * FROM embeddings WHERE label = 1) e),
         |ranked AS (
         |  SELECT query_id, vec_id, sim,
@@ -4387,19 +4361,11 @@ object SparkEntry {
         |FROM ranked WHERE rank <= 2 ORDER BY query_id, rank""".stripMargin,
 
     "t7_stuff_context" ->
-      """WITH q AS (
+      s"""WITH q AS (
         |  SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
         |scored AS (
         |  SELECT q.query_id, e.vec_id,
-        |    list_reduce(list_prepend(0.0,
-        |      list_transform(range(64),
-        |        i -> CAST(q.qe[i+1] AS DOUBLE) * CAST(e.embedding[i+1] AS DOUBLE))),
-        |      (a, b) -> a + b)
-        |    / (sqrt(list_reduce(list_prepend(0.0,
-        |         list_transform(q.qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (a,b) -> a+b))
-        |     * sqrt(list_reduce(list_prepend(0.0,
-        |         list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (a,b) -> a+b)))
-        |    AS sim
+        |    ${DedupOracle.cosineSql("q.qe", "e.embedding", 64)} AS sim
         |  FROM q CROSS JOIN embeddings e),
         |ranked AS (
         |  SELECT query_id, vec_id,
@@ -5199,7 +5165,7 @@ object SparkEntry {
     // t4_knn_cosine's at k=20 over vec_id<3; fusion = full outer join on
     // (query_id, doc_id), rrf = sum of 1/(60+rank) contributions.
     "retrieval_hybrid_rrf" ->
-      """WITH q(query_id, qtext) AS (VALUES
+      raw"""WITH q(query_id, qtext) AS (VALUES
         |    (CAST(0 AS BIGINT), 'fast sort merge'),
         |    (CAST(1 AS BIGINT), 'spark data query'),
         |    (CAST(2 AS BIGINT), 'join filter stream')),
@@ -5230,15 +5196,7 @@ object SparkEntry {
         |  SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 3),
         |scored AS (
         |  SELECT vq.query_id, e.vec_id,
-        |    list_reduce(list_prepend(0.0,
-        |      list_transform(range(64),
-        |        i -> CAST(vq.qe[i+1] AS DOUBLE) * CAST(e.embedding[i+1] AS DOUBLE))),
-        |      (a, b) -> a + b)
-        |    / (sqrt(list_reduce(list_prepend(0.0,
-        |         list_transform(vq.qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (a,b) -> a+b))
-        |     * sqrt(list_reduce(list_prepend(0.0,
-        |         list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (a,b) -> a+b)))
-        |    AS sim
+        |    ${DedupOracle.cosineSql("vq.qe", "e.embedding", 64)} AS sim
         |  FROM vq CROSS JOIN embeddings e),
         |sr AS (
         |  SELECT query_id, vec_id AS doc_id,
@@ -5265,7 +5223,7 @@ object SparkEntry {
     // precision@k, MRR@k, nDCG@k (natural-log discounts — the base cancels
     // in DCG/IDCG) per (retriever, query) plus a macro row per retriever.
     "retrieval_eval" ->
-      """WITH q(query_id, qtext) AS (VALUES
+      raw"""WITH q(query_id, qtext) AS (VALUES
         |    (CAST(0 AS BIGINT), 'fast sort merge'),
         |    (CAST(1 AS BIGINT), 'spark data query'),
         |    (CAST(2 AS BIGINT), 'join filter stream')),
@@ -5300,15 +5258,7 @@ object SparkEntry {
         |  SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 3),
         |scored AS (
         |  SELECT vq.query_id, e.vec_id,
-        |    list_reduce(list_prepend(0.0,
-        |      list_transform(range(64),
-        |        i -> CAST(vq.qe[i+1] AS DOUBLE) * CAST(e.embedding[i+1] AS DOUBLE))),
-        |      (a, b) -> a + b)
-        |    / (sqrt(list_reduce(list_prepend(0.0,
-        |         list_transform(vq.qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (a,b) -> a+b))
-        |     * sqrt(list_reduce(list_prepend(0.0,
-        |         list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), (a,b) -> a+b)))
-        |    AS sim
+        |    ${DedupOracle.cosineSql("vq.qe", "e.embedding", 64)} AS sim
         |  FROM vq CROSS JOIN embeddings e),
         |sr AS (
         |  SELECT query_id, vec_id AS doc_id,

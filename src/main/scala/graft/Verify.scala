@@ -6,11 +6,14 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     // Optional third arg: only dump queries whose name starts with the
-    // prefix (builder-side single-query iteration; the driver passes 2).
+    // prefix, and only run the gates of the families it
+    // overlaps (single-family iteration). Without it, everything runs.
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, p) => (s, o, Some(p))
     }
+    def gate(family: String)(body: => Unit): Unit =
+      if (only.forall(p => p.startsWith(family) || family.startsWith(p))) body
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -49,7 +52,7 @@ object Verify {
     // DuckDB oracle row, so they get a hard in-driver gate instead of
     // spec-only coverage — Verify FAILS (nonzero exit) on a recall
     // regression vs the exact brute-force top-k over the same queries.
-    {
+    gate("ann_") {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
       val emb = Tables.embeddings(spark, sfDir)
@@ -533,7 +536,7 @@ object Verify {
     // the same word counts — the same discipline as the incremental-
     // index rebuild gate. The memoized call is the one the registry
     // queries share, so a learner regression fails the round here.
-    {
+    gate("bpe_") {
       import org.apache.spark.sql.functions._
       val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
       val dist = operators.Bpe.learnMergesCached(docs, sfDir, nMerges = 20)
@@ -637,7 +640,7 @@ object Verify {
     // the full 200; maxOverlayRows=2000 (small against the 744-word
     // varied vocab's high-touch early merges) still forces repeated
     // overlay→base compactions, so the adaptive path is inside the gate.
-    {
+    gate("bpe_") {
       import org.apache.spark.sql.functions._
       val base = Tables.documents(spark, sfDir).select("doc_id", "text")
       val nBase = base.count()
@@ -678,7 +681,7 @@ object Verify {
     // registry encode output replayed TOKEN FOR TOKEN through a
     // sequential Viterbi pass under the same model, with 0 UNK on the
     // training corpus (single-code-point coverage is never pruned).
-    {
+    gate("unigram_") {
       import org.apache.spark.sql.functions._
       val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
       val (dist, llDist) = operators.Unigram.trainCached(
@@ -733,7 +736,7 @@ object Verify {
     // (exact integer aggregation makes this an equality, not a
     // tolerance), plus a separation sanity check — the trained model
     // must actually rank its target language above the rest.
-    {
+    gate("quality_model") {
       import org.apache.spark.sql.functions._
       val docs = Tables.documents(spark, sfDir)
       val tgt = docs.filter(col("lang") === "es").select("doc_id", "text")
@@ -801,7 +804,7 @@ object Verify {
     // mass and the fixed point ≤ d/(1−d)·maxOutdeg·1e-6 ≈ 5.7e-4 at
     // outdeg ≤ 100 (measured 1.35e-4 @sf0.01) — the sum must sit in
     // (1 − 1e-3, 1] · 10¹².
-    {
+    gate("graph_pagerank") {
       import org.apache.spark.sql.functions._
       val got = SparkEntry.queries("graph_pagerank")(spark, sfDir)
         .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.HashEmbedder
@@ -53,18 +55,15 @@ object Rag {
     }
   }
 
-  /** Run the chat pipeline for a batch of questions.
-    *
-    * @param questions (query_id, user_id, question)
-    * @param logs      chat log table (user_id, ts, event_id, event_type, props)
-    * @param chunks    vector store (vec_id, embedding, text)
-    * @param k         retriever fan-in (config.py:34: 2)
-    * @param historyN  history window (config.py:43: 10)
-    * @return one row per query: question, context, answer, emotion
-    */
   /** Stages 1-4, shared by both pipelines: admission, per-user history
     * digest, reformulation, question embedding. Returns the admitted
-    * questions with `standalone_question` and `q_embedding` attached.
+    * questions with `standalone_question` and `q_embedding` attached,
+    * delivered once as a local frame (one row per question, small):
+    * the retrieval channels and the answer join all read the same rows,
+    * so each question is reformulated exactly once and both channels
+    * retrieve for the `standalone_question` the turn returns. The LLM
+    * UDFs are nondeterministic for the same reason — Catalyst must never
+    * copy a call into two references.
     */
   private def prepareQuestions(
       questions: DataFrame,
@@ -89,13 +88,14 @@ object Rag {
 
     // 3. T-8 reformulate (pluggable LLM; identity in the deterministic stub)
     val reformulateUdf = udf((h: String, q: String) =>
-      llm.reformulate(Option(h).toSeq.flatMap(_.split("\n")), q))
+      llm.reformulate(Option(h).toSeq.flatMap(_.split("\n")), q)).asNondeterministic()
     val reformulated = withHistory
       .withColumn("standalone_question", reformulateUdf(col("history"), col("question")))
 
     // 4. T-3 embed the standalone question
-    reformulated
+    val prepared = reformulated
       .withColumn("q_embedding", HashEmbedder.embedCol(col("standalone_question")))
+    prepared.sparkSession.createDataFrame(prepared.collect().toSeq.asJava, prepared.schema)
   }
 
   /** Stages 7-8, shared by both pipelines: answer over the stuffed
@@ -104,6 +104,7 @@ object Rag {
   private def answerAndParse(
       embedded: DataFrame, contexts: DataFrame, llm: LlmClient): DataFrame = {
     val answerUdf = udf((ctx: String, q: String) => llm.answer(Option(ctx).getOrElse(""), q))
+      .asNondeterministic()
     embedded.join(contexts, Seq("query_id"), "left")
       .withColumn("context", coalesce(col("context"), lit("")))
       .withColumn("raw_response", answerUdf(col("context"), col("standalone_question")))
@@ -115,6 +116,15 @@ object Rag {
         col("parsed.emotion").as("emotion"))
   }
 
+  /** Run the chat pipeline for a batch of questions.
+    *
+    * @param questions (query_id, user_id, question)
+    * @param logs      chat log table (user_id, ts, event_id, event_type, props)
+    * @param chunks    vector store (vec_id, embedding, text)
+    * @param k         retriever fan-in (config.py:34: 2)
+    * @param historyN  history window (config.py:43: 10)
+    * @return one row per query: question, context, answer, emotion
+    */
   def chatPipeline(
       questions: DataFrame,
       logs: DataFrame,
@@ -144,9 +154,15 @@ object Rag {
     *
     * Scale shape: both channels bound their output at `fetchK` rows per
     * query before fusion, so the fusion join touches O(queries·fetchK)
-    * rows regardless of corpus size; the corpus itself is scanned once
-    * per channel with no corpus-sized shuffle (BM25's df join is
-    * query-term-bounded; the kNN corpus never shuffles).
+    * rows regardless of corpus size. When `chunks` is a bare parquet
+    * scan (a file-backed store, only projected), the lexical channel
+    * reads the store's per-file [[Bm25Segments]], built once per file
+    * and session, so a turn scans the chunk store twice: the kNN
+    * embeddings and the text of the fused top-k. Any other `chunks`
+    * frame (a join, a filter, a local frame) gets the on-the-fly
+    * [[TextRetrieval.bm25TopK]], which tokenizes the chunk texts per
+    * turn with no corpus-sized shuffle (its df join is
+    * query-term-bounded). The kNN corpus never shuffles.
     */
   def chatPipelineHybrid(
       questions: DataFrame,
@@ -158,11 +174,12 @@ object Rag {
       historyN: Int = 10): DataFrame = {
     val embedded = prepareQuestions(questions, logs, llm, historyN)
 
-    // 5a. lexical channel: BM25 over the chunk texts
-    val lex = TextRetrieval.bm25TopK(
-      chunks.select(col("vec_id").as("doc_id"), col("text")),
-      embedded.select(col("query_id"), col("standalone_question").as("qtext")),
-      k = fetchK)
+    // 5a. lexical channel: BM25 over the chunk texts, from the store's
+    //     segments when the chunks are a bare parquet scan
+    val docs = chunks.select(col("vec_id").as("doc_id"), col("text"))
+    val qtexts = embedded.select(col("query_id"), col("standalone_question").as("qtext"))
+    val lex = Bm25Segments.topK(docs, qtexts, fetchK)
+      .getOrElse(TextRetrieval.bm25TopK(docs, qtexts, fetchK))
       .select("query_id", "doc_id", "rank")
 
     // 5b. semantic channel: cosine kNN over the chunk embeddings

@@ -52,6 +52,11 @@ object TextRetrieval {
       .groupBy("doc_id", "term")
       .agg(count(lit(1)).as("tf"))
 
+  // 1.25/0.75: standard BM25 range, chosen exactly representable in
+  // binary so k1+1 and 1-b are literal-identical in any engine.
+  private[operators] val Bm25K1 = 1.25
+  private[operators] val Bm25B = 0.75
+
   /** BM25 top-k document retrieval for a table of keyword queries.
     *
     * Scoring: idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5)) (the
@@ -85,10 +90,8 @@ object TextRetrieval {
       docs: DataFrame,
       queries: DataFrame,
       k: Int,
-      // 1.25/0.75: standard BM25 range, chosen exactly representable in
-      // binary so k1+1 and 1-b are literal-identical in any engine.
-      k1: Double = 1.25,
-      b: Double = 0.75): DataFrame = {
+      k1: Double = Bm25K1,
+      b: Double = Bm25B): DataFrame = {
     // Doc length = token count: computed directly from the scan (size of
     // the token array), map-only. dl is corpus-cardinality, so it is
     // NEVER broadcast — the doc_id join shuffles (or broadcasts only when
@@ -106,10 +109,10 @@ object TextRetrieval {
     // including a same-day old-code-vs-new-code worktree run
     // (OPTIMIZATION_r19.md "Re-measure") — the materialization barrier
     // plus per-invocation block churn across a 191-query session costs
-    // more than the duplicated map-side tokenize saves. At 100 TB the
-    // right shape is materializing the whole postings layout once
-    // (tfidfTopTermsFromStats' discipline), not checkpointing inside
-    // every query invocation.
+    // more than the duplicated map-side tokenize saves. A standing
+    // corpus gets its postings built once instead: [[Bm25Segments]]
+    // keeps one segment per data file of a parquet chunk store and
+    // feeds the same scoring tail ([[bm25Score]]).
     val dl = docsP
       .select(col("doc_id"), size(tokensCol(col("text"))).cast("long").as("dl"))
       .filter(col("dl") > 0)
@@ -127,18 +130,28 @@ object TextRetrieval {
     // Each (query_id, term) window partition holds the term's complete
     // posting list (the semi-join dropped nothing for query terms), so
     // this count is the term's full-corpus df — no second df branch.
-    val contrib = broadcast(qterms)
+    val postings = broadcast(qterms)
       .join(tfq, "term") // inverted-index equi-join on term
       .withColumn("df",
         count(lit(1)).over(Window.partitionBy("query_id", "term")))
       .join(dl, "doc_id")
       .crossJoin(broadcast(corpus))
+    bm25Score(postings, k, k1, b)
+  }
+
+  /** The BM25 scoring tail every postings source shares: idf, tf
+    * saturation, the 6-decimal score floor and the per-query rank. Input
+    * rows are the query-term postings `(query_id, term, doc_id, tf, df,
+    * dl)` with the corpus scalars `n_docs` and `avgdl` attached.
+    */
+  private[operators] def bm25Score(
+      postings: DataFrame, k: Int, k1: Double, b: Double): DataFrame = {
+    val scored = postings
       .withColumn("idf",
         log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
       .withColumn("contrib",
         col("idf") * (col("tf") * lit(k1 + 1)) /
           (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))))
-    val scored = contrib
       .groupBy("query_id", "doc_id")
       .agg(TextAnalysis.floorScale(sum("contrib"), 6).as("score"))
     val w = Window.partitionBy("query_id").orderBy(desc("score"), asc("doc_id"))

@@ -347,4 +347,38 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestSession {
         s"$q must pre-aggregate first occurrences map-side:\n${p.take(600)}")
     }
   }
+
+  test("warm hybrid chat turn over a file-backed store: segment postings, two chunk-store scans") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import graft.operators.{Rag, Store}
+    val dir = java.nio.file.Files.createTempDirectory("chat_plan").toString + "/chunks"
+    (0 until 3).foreach { f =>
+      Store.append((0 until 20).map(i => (s"f${f}_$i", s"spark plans shuffle joins file $f chunk $i"))
+        .toDF("vec_id", "text").withColumn("embedding", graft.functions.HashEmbedder.embedCol(col("text"))), dir)
+    }
+    val logs = Seq((1L, "2024-01-01 10:00:00", 1L, "prior question", "{}"))
+      .toDF("user_id", "ts", "event_id", "event_type", "props")
+      .withColumn("ts", col("ts").cast("timestamp"))
+    val questions = Seq((1L, 1L, "how do spark plans shuffle")).toDF("query_id", "user_id", "question")
+    def executed(chunks: org.apache.spark.sql.DataFrame): SparkPlan = {
+      val out = Rag.chatPipelineHybrid(questions, logs, chunks)
+      out.collect()
+      out.queryExecution.executedPlan
+    }
+    val helper = new AdaptiveSparkPlanHelper {}
+    def storeScans(p: SparkPlan) = helper.collectWithSubqueries(p) {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.toString.contains(dir)) => s
+    }
+    executed(spark.read.parquet(dir)) // cold: builds the segments
+    val warm = executed(spark.read.parquet(dir))
+    assert(helper.collectWithSubqueries(warm) {
+      case g: GenerateExec if g.generator.toString.contains("split(lower(") => g
+    }.isEmpty, s"the turn re-tokenizes the chunk texts:\n$warm")
+    assert(storeScans(warm).size <= 2, s"kNN embeddings and the final text lookup only:\n$warm")
+    // the on-the-fly path over the same files (any non-bare frame) scans the store 5 times
+    assert(storeScans(executed(spark.read.parquet(dir).filter(lit(true)))).size == 5)
+  }
 }
