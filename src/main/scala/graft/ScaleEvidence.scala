@@ -1368,10 +1368,8 @@ object ScaleEvidence {
     }
     def zBox(df: DataFrame) = df.filter(
       col("a").between(100000, 150000) && col("b").between(400000, 450000))
-    val zAnswer = zBox(spark.read.parquet(s"$zDir/z")).agg(
-      count(lit(1)), coalesce(expr("bit_xor(xxhash64(id))"), lit(0L))).head()
-    val linAnswer = zBox(spark.read.parquet(s"$zDir/lin")).agg(
-      count(lit(1)), coalesce(expr("bit_xor(xxhash64(id))"), lit(0L))).head()
+    val zAnswer = operators.Layout.fingerprint(zBox(spark.read.parquet(s"$zDir/z")), "id")
+    val linAnswer = operators.Layout.fingerprint(zBox(spark.read.parquet(s"$zDir/lin")), "id")
     if (zAnswer != linAnswer)
       failures ::= s"zorder: layouts disagree — z=$zAnswer linear=$linAnswer"
     val (zMat, tZScan) = timed {
@@ -1405,11 +1403,11 @@ object ScaleEvidence {
       lit(-1L).as("payload"))
     val ((bgOut, bgStats), tBloomGate) = timed {
       val r = operators.Dedup.bloomGateWithStats(bgHist, bgBatch, Seq("k"), fpp = 0.01)
-      (r._1.agg(count(lit(1)), coalesce(expr("bit_xor(xxhash64(k))"), lit(0L))).head(), r._2)
+      (operators.Layout.fingerprint(r._1, "k"), r._2)
     }
     val (bgRef, tAntiJoin) = timed {
-      bgBatch.join(bgHist.select("k"), Seq("k"), "left_anti")
-        .agg(count(lit(1)), coalesce(expr("bit_xor(xxhash64(k))"), lit(0L))).head()
+      operators.Layout.fingerprint(
+        bgBatch.join(bgHist.select("k"), Seq("k"), "left_anti"), "k")
     }
     if (bgOut != bgRef)
       failures ::= s"bloom_gate: gate=$bgOut anti-join=$bgRef disagree"
@@ -1524,7 +1522,7 @@ object ScaleEvidence {
           f"""{"touched":${st.touchedWords},"sec":${st.sec}%.2f}""").mkString("[", ",", "]")},""" +
         s""""deep":{"vocab_words":200000,"n_merges":${deepMerges.length},"sec":${r1(tDeep)},"max_overlay_rows":30000,"compactions":$deepCompactions,"per_100_median_sec":${deepCurve.map(v => f"$v%.3f").mkString("[", ",", "]")}}},""" +
         s""""zorder_layout":{"n_rows":$zN,"n_files":256,"z_write_sec":${r1(tZWrite)},"linear_write_sec":${r1(tLinWrite)},""" +
-        s""""box_selected":${zAnswer.getLong(0)},"z_rows_materialized":$zMat,"linear_rows_materialized":$linMat,""" +
+        s""""box_selected":${zAnswer.n},"z_rows_materialized":$zMat,"linear_rows_materialized":$linMat,""" +
         s""""z_scan_sec":${r1(tZScan)},"linear_scan_sec":${r1(tLinScan)},"answers_equal":${zAnswer == linAnswer}},""" +
         s""""ann_frontier":{"n_vectors":$nFro,"k":10,"train_vectors":${nVec * variants},""" +
         s""""build_sec":${r1(tFroBuild)},"exact_scan_sec":${r1(tFroExact)},""" +

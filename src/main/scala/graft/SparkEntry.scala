@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{HashEmbedder, TextAnalysis}
 import graft.operators.{Dedup, Ingest, Joins, Retrieval, Scale, Sessions}
+import graft.operators.Layout.annLayoutDir
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -2211,9 +2212,7 @@ object SparkEntry {
       // require asserts genuine PartitionFilters pruning (probed
       // directory count == union of per-query probe sets).
       val emb = Tables.embeddings(s, dir)
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.signaturePartitionedLayout(s, emb, base, nBits = 8)
+      val layout = operators.Ann.signaturePartitionedLayout(s, emb, annLayoutDir, nBits = 8)
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       val out = operators.Ann.lshTopKPartitionedAdaptive(
@@ -2244,9 +2243,7 @@ object SparkEntry {
       // corpus content (fingerprint-keyed path) and is reused after —
       // probes pay probe cost, not the one-time 256-directory write.
       val emb = Tables.embeddings(s, dir)
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.signaturePartitionedLayout(s, emb, base, nBits = 8)
+      val layout = operators.Ann.signaturePartitionedLayout(s, emb, annLayoutDir, nBits = 8)
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       operators.Ann.lshTopKPartitioned(s, layout, qs, k = 2, nBits = 8, probeBits = 1)
@@ -2264,9 +2261,7 @@ object SparkEntry {
       // (planes are pure hash constants — no captures needed); Verify
       // equality-gates it against the in-memory lshTopK row for row.
       val emb = Tables.embeddings(s, dir)
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.signaturePartitionedLayout(s, emb, base, nBits = 8)
+      val layout = operators.Ann.signaturePartitionedLayout(s, emb, annLayoutDir, nBits = 8)
       val qs = emb.filter(col("vec_id") < 50)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       operators.Ann.lshJoin(s, layout, qs, k = 5, nBits = 8, probeBits = 2)
@@ -2287,9 +2282,7 @@ object SparkEntry {
       // vs the exact brute force and asserts the adaptive join beats
       // the fixed Hamming-1 ball at under twice its probes.
       val emb = Tables.embeddings(s, dir)
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.signaturePartitionedLayout(s, emb, base, nBits = 8)
+      val layout = operators.Ann.signaturePartitionedLayout(s, emb, annLayoutDir, nBits = 8)
       val qs = emb.filter(col("vec_id") < 50)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       operators.Ann.lshJoinAdaptive(s, layout, qs, k = 5, nBits = 8, nProbes = 16)
@@ -2327,9 +2320,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val (centroids, _) =
         operators.Ann.buildIvfCached(s, emb, cacheKey = dir, nCells = 8, maxIter = 3)
-      val layout = operators.Ann.cellLayout(s, emb,
-        new java.io.File(sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath,
-        centroids)
+      val layout = operators.Ann.cellLayout(s, emb, annLayoutDir, centroids)
       val qs = emb.filter(col("vec_id") < 50)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       operators.Ann.ivfJoin(s, layout, qs, centroids, k = 5, nProbe = 3)
@@ -2354,9 +2345,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val (centroids, _) =
         operators.Ann.buildIvfCached(s, emb, cacheKey = dir, nCells = 8, maxIter = 3)
-      val layout = operators.Ann.cellLayout(s, emb,
-        new java.io.File(sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath,
-        centroids)
+      val layout = operators.Ann.cellLayout(s, emb, annLayoutDir, centroids)
       require(
         operators.Ann.hotKeys(s.read.parquet(layout), "cell",
           hotKeyCap = 32, maxSalt = 8).limit(1).count() > 0,
@@ -2385,9 +2374,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val (centroids, _) =
         operators.Ann.buildIvfCached(s, emb, cacheKey = dir, nCells = 8, maxIter = 3)
-      val layout = operators.Ann.cellLayout(s, emb,
-        new java.io.File(sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath,
-        centroids)
+      val layout = operators.Ann.cellLayout(s, emb, annLayoutDir, centroids)
       val qs = emb.filter(col("vec_id") < 50)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       operators.Ann.ivfJoinAdaptive(s, layout, qs, centroids, k = 5)
@@ -2411,9 +2398,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val (centroids, _) =
         operators.Ann.buildIvfCached(s, emb, cacheKey = dir, nCells = 8, maxIter = 3)
-      val layout = operators.Ann.cellLayout(s, emb,
-        new java.io.File(sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath,
-        centroids)
+      val layout = operators.Ann.cellLayout(s, emb, annLayoutDir, centroids)
       // Probe budget: probe coverage — not PQ quantization, absent
       // here — is the only recall loss of this exact-cosine probe. On
       // the isotropic synthetic corpus expected recall ≈ coverage
@@ -2477,9 +2462,7 @@ object SparkEntry {
         operators.Ann.buildIvfCached(s, emb, cacheKey = dir, nCells = 8, maxIter = 3)
       val books = operators.Ann.trainPqCodebooksCached(
         emb, cacheKey = dir, m = 8, dsub = 8, kStar = 16, maxIter = 5)
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.ivfPqLayout(s, emb, base, centroids, books)
+      val layout = operators.Ann.ivfPqLayout(s, emb, annLayoutDir, centroids, books)
       plans.AnnTopKRewrite.registerPq(embPath,
         plans.AnnTopKRewrite.RegisteredPqLayout(
           // Operating point from the r17 sweep (the AnnRuleSweep main,
@@ -2543,9 +2526,7 @@ object SparkEntry {
         operators.Ann.buildIvfCached(s, emb, cacheKey = dir, nCells = 8, maxIter = 3)
       val books = operators.Ann.trainPqCodebooksResidualCached(
         emb, cacheKey = dir, centroids, m = 8, dsub = 8, kStar = 16, maxIter = 5)
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.ivfPqResidualLayout(s, emb, base, centroids, books)
+      val layout = operators.Ann.ivfPqResidualLayout(s, emb, annLayoutDir, centroids, books)
       plans.AnnTopKRewrite.registerPq(embPath,
         plans.AnnTopKRewrite.RegisteredPqLayout(
           layout, centroids, books,
@@ -2608,9 +2589,7 @@ object SparkEntry {
         s, emb, cacheKey = dir, nCells = 8, maxIter = 3)
       val books = operators.Ann.trainPqCodebooksCached(
         emb, cacheKey = dir, m = 8, dsub = 8, kStar = 16, maxIter = 5)
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.ivfPqLayout(s, emb, base, centroids, books)
+      val layout = operators.Ann.ivfPqLayout(s, emb, annLayoutDir, centroids, books)
       val qs = emb.filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       operators.Ann.ivfPqTopK(s, layout, qs, centroids, books, k = 10, nProbe = 8)
@@ -2654,9 +2633,7 @@ object SparkEntry {
       val embRot = operators.Ann.rotated(emb, rot)
       val (centroids, _) = operators.Ann.buildIvfCached(
         s, embRot, cacheKey = s"$dir|opq", nCells = 8, maxIter = 3)
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.ivfPqLayout(s, embRot, base, centroids, books)
+      val layout = operators.Ann.ivfPqLayout(s, embRot, annLayoutDir, centroids, books)
       val qs = embRot.filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       operators.Ann.ivfPqTopK(s, layout, qs, centroids, books, k = 10, nProbe = 3)
@@ -2676,9 +2653,7 @@ object SparkEntry {
         s, emb, cacheKey = dir, nCells = 8, maxIter = 3)
       val books = operators.Ann.trainPqCodebooksCached(
         emb, cacheKey = dir, m = 8, dsub = 8, kStar = 16, maxIter = 5)
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.ivfPqLayout(s, emb, base, centroids, books)
+      val layout = operators.Ann.ivfPqLayout(s, emb, annLayoutDir, centroids, books)
       val qs = emb.filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       operators.Ann.ivfPqTopK(s, layout, qs, centroids, books, k = 10, nProbe = 3)
@@ -2699,9 +2674,7 @@ object SparkEntry {
         s, emb, cacheKey = dir, nCells = 8, maxIter = 3)
       val books = operators.Ann.trainPqCodebooksCached(
         emb, cacheKey = dir, m = 8, dsub = 8, kStar = 16, maxIter = 5)
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.ivfPqLayout(s, emb, base, centroids, books)
+      val layout = operators.Ann.ivfPqLayout(s, emb, annLayoutDir, centroids, books)
       val qs = emb.filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       operators.Ann.ivfPqTopKReranked(
@@ -2722,9 +2695,7 @@ object SparkEntry {
         s, emb, cacheKey = dir, nCells = 8, maxIter = 3)
       val books = operators.Ann.trainLocalPqCodebooksCached(
         emb, cacheKey = dir, centroids, m = 8, dsub = 8, kStar = 16, maxIter = 5)
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.ivfPqLocalLayout(s, emb, base, centroids, books)
+      val layout = operators.Ann.ivfPqLocalLayout(s, emb, annLayoutDir, centroids, books)
       val qs = emb.filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       operators.Ann.ivfPqLocalTopK(
@@ -2740,9 +2711,7 @@ object SparkEntry {
         s, emb, cacheKey = dir, nCells = 8, maxIter = 3)
       val books = operators.Ann.trainLocalPqCodebooksCached(
         emb, cacheKey = dir, centroids, m = 8, dsub = 8, kStar = 16, maxIter = 5)
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.ivfPqLocalLayout(s, emb, base, centroids, books)
+      val layout = operators.Ann.ivfPqLocalLayout(s, emb, annLayoutDir, centroids, books)
       val qs = emb.filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       operators.Ann.ivfPqLocalTopKReranked(
@@ -2765,9 +2734,7 @@ object SparkEntry {
         s, emb, cacheKey = dir, nCells = 8, maxIter = 3)
       val books = operators.Ann.trainPqCodebooksResidualCached(
         emb, cacheKey = dir, centroids, m = 8, dsub = 8, kStar = 16, maxIter = 5)
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.ivfPqResidualLayout(s, emb, base, centroids, books)
+      val layout = operators.Ann.ivfPqResidualLayout(s, emb, annLayoutDir, centroids, books)
       val qs = emb.filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       operators.Ann.ivfPqResidualTopK(
@@ -2788,9 +2755,7 @@ object SparkEntry {
         s, emb, cacheKey = dir, nCells = 8, maxIter = 3)
       val books = operators.Ann.trainPqCodebooksCached(
         emb, cacheKey = dir, m = 8, dsub = 8, kStar = 16, maxIter = 5)
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.ivfPqLayout(s, emb, base, centroids, books)
+      val layout = operators.Ann.ivfPqLayout(s, emb, annLayoutDir, centroids, books)
       val qs = emb.filter(col("vec_id") < 50)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       operators.Ann.ivfPqJoin(s, layout, qs, centroids, books, k = 5, nProbe = 3)
@@ -2810,9 +2775,7 @@ object SparkEntry {
         s, emb, cacheKey = dir, nCells = 8, maxIter = 3)
       val books = operators.Ann.trainPqCodebooksCached(
         emb, cacheKey = dir, m = 8, dsub = 8, kStar = 16, maxIter = 5)
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.ivfPqLayout(s, emb, base, centroids, books)
+      val layout = operators.Ann.ivfPqLayout(s, emb, annLayoutDir, centroids, books)
       val qs = emb.filter(col("vec_id") < 50)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       operators.Ann.ivfPqJoinAdaptive(s, layout, qs, centroids, books, k = 5)
@@ -2832,9 +2795,7 @@ object SparkEntry {
         s, emb, cacheKey = dir, nCells = 8, maxIter = 3)
       val books = operators.Ann.trainPqCodebooksResidualCached(
         emb, cacheKey = dir, centroids, m = 8, dsub = 8, kStar = 16, maxIter = 5)
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.ivfPqResidualLayout(s, emb, base, centroids, books)
+      val layout = operators.Ann.ivfPqResidualLayout(s, emb, annLayoutDir, centroids, books)
       val qs = emb.filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       operators.Ann.ivfPqResidualTopKReranked(
@@ -2856,8 +2817,7 @@ object SparkEntry {
         s, emb, cacheKey = dir, nCells = 8, maxIter = 3)
       val books = operators.Ann.trainPqCodebooksCached(
         emb, cacheKey = dir, m = 8, dsub = 8, kStar = 16, maxIter = 5)
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
+      val base = annLayoutDir
       val root = operators.Ann.ivfPqVersionedRoot(emb, base, centroids, books)
       // standing corpus vs a later ingest batch: deterministic hash split
       operators.Ann.ivfPqAppendBatch(s, root,

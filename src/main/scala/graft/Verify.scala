@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.operators.Layout.annLayoutDir
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -177,10 +178,7 @@ object Verify {
         emb, cacheKey = sfDir, m = 8, dsub = 8, kStar = 16, maxIter = 5)
       val (centroids, _) = operators.Ann.buildIvfCached(
         spark, emb, cacheKey = sfDir, nCells = 8, maxIter = 3)
-      val layout = operators.Ann.ivfPqLayout(
-        spark, emb,
-        new java.io.File(sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath,
-        centroids, books)
+      val layout = operators.Ann.ivfPqLayout(spark, emb, annLayoutDir, centroids, books)
       val qsIvf = emb.filter(col("vec_id") < nq)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       // Measured over 200 query-neighbor pairs on the driver's corpora
@@ -255,10 +253,7 @@ object Verify {
         val embRotV = operators.Ann.rotated(emb, opqRot)
         val (centsR, _) = operators.Ann.buildIvfCached(
           spark, embRotV, cacheKey = s"$sfDir|opq", nCells = 8, maxIter = 3)
-        val layoutR = operators.Ann.ivfPqLayout(
-          spark, embRotV,
-          new java.io.File(sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath,
-          centsR, opqBooks)
+        val layoutR = operators.Ann.ivfPqLayout(spark, embRotV, annLayoutDir, centsR, opqBooks)
         val qsRot = embRotV.filter(col("vec_id") < nq)
           .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
         val got = operators.Ann.ivfPqTopK(
@@ -278,9 +273,7 @@ object Verify {
       val resBooks = operators.Ann.trainPqCodebooksResidualCached(
         emb, cacheKey = sfDir, centroids, m = 8, dsub = 8, kStar = 16, maxIter = 5)
       val resLayout = operators.Ann.ivfPqResidualLayout(
-        spark, emb,
-        new java.io.File(sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath,
-        centroids, resBooks)
+        spark, emb, annLayoutDir, centroids, resBooks)
       val residualApprox = operators.Ann.ivfPqResidualTopK(
         spark, resLayout, qsIvf, centroids, resBooks, k = 10, nProbe = 3)
         .select("query_id", "vec_id").collect()
@@ -308,9 +301,7 @@ object Verify {
       val localBooks = operators.Ann.trainLocalPqCodebooksCached(
         emb, cacheKey = sfDir, centroids, m = 8, dsub = 8, kStar = 16, maxIter = 5)
       val localLayout = operators.Ann.ivfPqLocalLayout(
-        spark, emb,
-        new java.io.File(sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath,
-        centroids, localBooks)
+        spark, emb, annLayoutDir, centroids, localBooks)
       val localApprox = operators.Ann.ivfPqLocalTopK(
         spark, localLayout, qsIvf, centroids, localBooks, k = 10, nProbe = 3)
         .select("query_id", "vec_id").collect()
@@ -380,9 +371,7 @@ object Verify {
       // same (sim desc, vec_id) cut — row for row including the raw
       // double sim.
       {
-        val cellPath = operators.Ann.cellLayout(spark, emb,
-          new java.io.File(sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath,
-          centroids)
+        val cellPath = operators.Ann.cellLayout(spark, emb, annLayoutDir, centroids)
         val joined = operators.Ann.ivfJoin(
           spark, cellPath, qsIvf, centroids, k = 10, nProbe = 3)
           .select("query_id", "rank", "vec_id", "sim").collect()
@@ -402,10 +391,7 @@ object Verify {
       // (same Hamming-2 probe ball, same codegen cosine, same cut) —
       // raw doubles included.
       {
-        val sigPath = operators.Ann.signaturePartitionedLayout(
-          spark, emb,
-          new java.io.File(sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath,
-          nBits = 8)
+        val sigPath = operators.Ann.signaturePartitionedLayout(spark, emb, annLayoutDir, nBits = 8)
         val joined = operators.Ann.lshJoin(
           spark, sigPath, qsIvf, k = 10, nBits = 8, probeBits = 2)
           .select("query_id", "rank", "vec_id", "sim").collect()
@@ -463,8 +449,7 @@ object Verify {
         // 0.884/0.872 recall at 4.2/4.3 mean probes vs fixed-3's
         // 0.776/0.736 and fixed-4's 0.868/0.848 at sf0.01/sf0.1 —
         // above the fixed frontier at its own spend).
-        val base = new java.io.File(
-          sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
+        val base = annLayoutDir
         val cellPath = operators.Ann.cellLayout(spark, emb, base, centroids)
         val qs50 = emb.filter(col("vec_id") < 50)
           .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
@@ -503,8 +488,7 @@ object Verify {
       // calls here are no-op re-deliveries proving idempotency on the
       // driver's own run.
       {
-        val baseDir = new java.io.File(
-          sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
+        val baseDir = annLayoutDir
         val root = operators.Ann.ivfPqVersionedRoot(emb, baseDir, centroids, books)
         operators.Ann.ivfPqAppendBatch(spark, root,
           emb.filter(pmod(hash(col("vec_id")), lit(5)) =!= 0), centroids, books, "base")

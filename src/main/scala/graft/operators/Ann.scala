@@ -304,9 +304,7 @@ object Ann {
   private[graft] def keyStats(
       spark: SparkSession, path: String, key: String): DataFrame = {
     val sp = statsPath(path, key)
-    val success = new org.apache.hadoop.fs.Path(sp, "_SUCCESS")
-    val fs = success.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(success)) writeKeyStats(spark, path, key)
+    Layout.onceAt(spark, sp)(_ => writeKeyStats(spark, path, key))
     spark.read.parquet(sp)
   }
 
@@ -390,10 +388,7 @@ object Ann {
       spark: SparkSession, path: String, key: String,
       hotKeyCap: Int, maxSalt: Int): Seq[(Int, Int)] = {
     val sp = statsPath(path, key)
-    val success = new org.apache.hadoop.fs.Path(sp, "_SUCCESS")
-    val fs = success.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(success)) writeKeyStats(spark, path, key)
-    val mtime = fs.getFileStatus(success).getModificationTime
+    val mtime = Layout.onceAt(spark, sp)(_ => writeKeyStats(spark, path, key))
     val hot = hotStatsCache.computeIfAbsent((sp, key, hotKeyCap, mtime),
       _ => spark.read.parquet(sp).filter(col("n") > hotKeyCap)
         .select(col(key), col("n"))
@@ -651,45 +646,38 @@ object Ann {
     lshPartitionedCore(spark, path, queries, k,
       v => adaptiveProbes(v, nBits, nProbes).toSeq)
 
-  /** Build-once [[writeSignaturePartitioned]] layout keyed by a corpus
-    * content fingerprint — the index-build half of partitioned ANN. The
-    * layout is written ONCE per corpus content and probed by every
-    * subsequent query (the production lifecycle: a 100 TB layout write
-    * is a batch job, not a per-query cost), so repeated calls over an
-    * unchanged corpus return the existing directory. The fingerprint
-    * (row count + order-insensitive `bit_xor(xxhash64(...))`, the same
-    * discipline as [[buildIvfCached]]) is part of the path, so a mutated
-    * corpus gets a fresh layout and stale probes are impossible. The
-    * `sigm` prefix keeps these murmur-signature layouts apart from the
-    * retired squared-Lehmer `sig` layouts an older build may have left
-    * under the same base directory: the path carries no signature
-    * family, so reusing `sig` would probe a stale layout. Returns the
-    * layout path for [[lshTopKPartitioned]] /
-    * [[lshTopKPartitionedAdaptive]] / [[lshJoin]].
+  /** Build-once ([[Layout.memoLayout]]) [[writeSignaturePartitioned]]
+    * layout — the index-build half of partitioned ANN: a 100 TB layout
+    * write is a batch job, not a per-query cost. The `sigm` prefix keeps
+    * these murmur-signature layouts apart from the retired
+    * squared-Lehmer `sig` layouts an older build may have left under the
+    * same base directory: the path carries no signature family, so
+    * reusing `sig` would probe a stale layout. Returns the layout path
+    * for [[lshTopKPartitioned]] / [[lshTopKPartitionedAdaptive]] /
+    * [[lshJoin]].
     */
   def signaturePartitionedLayout(
       spark: SparkSession,
       corpus: DataFrame,
       baseDir: String,
-      nBits: Int = 8): String = {
-    val fpRow = corpus.agg(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(vec_id, embedding))"), lit(0L)).as("fp"))
-      .head()
-    val path = s"$baseDir/sigm${nBits}_n${fpRow.getLong(0)}" +
-      s"_fp${java.lang.Long.toHexString(fpRow.getLong(1))}"
-    // Existence through Hadoop's FileSystem, not java.io.File, so the
-    // build-once contract holds on HDFS/S3 too (a local-only check would
-    // silently rebuild the layout on every call there). Concurrent
-    // FIRST-build callers must be externally serialized — two writers
-    // racing mode("overwrite") into one directory is not safe on any
-    // filesystem; once _SUCCESS exists, readers never observe a write.
-    val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = success.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(success))
-      writeSignaturePartitioned(corpus, path, nBits)
-    path
-  }
+      nBits: Int = 8): String =
+    Layout.memoLayout(spark, corpus, baseDir, s"sigm$nBits", vecCols)(
+      writeSignaturePartitioned(corpus, _, nBits))
+
+  /** The columns a vector corpus is fingerprinted over. */
+  private val vecCols = Seq("vec_id", "embedding")
+
+  private def corpusFp(corpus: DataFrame): Layout.Fingerprint =
+    Layout.fingerprint(corpus, vecCols: _*)
+
+  /** Hash of the index structures an artifact was built under: the
+    * centroids, then `books` in order. Names `_ix<hex>` layouts and the
+    * `res`/`lopq` memo-key segments, so retrained cells or books never
+    * reuse codes encoded under the old ones.
+    */
+  private def indexFp(
+      centroids: Array[Array[Float]], books: Iterator[Double] = Iterator.empty): Int =
+    MurmurHash3.orderedHash(centroids.iterator.flatten.map(_.toDouble) ++ books)
 
   private def lshPartitionedCore(
       spark: SparkSession,
@@ -779,35 +767,6 @@ object Ann {
     corpus.withColumn("cell",
       VectorExpressions.ivfCellAssign(col("embedding"), centroids))
 
-  /** The closure form [[assignCells]] compiled before r16 — kept ONLY as
-    * the bit-identity reference for VectorExpressionsSpec (the spec pins
-    * kernel == closure on adversarial vectors; production paths all go
-    * through the kernel).
-    */
-  private[graft] def assignCellsClosure(
-      corpus: DataFrame, centroids: Array[Array[Float]]): DataFrame = {
-    val dim = centroids.head.length
-    val assign = udf { (v: Seq[Float]) =>
-      var best = 0; var bestSim = Double.MinValue
-      var c = 0
-      while (c < centroids.length) {
-        var dot = 0.0; var na = 0.0; var nb = 0.0
-        var i = 0
-        while (i < dim) {
-          val x = v(i).toDouble; val y = centroids(c)(i).toDouble
-          dot += x * y; na += x * x; nb += y * y
-          i += 1
-        }
-        val den = math.sqrt(na) * math.sqrt(nb)
-        val sim = if (den == 0) 0.0 else dot / den
-        if (sim > bestSim) { bestSim = sim; best = c }
-        c += 1
-      }
-      best
-    }
-    corpus.withColumn("cell", assign(col("embedding")))
-  }
-
   // Centroid memo: an IVF index is built once and probed many times, so
   // repeated invocations over the same corpus must not re-run Lloyd.
   // Only the centroid ARRAYS are cached (pure driver-side floats, a few
@@ -816,17 +775,10 @@ object Ann {
   private val centroidCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Float]]]()
 
-  /** [[buildIvf]] with the Lloyd result memoized under `cacheKey` PLUS a
-    * content fingerprint, so a corpus that mutates under a reused key can
-    * never be served stale centroids (the r4-documented-but-unenforced
-    * contract). The fingerprint is order-insensitive —
-    * `bit_xor(xxhash64(vec_id, embedding))` + count — one cheap
-    * column-pruned scan per call (vec_id + embedding only, no shuffle:
-    * partial XORs combine associatively map-side). That one pass is the
-    * price of safety and is still maxIter× cheaper than re-running Lloyd;
-    * callers that cannot afford any scan per probe batch should hold the
-    * returned centroids themselves and manage the index lifecycle
-    * explicitly via [[buildIvf]].
+  /** [[buildIvf]] with the Lloyd result memoized under `cacheKey` plus
+    * the corpus fingerprint ([[Layout.fingerprint]]); the one
+    * fingerprint job per call is still maxIter× cheaper than re-running
+    * Lloyd.
     */
   def buildIvfCached(
       spark: SparkSession,
@@ -834,11 +786,7 @@ object Ann {
       cacheKey: String,
       nCells: Int,
       maxIter: Int = 5): (Array[Array[Float]], DataFrame) = {
-    val fpRow = corpus.agg(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(vec_id, embedding))"), lit(0L)).as("fp"))
-      .head()
-    val key = s"$cacheKey|${fpRow.getLong(0)}|${fpRow.getLong(1)}|$nCells|$maxIter"
+    val key = s"$cacheKey|${corpusFp(corpus).key}|$nCells|$maxIter"
     val centroids = centroidCache.computeIfAbsent(key,
       _ => buildIvf(spark, corpus, nCells, maxIter)._1)
     graft.AnnOracle.captureCentroids(key, centroids)
@@ -888,32 +836,19 @@ object Ann {
     writeKeyStats(corpus.sparkSession, path, "cell")
   }
 
-  /** Build-once [[writeCellPartitioned]] layout under a
-    * fingerprint-keyed directory (same marker-gated contract as
-    * [[signaturePartitionedLayout]]) — the registered probe target of
-    * the ANN top-k optimizer rule ([[graft.plans.AnnTopKRewrite]]):
-    * corpus rows plus the `cell` partition column, so a rewritten
-    * brute-force top-k recomputes the exact same cosine over only the
-    * probed cells' directories.
+  /** Build-once ([[Layout.memoLayout]]) [[writeCellPartitioned]]
+    * layout — the registered probe target of the ANN top-k optimizer
+    * rule ([[graft.plans.AnnTopKRewrite]]): corpus rows plus the `cell`
+    * partition column, so a rewritten brute-force top-k recomputes the
+    * exact same cosine over only the probed cells' directories.
     */
   def cellLayout(
       spark: SparkSession,
       corpus: DataFrame,
       baseDir: String,
-      centroids: Array[Array[Float]]): String = {
-    val fpRow = corpus.agg(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(vec_id, embedding))"), lit(0L)).as("fp"))
-      .head()
-    val idxFp = MurmurHash3.orderedHash(centroids.iterator.flatten.map(_.toDouble))
-    val path = s"$baseDir/cells${centroids.length}_n${fpRow.getLong(0)}" +
-      s"_fp${java.lang.Long.toHexString(fpRow.getLong(1))}_ix${Integer.toHexString(idxFp)}"
-    val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = success.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(success))
-      writeCellPartitioned(corpus, centroids, path)
-    path
-  }
+      centroids: Array[Array[Float]]): String =
+    Layout.memoLayout(spark, corpus, baseDir, s"cells${centroids.length}", vecCols,
+      Some(indexFp(centroids)))(writeCellPartitioned(corpus, centroids, _))
 
   /** [[ivfTopK]] over a [[writeCellPartitioned]] layout: probe cells are
     * computed driver-side from the tiny centroid set, so the cell filter
@@ -1296,17 +1231,12 @@ object Ann {
     cents.map(_.map(_.toSeq).toSeq).toSeq
   }
 
-  // PQ codebook memo: same lifecycle as the IVF centroid cache — train
-  // once per corpus snapshot, probe many times; keyed by a content
-  // fingerprint so a mutated corpus can never be served stale books.
+  // PQ codebook memo (build-once: see Layout.fingerprint).
   private val pqBookCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Seq[Double]]]]()
 
-  /** [[trainPqCodebooks]] memoized under `cacheKey` plus the same
-    * order-insensitive content fingerprint as [[buildIvfCached]]: one
-    * cheap column-pruned scan per call replaces the full Lloyd rerun —
-    * the PQ index is built once per corpus snapshot and every ADC scan
-    * after that only pays encode+scan.
+  /** [[trainPqCodebooks]] memoized under `cacheKey` plus the corpus
+    * fingerprint ([[Layout.fingerprint]]).
     */
   def trainPqCodebooksCached(
       corpus: DataFrame,
@@ -1315,11 +1245,7 @@ object Ann {
       dsub: Int,
       kStar: Int,
       maxIter: Int = 5): Seq[Seq[Seq[Double]]] = {
-    val fpRow = corpus.agg(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(vec_id, embedding))"), lit(0L)).as("fp"))
-      .head()
-    val key = s"$cacheKey|${fpRow.getLong(0)}|${fpRow.getLong(1)}|$m|$dsub|$kStar|$maxIter"
+    val key = s"$cacheKey|${corpusFp(corpus).key}|$m|$dsub|$kStar|$maxIter"
     val books = pqBookCache.computeIfAbsent(key,
       _ => trainPqCodebooks(corpus, m, dsub, kStar, maxIter))
     graft.AnnOracle.globalBooks.put(key, books)
@@ -1656,8 +1582,8 @@ object Ann {
   private val opqCache = new java.util.concurrent.ConcurrentHashMap[
     String, (Array[Array[Float]], Seq[Seq[Seq[Double]]])]()
 
-  /** [[trainOpq]] memoized under `cacheKey` + the corpus content
-    * fingerprint — the [[trainPqCodebooksCached]] lifecycle.
+  /** [[trainOpq]] memoized under `cacheKey` plus the corpus
+    * fingerprint ([[Layout.fingerprint]]).
     */
   def trainOpqCached(
       corpus: DataFrame,
@@ -1667,11 +1593,7 @@ object Ann {
       kStar: Int,
       opqIters: Int = 8,
       lloydIters: Int = 8): (Array[Array[Float]], Seq[Seq[Seq[Double]]]) = {
-    val fpRow = corpus.agg(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(vec_id, embedding))"), lit(0L)).as("fp"))
-      .head()
-    val key = s"opq|$cacheKey|${fpRow.getLong(0)}|${fpRow.getLong(1)}|$m|$dsub|$kStar|$opqIters|$lloydIters"
+    val key = s"opq|$cacheKey|${corpusFp(corpus).key}|$m|$dsub|$kStar|$opqIters|$lloydIters"
     val pair = opqCache.computeIfAbsent(key,
       _ => trainOpq(corpus, m, dsub, kStar, opqIters, lloydIters))
     graft.AnnOracle.opqRotation.put(key, pair._1)
@@ -1841,35 +1763,21 @@ object Ann {
     writeKeyStats(corpus.sparkSession, path, "cell")
   }
 
-  /** Build-once [[writeIvfPqPartitioned]] layout keyed by the corpus
-    * content fingerprint AND an index fingerprint (centroids + codebooks
-    * hashed), the same lifecycle discipline as
-    * [[signaturePartitionedLayout]]: an unchanged (corpus, index) pair
-    * reuses the existing directory; a mutated corpus — or retrained
-    * centroids/codebooks — gets a fresh path, so stale probes are
-    * impossible. Returns the layout path for [[ivfPqTopK]].
+  /** Build-once ([[Layout.memoLayout]]) [[writeIvfPqPartitioned]]
+    * layout, keyed by the corpus AND the index (centroids + codebooks,
+    * [[indexFp]]): retrained centroids or codebooks get a fresh path.
+    * Returns the layout path for [[ivfPqTopK]].
     */
   def ivfPqLayout(
       spark: SparkSession,
       corpus: DataFrame,
       baseDir: String,
       centroids: Array[Array[Float]],
-      codebooks: Seq[Seq[Seq[Double]]]): String = {
-    val fpRow = corpus.agg(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(vec_id, embedding))"), lit(0L)).as("fp"))
-      .head()
-    val idxFp = MurmurHash3.orderedHash(
-      centroids.iterator.flatten.map(_.toDouble) ++ codebooks.iterator.flatten.flatten)
-    val path = s"$baseDir/ivfpq_c${centroids.length}_m${codebooks.length}" +
-      s"_n${fpRow.getLong(0)}_fp${java.lang.Long.toHexString(fpRow.getLong(1))}" +
-      s"_ix${Integer.toHexString(idxFp)}"
-    val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = success.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(success))
-      writeIvfPqPartitioned(corpus, centroids, codebooks, path)
-    path
-  }
+      codebooks: Seq[Seq[Seq[Double]]]): String =
+    Layout.memoLayout(spark, corpus, baseDir,
+      s"ivfpq_c${centroids.length}_m${codebooks.length}", vecCols,
+      Some(indexFp(centroids, codebooks.iterator.flatten.flatten)))(
+      writeIvfPqPartitioned(corpus, centroids, codebooks, _))
 
   /** IVF-PQ top-k over a [[writeIvfPqPartitioned]] layout: probe cells
     * are computed driver-side from the tiny centroid set (a STATIC
@@ -2154,12 +2062,8 @@ object Ann {
       dsub: Int,
       kStar: Int,
       maxIter: Int = 5): Seq[Seq[Seq[Double]]] = {
-    val fpRow = corpus.agg(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(vec_id, embedding))"), lit(0L)).as("fp"))
-      .head()
-    val cFp = MurmurHash3.orderedHash(centroids.iterator.flatten.map(_.toDouble))
-    val key = s"$cacheKey|res$cFp|${fpRow.getLong(0)}|${fpRow.getLong(1)}|$m|$dsub|$kStar|$maxIter"
+    val key = s"$cacheKey|res${indexFp(centroids)}|${corpusFp(corpus).key}" +
+      s"|$m|$dsub|$kStar|$maxIter"
     val books = pqBookCache.computeIfAbsent(key,
       _ => trainPqCodebooksResidual(corpus, centroids, m, dsub, kStar, maxIter))
     graft.AnnOracle.residualBooks.put(key, books)
@@ -2182,32 +2086,20 @@ object Ann {
     writeKeyStats(corpus.sparkSession, path, "cell")
   }
 
-  /** Build-once [[writeIvfPqResidualPartitioned]] layout, fingerprint
-    * discipline of [[ivfPqLayout]] (distinct path prefix — a residual
-    * layout and a raw-code layout of the same corpus+index never
-    * collide).
+  /** Build-once [[writeIvfPqResidualPartitioned]] layout, keyed as
+    * [[ivfPqLayout]] (distinct path prefix — a residual layout and a
+    * raw-code layout of the same corpus+index never collide).
     */
   def ivfPqResidualLayout(
       spark: SparkSession,
       corpus: DataFrame,
       baseDir: String,
       centroids: Array[Array[Float]],
-      codebooks: Seq[Seq[Seq[Double]]]): String = {
-    val fpRow = corpus.agg(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(vec_id, embedding))"), lit(0L)).as("fp"))
-      .head()
-    val idxFp = MurmurHash3.orderedHash(
-      centroids.iterator.flatten.map(_.toDouble) ++ codebooks.iterator.flatten.flatten)
-    val path = s"$baseDir/ivfpqr_c${centroids.length}_m${codebooks.length}" +
-      s"_n${fpRow.getLong(0)}_fp${java.lang.Long.toHexString(fpRow.getLong(1))}" +
-      s"_ix${Integer.toHexString(idxFp)}"
-    val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = success.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(success))
-      writeIvfPqResidualPartitioned(corpus, centroids, codebooks, path)
-    path
-  }
+      codebooks: Seq[Seq[Seq[Double]]]): String =
+    Layout.memoLayout(spark, corpus, baseDir,
+      s"ivfpqr_c${centroids.length}_m${codebooks.length}", vecCols,
+      Some(indexFp(centroids, codebooks.iterator.flatten.flatten)))(
+      writeIvfPqResidualPartitioned(corpus, centroids, codebooks, _))
 
   /** Residual-encoded IVF-PQ top-k (IVFADC proper): the probed frame
     * already carries each candidate row's `cell`, so the ADC lookup
@@ -2300,7 +2192,7 @@ object Ann {
     new java.util.concurrent.ConcurrentHashMap[String, Map[Int, Seq[Seq[Seq[Double]]]]]()
 
   /** [[trainLocalPqCodebooks]] memoized under the corpus fingerprint +
-    * centroid hash (the [[trainPqCodebooksResidualCached]] lifecycle).
+    * centroid hash, as [[trainPqCodebooksResidualCached]].
     */
   def trainLocalPqCodebooksCached(
       corpus: DataFrame,
@@ -2311,12 +2203,7 @@ object Ann {
       kStar: Int,
       maxIter: Int = 5,
       maxPerCell: Int = 2000): Map[Int, Seq[Seq[Seq[Double]]]] = {
-    val fpRow = corpus.agg(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(vec_id, embedding))"), lit(0L)).as("fp"))
-      .head()
-    val cFp = MurmurHash3.orderedHash(centroids.iterator.flatten.map(_.toDouble))
-    val key = s"$cacheKey|lopq$cFp|${fpRow.getLong(0)}|${fpRow.getLong(1)}" +
+    val key = s"$cacheKey|lopq${indexFp(centroids)}|${corpusFp(corpus).key}" +
       s"|$m|$dsub|$kStar|$maxIter|$maxPerCell"
     val books = localBookCache.computeIfAbsent(key,
       _ => trainLocalPqCodebooks(corpus, centroids, m, dsub, kStar, maxIter, maxPerCell))
@@ -2388,7 +2275,7 @@ object Ann {
   }
 
   /** Build-once [[writeIvfPqLocalPartitioned]] layout (distinct
-    * `ivfpqlo_` prefix; fingerprint covers corpus, centroids and every
+    * `ivfpqlo_` prefix; the index hash covers the centroids and every
     * cell's books in cell order).
     */
   def ivfPqLocalLayout(
@@ -2396,24 +2283,11 @@ object Ann {
       corpus: DataFrame,
       baseDir: String,
       centroids: Array[Array[Float]],
-      localBooks: Map[Int, Seq[Seq[Seq[Double]]]]): String = {
-    val fpRow = corpus.agg(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(vec_id, embedding))"), lit(0L)).as("fp"))
-      .head()
-    val idxFp = MurmurHash3.orderedHash(
-      centroids.iterator.flatten.map(_.toDouble) ++
-        localBooks.toSeq.sortBy(_._1).iterator.flatMap(
-          kv => Iterator(kv._1.toDouble) ++ kv._2.iterator.flatten.flatten))
-    val path = s"$baseDir/ivfpqlo_c${centroids.length}" +
-      s"_n${fpRow.getLong(0)}_fp${java.lang.Long.toHexString(fpRow.getLong(1))}" +
-      s"_ix${Integer.toHexString(idxFp)}"
-    val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = success.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(success))
-      writeIvfPqLocalPartitioned(corpus, centroids, localBooks, path)
-    path
-  }
+      localBooks: Map[Int, Seq[Seq[Seq[Double]]]]): String =
+    Layout.memoLayout(spark, corpus, baseDir, s"ivfpqlo_c${centroids.length}", vecCols,
+      Some(indexFp(centroids, localBooks.toSeq.sortBy(_._1).iterator.flatMap(
+        kv => Iterator(kv._1.toDouble) ++ kv._2.iterator.flatten.flatten))))(
+      writeIvfPqLocalPartitioned(corpus, centroids, localBooks, _))
 
   /** [[ivfPqResidualTopK]] under per-cell books: the (query, probed
     * cell) LUT is built from the query residual with THAT CELL's
@@ -2481,10 +2355,9 @@ object Ann {
     * the write touches ONLY the new batch's directory — the standing
     * corpus is never rewritten, the daily-crawl lifecycle the dedup tier
     * already has ([[Dedup.lineIndex]] et al.) extended to the vector
-    * index. Idempotent and crash-safe: an existing `_SUCCESS` under the
-    * batch directory skips the write entirely (re-delivered batches
-    * cannot double-insert), and a crashed write without the marker is
-    * simply overwritten on retry. Readers discover `batch`/`cell` as
+    * index. Idempotent and crash-safe ([[Layout.onceAt]]): re-delivered
+    * batches cannot double-insert, and a crashed write without the
+    * marker is simply overwritten on retry. Readers discover `batch`/`cell` as
     * partition columns; cell pruning works ACROSS batches (the probe's
     * static `isin` on `cell` prunes every batch's unprobed cells).
     * Centroids/codebooks are NOT retrained per batch — the standard
@@ -2497,38 +2370,28 @@ object Ann {
       batch: DataFrame,
       centroids: Array[Array[Float]],
       codebooks: Seq[Seq[Seq[Double]]],
-      batchId: String): Unit = {
-    val dir = s"$rootPath/batch=$batchId"
-    val success = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-    val fs = success.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(success))
+      batchId: String): Unit =
+    Layout.onceAt(spark, s"$rootPath/batch=$batchId")(
       assignCells(batch, centroids)
         .select(col("vec_id") +: pqCodeCols(codebooks) :+ col("cell"): _*)
         .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(dir)
-  }
+        .write.mode("overwrite").partitionBy("cell").parquet(_))
 
   /** Tombstone-delete from a versioned IVF-PQ root: victim ids land in
     * `root/_tombstones/delfp=<fingerprint>/` (underscore-prefixed, so
     * partition discovery of the code tree never sees them) and readers
     * anti-join them out — the delete-vector pattern of LSM/lakehouse
     * formats: no data file is rewritten at delete time; [[ivfPqCompact]]
-    * folds tombstones in physically. Content-fingerprint keyed and
-    * `_SUCCESS`-gated like the batch append: re-deleting the same victim
-    * set is a no-op, and a crashed write is overwritten on retry.
+    * folds tombstones in physically. Keyed by the victims' fingerprint
+    * and gated like the batch append: re-deleting the same victim set is
+    * a no-op, and a crashed write is overwritten on retry.
     */
   def ivfPqDeleteByKey(
       spark: SparkSession, rootPath: String, victims: DataFrame): Unit = {
-    val fpRow = victims.agg(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(vec_id))"), lit(0L)).as("fp"))
-      .head()
-    val dir = s"$rootPath/_tombstones/delfp=" +
-      s"${fpRow.getLong(0)}x${java.lang.Long.toHexString(fpRow.getLong(1))}"
-    val success = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-    val fs = success.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(success))
-      victims.select("vec_id").write.mode("overwrite").parquet(dir)
+    val fp = Layout.fingerprint(victims, "vec_id")
+    Layout.onceAt(spark,
+      s"$rootPath/_tombstones/delfp=${fp.n}x${java.lang.Long.toHexString(fp.fp)}")(
+      victims.select("vec_id").write.mode("overwrite").parquet(_))
   }
 
   /** The LIVE code rows of a versioned root: every batch's codes
@@ -2587,28 +2450,21 @@ object Ann {
       .select("query_id", "rank", "vec_id", "adc_dist")
   }
 
-  /** The canonical VERSIONED-root path for a (corpus, index) pair — the
-    * same fingerprint discipline as [[ivfPqLayout]] (prefix `ivfpqv_`),
-    * but computed WITHOUT writing: the root is populated by
-    * [[ivfPqAppendBatch]] calls, each marker-gated, so repeated
-    * pipeline runs over an unchanged corpus+index converge on the same
-    * directory tree with every write skipped.
+  /** The canonical VERSIONED-root path for a (corpus, index) pair —
+    * keyed as [[ivfPqLayout]] (prefix `ivfpqv_`), but computed WITHOUT
+    * writing: the root is populated by [[ivfPqAppendBatch]] calls, each
+    * marker-gated, so repeated pipeline runs over an unchanged
+    * corpus+index converge on the same directory tree with every write
+    * skipped.
     */
   def ivfPqVersionedRoot(
       corpus: DataFrame,
       baseDir: String,
       centroids: Array[Array[Float]],
-      codebooks: Seq[Seq[Seq[Double]]]): String = {
-    val fpRow = corpus.agg(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(vec_id, embedding))"), lit(0L)).as("fp"))
-      .head()
-    val idxFp = MurmurHash3.orderedHash(
-      centroids.iterator.flatten.map(_.toDouble) ++ codebooks.iterator.flatten.flatten)
-    s"$baseDir/ivfpqv_c${centroids.length}_m${codebooks.length}" +
-      s"_n${fpRow.getLong(0)}_fp${java.lang.Long.toHexString(fpRow.getLong(1))}" +
-      s"_ix${Integer.toHexString(idxFp)}"
-  }
+      codebooks: Seq[Seq[Seq[Double]]]): String =
+    Layout.layoutPath(corpus, baseDir,
+      s"ivfpqv_c${centroids.length}_m${codebooks.length}", vecCols,
+      Some(indexFp(centroids, codebooks.iterator.flatten.flatten)))
 
   /** Compact a versioned root into a fresh single-batch root: live rows
     * (all batches minus tombstones) rewritten as `batch=base`, cell

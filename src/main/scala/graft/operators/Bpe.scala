@@ -448,23 +448,22 @@ object Bpe {
     merges.toSeq
   }
 
-  private val mergeCache =
+  private[graft] val mergeCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String, Long)]]()
 
-  /** [[learnMerges]] memoized on a corpus fingerprint — same discipline
-    * as the PQ codebook cache: registry queries and the Verify gate that
-    * share a corpus train once per JVM, and a corpus CHANGE (count or
-    * content hash) retrains rather than serving stale merges.
+  /** The (doc_id, text) fingerprint every text-model memo keys on. */
+  private[graft] def docsFp(docs: DataFrame): Layout.Fingerprint =
+    Layout.fingerprint(docs, "doc_id", "text")
+
+  /** [[learnMerges]] memoized on the corpus fingerprint
+    * ([[Layout.fingerprint]]): registry queries and the Verify gate that
+    * share a corpus train once per JVM.
     */
   def learnMergesCached(
       docs: DataFrame,
       cacheKey: String,
       nMerges: Int): Seq[(String, String, Long)] = {
-    val fpRow = docs.agg(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(doc_id, text))"), lit(0L)).as("fp"))
-      .head()
-    val key = s"$cacheKey|${fpRow.getLong(0)}|${fpRow.getLong(1)}|$nMerges"
+    val key = s"$cacheKey|${docsFp(docs).key}|$nMerges"
     mergeCache.computeIfAbsent(key, _ => learnMerges(docs, nMerges))
   }
 
@@ -479,11 +478,7 @@ object Bpe {
       cacheKey: String,
       nMerges: Int,
       maxOverlayRows: Long = 250000L): Seq[(String, String, Long)] = {
-    val fpRow = docs.agg(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(doc_id, text))"), lit(0L)).as("fp"))
-      .head()
-    val key = s"inc|$cacheKey|${fpRow.getLong(0)}|${fpRow.getLong(1)}|$nMerges|$maxOverlayRows"
+    val key = s"inc|$cacheKey|${docsFp(docs).key}|$nMerges|$maxOverlayRows"
     mergeCache.computeIfAbsent(key, _ =>
       learnMergesIncremental(docs, nMerges, maxOverlayRows))
   }
@@ -621,23 +616,18 @@ object Bpe {
         encodeTokensCol(col("text"), merges, ids).as("token_ids"))
       .withColumn("n_tokens", size(col("token_ids")).cast("long"))
 
-  private val idsCache =
+  private[graft] val idsCache =
     new java.util.concurrent.ConcurrentHashMap[String, Map[String, Int]]()
 
   /** [[alphabet]] + [[vocabIds]] memoized on the corpus fingerprint and
-    * merge table — same discipline as [[learnMergesCached]]: registry
-    * queries, bench iterations and the Verify gate share one alphabet
-    * collect per JVM.
+    * merge table: registry queries, bench iterations and the Verify gate
+    * share one alphabet collect per JVM.
     */
   def vocabIdsCached(
       docs: DataFrame,
       cacheKey: String,
       merges: Seq[(String, String)]): Map[String, Int] = {
-    val fpRow = docs.agg(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(doc_id, text))"), lit(0L)).as("fp"))
-      .head()
-    val key = s"$cacheKey|${fpRow.getLong(0)}|${fpRow.getLong(1)}|${merges.hashCode()}"
+    val key = s"$cacheKey|${docsFp(docs).key}|${merges.hashCode()}"
     idsCache.computeIfAbsent(key, _ => vocabIds(alphabet(docs), merges))
   }
 }

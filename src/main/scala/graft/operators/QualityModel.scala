@@ -173,13 +173,12 @@ object QualityModel {
     w
   }
 
-  private val weightCache =
+  private[graft] val weightCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[Long]]()
 
-  /** [[train]] memoized on the two corpora's fingerprints — same
-    * discipline as the PQ codebook and BPE merge caches: registry query,
-    * bench iterations, and the Verify gate share one training run per
-    * JVM; any corpus change retrains.
+  /** [[train]] memoized on the two corpora's fingerprints
+    * ([[Layout.fingerprints]]): registry query, bench iterations, and
+    * the Verify gate share one training run per JVM.
     */
   def trainCached(
       target: DataFrame,
@@ -189,17 +188,11 @@ object QualityModel {
       iters: Int = 60,
       lr: Double = 300.0,
       portable: Boolean = false): Seq[Long] = {
-    // BOTH corpus fingerprints in ONE job (r19, guide §2.4): the two
-    // separate head() aggregations were the per-invocation fixed cost
-    // of every cache hit. Same per-side count/xor values, so the cache
-    // key format (and therefore the memoized trainings) are unchanged.
-    val fps = target.select(lit(0).as("_fp_side"), col("doc_id"), col("text"))
-      .unionByName(raw.select(lit(1).as("_fp_side"), col("doc_id"), col("text")))
-      .groupBy("_fp_side")
-      .agg(count(lit(1)).as("n"),
-        coalesce(expr("bit_xor(xxhash64(doc_id, text))"), lit(0L)).as("x"))
-      .collect().map(r => r.getInt(0) -> s"${r.getLong(1)}_${r.getLong(2)}")
-      .toMap.withDefaultValue("0_0")
+    // BOTH corpus fingerprints in ONE job (r19, guide §2.4): two
+    // separate fingerprint jobs were the per-invocation fixed cost of
+    // every cache hit.
+    val fps = Layout.fingerprints(Seq(target, raw), "doc_id", "text")
+      .map(f => s"${f.n}_${f.fp}")
     val key = s"$cacheKey|${fps(0)}|${fps(1)}|$nBuckets|$iters|$lr|$portable"
     val w = weightCache.computeIfAbsent(key,
       _ => train(target, raw, nBuckets, iters, lr, portable))

@@ -543,11 +543,11 @@ object Unigram {
 
   // --------------------------------------------------------- memoization
 
-  private val modelCache =
+  private[graft] val modelCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Model, Seq[Long])]()
 
-  /** [[train]] memoized on the corpus fingerprint + parameters — the
-    * [[Bpe.learnMergesCached]] discipline: registry queries, bench
+  /** [[train]] memoized on the corpus fingerprint
+    * ([[Layout.fingerprint]]) + parameters: registry queries, bench
     * iterations and the Verify gate share one training run per JVM.
     */
   def trainCached(
@@ -558,11 +558,7 @@ object Unigram {
       maxPieceLen: Int = 4,
       emIters: Int = 2,
       shrink: Double = 0.75): (Model, Seq[Long]) = {
-    val fpRow = docs.agg(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(doc_id, text))"), lit(0L)).as("fp"))
-      .head()
-    val key = s"$cacheKey|${fpRow.getLong(0)}|${fpRow.getLong(1)}|" +
+    val key = s"$cacheKey|${Bpe.docsFp(docs).key}|" +
       s"$targetVocab|$seedSize|$maxPieceLen|$emIters|$shrink"
     val out = modelCache.computeIfAbsent(key,
       _ => train(docs, targetVocab, seedSize, maxPieceLen, emIters, shrink))

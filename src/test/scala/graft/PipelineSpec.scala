@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{Ann, Rag, Retrieval, Store}
+import graft.operators.{Ann, Layout, Rag, Retrieval, Store}
 import graft.sources.DocLoader
 import graft.multimodal.Multimodal
 import java.nio.file.Files
@@ -411,21 +411,41 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
 
   test("fingerprint-keyed layout: reused for identical corpus, rebuilt on mutation") {
     val base = java.nio.file.Files.createTempDirectory("graft_layout_fp").toString
-    val p1 = Ann.signaturePartitionedLayout(spark, corpus.select("vec_id", "embedding"), base)
+    val vecs = corpus.select("vec_id", "embedding")
+    val (centroids, _) = Ann.buildIvf(spark, vecs, nCells = 8, maxIter = 3)
+    val books = Ann.trainPqCodebooks(vecs, m = 8, dsub = 8, kStar = 8, maxIter = 3)
+    val resBooks = Ann.trainPqCodebooksResidual(
+      vecs, centroids, m = 8, dsub = 8, kStar = 8, maxIter = 3)
+    val localBooks = Ann.trainLocalPqCodebooks(
+      vecs, centroids, m = 8, dsub = 8, kStar = 4, maxIter = 3)
+    val zCols = Seq("vec_id", "a", "b")
+    def zFrame(df: org.apache.spark.sql.DataFrame) = df.select(col("vec_id"),
+      col("embedding").getItem(0).as("a"), col("embedding").getItem(1).as("b"))
+    // Every build-once layout kind: (expected name prefix, build over a frame).
     // murmur layouts live under `sigm…`, never the retired portable `sig…` paths
-    assert(new java.io.File(p1).getName.startsWith("sigm8_"))
-    val marker = new java.io.File(p1, "_SUCCESS")
-    assert(marker.exists())
-    val mtime = marker.lastModified()
-    // same content → same path, no rewrite (the _SUCCESS marker is untouched)
-    val p2 = Ann.signaturePartitionedLayout(spark, corpus.select("vec_id", "embedding"), base)
-    assert(p2 == p1)
-    assert(marker.lastModified() == mtime, "unchanged corpus must not rebuild the layout")
-    // mutated content (one vector dropped) → different fingerprint → new path
-    val p3 = Ann.signaturePartitionedLayout(
-      spark, corpus.filter(col("vec_id") =!= 0L).select("vec_id", "embedding"), base)
-    assert(p3 != p1, "a mutated corpus must get a fresh layout, never stale probes")
-    assert(new java.io.File(p3, "_SUCCESS").exists())
+    val kinds: Seq[(String, org.apache.spark.sql.DataFrame => String)] = Seq(
+      "sigm8_" -> (df => Ann.signaturePartitionedLayout(spark, df, base)),
+      "cells8_" -> (df => Ann.cellLayout(spark, df, base, centroids)),
+      "ivfpq_c8_m8_" -> (df => Ann.ivfPqLayout(spark, df, base, centroids, books)),
+      "ivfpqr_c8_m8_" -> (df => Ann.ivfPqResidualLayout(spark, df, base, centroids, resBooks)),
+      "ivfpqlo_c8_" -> (df => Ann.ivfPqLocalLayout(spark, df, base, centroids, localBooks)),
+      "za_b_f4_" -> (df => Layout.zOrderedLayout(spark, zFrame(df), Seq("a", "b"), base, 4, zCols)),
+      "lina_f4_" -> (df => Layout.linearLayout(spark, zFrame(df), "a", base, 4, zCols)))
+    for ((prefix, build) <- kinds) {
+      val p1 = build(vecs)
+      assert(new java.io.File(p1).getName.startsWith(prefix), s"$p1 lacks prefix $prefix")
+      val marker = new java.io.File(p1, "_SUCCESS")
+      assert(marker.exists(), s"$prefix: no marker")
+      val mtime = marker.lastModified()
+      // same content → same path, no rewrite (the _SUCCESS marker is untouched)
+      assert(build(vecs) == p1, s"$prefix: unchanged corpus moved the layout")
+      assert(marker.lastModified() == mtime, s"$prefix: unchanged corpus must not rebuild")
+      // mutated content (one vector dropped) → different fingerprint → new path
+      val p3 = build(vecs.filter(col("vec_id") =!= 0L))
+      assert(p3 != p1, s"$prefix: a mutated corpus must get a fresh layout, never stale probes")
+      assert(new java.io.File(p3).getName.startsWith(prefix))
+      assert(new java.io.File(p3, "_SUCCESS").exists(), s"$prefix: mutated build unpublished")
+    }
   }
 
   test("quantized rerank with full over-fetch equals exact float top-k") {

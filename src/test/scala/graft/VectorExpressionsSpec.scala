@@ -17,6 +17,34 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkTestSession {
   private val vecGen: Gen[Array[Float]] =
     Gen.listOfN(64, Gen.chooseNum(-5.0f, 5.0f)).map(_.toArray)
 
+  /** The closure form [[graft.operators.Ann.assignCells]] compiled before
+    * r16 — the bit-identity reference the kernel is pinned against.
+    */
+  private def assignCellsClosure(
+      corpus: org.apache.spark.sql.DataFrame,
+      centroids: Array[Array[Float]]): org.apache.spark.sql.DataFrame = {
+    val dim = centroids.head.length
+    val assign = udf { (v: Seq[Float]) =>
+      var best = 0; var bestSim = Double.MinValue
+      var c = 0
+      while (c < centroids.length) {
+        var dot = 0.0; var na = 0.0; var nb = 0.0
+        var i = 0
+        while (i < dim) {
+          val x = v(i).toDouble; val y = centroids(c)(i).toDouble
+          dot += x * y; na += x * x; nb += y * y
+          i += 1
+        }
+        val den = math.sqrt(na) * math.sqrt(nb)
+        val sim = if (den == 0) 0.0 else dot / den
+        if (sim > bestSim) { bestSim = sim; best = c }
+        c += 1
+      }
+      best
+    }
+    corpus.withColumn("cell", assign(col("embedding")))
+  }
+
   test("MarginMicros matches the interpreted HOF fold exactly on random features") {
     // The quality classifier's margin kernel (r19): codegen loop over a
     // (bucket, cn) struct array against a literal long[] must equal the
@@ -85,7 +113,7 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkTestSession {
       .toDF("vec_id", "embedding")
     val kernel = graft.operators.Ann.assignCells(df, centroids)
       .select("vec_id", "cell").as[(Long, Int)].collect().toMap
-    val closure = graft.operators.Ann.assignCellsClosure(df, centroids)
+    val closure = assignCellsClosure(df, centroids)
       .select("vec_id", "cell").as[(Long, Int)].collect().toMap
     assert(kernel == closure, {
       val diff = kernel.collect { case (k, v) if closure(k) != v => (k, v, closure(k)) }
