@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.expressions.{CharShingles, CosineSimilarity, SplitChunks}
+import graft.expressions.{CharShingles, CosineSimilarity, LangId, SplitChunks}
 
 /** Session extension registering the engine's custom expressions on the
   * SQL surface, so `spark.sql("... cosine_sim(a, b) ...")` plans the
@@ -37,7 +37,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** Runtime registration on an existing session: the two custom Catalyst
+  /** Runtime registration on an existing session: the custom Catalyst
     * expressions, plus the scalar text-analysis functions as SQL UDFs so
     * `spark.sql` users get the full surface (`graft_` prefix keeps the
     * global namespace clean).
@@ -55,7 +55,8 @@ object GraftExtensions {
       spark, "split_chunks", exprs => SplitChunks.fromArgs(exprs))
     org.apache.spark.sql.graftshim.GraftSqlShim.registerFunction(
       spark, "char_shingles", exprs => CharShingles.fromArgs(exprs))
-    spark.udf.register("graft_langid", (s: String) => TextAnalysis.detectLanguage(s))
+    org.apache.spark.sql.graftshim.GraftSqlShim.registerFunction(
+      spark, "graft_langid", exprs => LangId.fromArgs(exprs))
     spark.udf.register("graft_fingerprint", (s: String) => TextAnalysis.fingerprint(s))
     spark.udf.register("graft_fingerprint_mod", (s: String) => TextAnalysis.fingerprintMod(s))
     spark.udf.register("graft_simhash_mod", (s: String) => TextAnalysis.simHashMod(s))

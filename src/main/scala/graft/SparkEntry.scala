@@ -847,7 +847,7 @@ object SparkEntry {
       // groupBy on the (tiny-cardinality) language key; output is a
       // dozen rows regardless of corpus size.
       // The per-doc pass below is CPU-bound (regex-heavy quality/token
-      // legs + the interpreted higher-order langid), not IO-bound: a tiny
+      // legs + the langid kernel), not IO-bound: a tiny
       // compressed parquet file arrives as ONE scan split, serializing all
       // expression work on one core (the r7 bench showed the whole card
       // riding a single task). Scale.parallelismFloor fans out only when
@@ -3009,17 +3009,15 @@ object SparkEntry {
 
     "text_repetition" -> ((s, dir) => {
       // Max single-word frequency ratio per document (Gopher-style
-      // repetition filter signal).
-      val words = Tables.documents(s, dir)
-        .select(col("doc_id"), explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
-        .filter(col("w") =!= "")
-      val counts = words.groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
-      counts.groupBy("doc_id")
-        .agg(max("c").as("max_word_count"), sum("c").as("n_words"))
-        .select(col("doc_id"), col("max_word_count"),
-          col("n_words").cast("long").as("n_words"),
+      // repetition filter signal), over the word counts gopherRules
+      // reads; documents without a non-empty word have no row.
+      Tables.documents(s, dir)
+        .select(col("doc_id"), TextAnalysis.wordStats(col("text")).as("ws"))
+        .filter(col("ws.n_words") > 0)
+        .select(col("doc_id"), col("ws.top_word_count").cast("long").as("max_word_count"),
+          col("ws.n_words").cast("long").as("n_words"),
           TextAnalysis.floorScale(
-            col("max_word_count").cast("double") / col("n_words").cast("double"), 6)
+            col("ws.top_word_count").cast("double") / col("ws.n_words").cast("double"), 6)
             .as("repetition_ratio"))
         .orderBy("doc_id")
     }),

@@ -2,15 +2,21 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSqlShim
 import scala.util.hashing.MurmurHash3
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * quality scoring, token counting, language ID, document fingerprinting.
   *
   * Everything that can be a native Catalyst expression is one (codegen'd,
-  * pushdown-friendly); only the n-gram language profile and the rolling
-  * fingerprint need Scala functions (exposed as UDFs, applied once per
-  * document — not in any join hot path).
+  * pushdown-friendly). The per-document kernels that compose badly from
+  * built-ins are compiled Catalyst expressions: language ID
+  * ([[graft.expressions.LangId]]), the word counts behind the stopword,
+  * mean-length, quality and Gopher signals
+  * ([[graft.expressions.WordStats]]) and the shingle set
+  * ([[graft.expressions.CharShingles]]). The rolling fingerprints and the
+  * MinHash/SimHash signatures are Scala functions exposed as UDFs,
+  * applied once per document.
   */
 object TextAnalysis extends Serializable {
 
@@ -37,30 +43,41 @@ object TextAnalysis extends Serializable {
       .otherwise(length(regexp_replace(text, "[^\\p{Punct}]", "")).cast("double") /
         length(text).cast("double"))
 
+  /** The [[graft.expressions.WordStats]] counts of `text`: a struct of
+    * `n_tokens`, `token_chars`, `stop_tokens`, `distinct_stops`,
+    * `top_word_count` and `n_words`. The `…Of` forms below take it as a
+    * column, so a frame that binds it once (`gopherRules`,
+    * `Attributes.tag`) runs the kernel once per row.
+    */
+  private[graft] def wordStats(text: Column): Column =
+    GraftSqlShim.column(graft.expressions.WordStats(GraftSqlShim.expression(text)))
+
   /** Ratio of stopword tokens to total tokens (0 for empty). */
-  def stopwordRatio(text: Column): Column = {
-    val toks = split(lower(trim(text)), "\\s+")
-    val stops = size(filter(toks, t => t.isin(Stopwords: _*)))
-    when(tokenCount(text) === 0, lit(0.0))
-      .otherwise(stops.cast("double") / tokenCount(text).cast("double"))
-  }
+  def stopwordRatio(text: Column): Column = stopwordRatioOf(wordStats(text))
+
+  private def stopwordRatioOf(ws: Column): Column =
+    when(ws("n_tokens") === 0, lit(0.0))
+      .otherwise(ws("stop_tokens").cast("double") / ws("n_tokens").cast("double"))
 
   /** Mean token length in characters (0 for empty). */
-  def meanTokenLen(text: Column): Column =
-    when(tokenCount(text) === 0, lit(0.0))
-      .otherwise(
-        aggregate(split(trim(text), "\\s+"), lit(0L), (acc, t) => acc + length(t)).cast("double") /
-          tokenCount(text).cast("double"))
+  def meanTokenLen(text: Column): Column = meanTokenLenOf(wordStats(text))
+
+  private def meanTokenLenOf(ws: Column): Column =
+    when(ws("n_tokens") === 0, lit(0.0))
+      .otherwise(ws("token_chars").cast("double") / ws("n_tokens").cast("double"))
 
   /** Composite document quality score in [0,1]: rewards reasonable length,
     * moderate stopword density and low punctuation noise. A deterministic
     * stand-in for model-based quality classifiers used in pretraining-data
     * curation pipelines.
     */
-  def qualityScore(text: Column): Column = {
+  def qualityScore(text: Column): Column = qualityScoreOf(text, wordStats(text))
+
+  /** [[qualityScore]] over `text` and its bound [[wordStats]]. */
+  private[graft] def qualityScoreOf(text: Column, ws: Column): Column = {
     val lenScore = least(length(text).cast("double") / lit(500.0), lit(1.0))
     val punctPenalty = greatest(lit(0.0), lit(1.0) - punctRatio(text) * 5.0)
-    val stopScore = least(stopwordRatio(text) * 2.5, lit(1.0))
+    val stopScore = least(stopwordRatioOf(ws) * 2.5, lit(1.0))
     // floor-scale instead of round(): Spark's round() goes through the
     // shortest decimal string (BigDecimal HALF_UP) while DuckDB rounds the
     // binary double, so values landing exactly on a …5e-7 boundary split
@@ -78,10 +95,12 @@ object TextAnalysis extends Serializable {
     * rule is its own column rather than folded into one score
     * (complementing [[qualityScore]], which is the soft-score form).
     *
-    * One pass of per-doc scalar expressions plus the same
-    * (doc_id, word) aggregation as the repetition signal — map-side
-    * partial aggs, one shuffle on doc_id, no joins against anything
-    * corpus-wide. Defaults are the paper's; callers fit thresholds to
+    * One per-row projection over the [[wordStats]] counts: the
+    * repetition ratio is the top count of one non-empty lowered word
+    * over the number of such words (0 for a doc without words), so no
+    * explode, aggregation or join runs. `doc_id` is the document key:
+    * each row is scored on its own text, and rows that share a `doc_id`
+    * are not pooled. Defaults are the paper's; callers fit thresholds to
     * their corpus.
     */
   def gopherRules(
@@ -91,33 +110,34 @@ object TextAnalysis extends Serializable {
       minMeanLen: Double = 3.0,
       maxMeanLen: Double = 10.0,
       maxRepetition: Double = 0.2,
-      minDistinctStopwords: Int = 2): DataFrame = {
-    val rep = docs
-      .select(col("doc_id"),
-        explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
-      .groupBy("doc_id")
-      .agg((max("c").cast("double") / sum("c").cast("double")).as("rep_ratio"))
-    val toks = split(lower(trim(col("text"))), "\\s+")
-    val nStops = size(array_distinct(filter(toks, t => t.isin(Stopwords: _*))))
-    docs
-      .select(col("doc_id"),
-        tokenCount(col("text")).as("n_tokens"),
-        meanTokenLen(col("text")).as("mean_len"),
-        nStops.as("n_stop"))
-      .join(rep, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_tokens"),
-        (col("n_tokens") >= minTokens && col("n_tokens") <= maxTokens)
-          .as("rule_word_count"),
-        (col("mean_len") >= minMeanLen && col("mean_len") <= maxMeanLen)
-          .as("rule_mean_word_len"),
-        (coalesce(col("rep_ratio"), lit(0.0)) <= maxRepetition)
-          .as("rule_repetition"),
-        (col("n_stop") >= minDistinctStopwords).as("rule_stopwords"))
-      .withColumn("keep",
-        col("rule_word_count") && col("rule_mean_word_len") &&
-          col("rule_repetition") && col("rule_stopwords"))
+      minDistinctStopwords: Int = 2): DataFrame =
+    docs.select(col("doc_id"), wordStats(col("text")).as("_ws"))
+      .select(col("doc_id") +: gopherRulesOf(col("_ws"), minTokens, maxTokens,
+        minMeanLen, maxMeanLen, maxRepetition, minDistinctStopwords): _*)
+
+  /** [[gopherRules]]' columns (`n_tokens`, the four `rule_*` booleans,
+    * `keep`) over a bound [[wordStats]] column. */
+  private[graft] def gopherRulesOf(
+      ws: Column,
+      minTokens: Int,
+      maxTokens: Int,
+      minMeanLen: Double,
+      maxMeanLen: Double,
+      maxRepetition: Double,
+      minDistinctStopwords: Int): Seq[Column] = {
+    val meanLen = meanTokenLenOf(ws)
+    val repRatio = when(ws("n_words") > 0,
+      ws("top_word_count").cast("double") / ws("n_words").cast("double"))
+    val wordCount = ws("n_tokens") >= minTokens && ws("n_tokens") <= maxTokens
+    val meanWordLen = meanLen >= minMeanLen && meanLen <= maxMeanLen
+    val repetition = coalesce(repRatio, lit(0.0)) <= maxRepetition
+    val stopwords = ws("distinct_stops") >= minDistinctStopwords
+    Seq(ws("n_tokens").as("n_tokens"),
+      wordCount.as("rule_word_count"),
+      meanWordLen.as("rule_mean_word_len"),
+      repetition.as("rule_repetition"),
+      stopwords.as("rule_stopwords"),
+      (wordCount && meanWordLen && repetition && stopwords).as("keep"))
   }
 
   /** Cross-engine-stable truncation to `digits` decimals (see
@@ -171,34 +191,36 @@ object TextAnalysis extends Serializable {
   def detectLanguageUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf((s: String) => detectLanguage(s))
 
-  /** Bind a subexpression ONCE and reference it through a lambda variable.
-    * Spark has no let-binding; without it, Catalyst inlines a copy of the
-    * bound expression into every use site, and whenever the surrounding
-    * plan loses codegen common-subexpression elimination (higher-order
-    * functions are interpreted; oversized Projects fall out of codegen)
-    * each copy re-evaluates per reference — the r7-verdict `corpus_datacard`
-    * pathology was exactly this: a whole regexp_replace re-run per
-    * CHARACTER POSITION inside a per-trigram lambda, O(len²) regex work
-    * per document. A single-element `transform` evaluates its input array
-    * (hence `v`) exactly once per row and hands the lambda a bound
-    * variable, making single evaluation structural rather than
-    * optimizer-dependent.
+  /** [[detectLanguage]] as a column: the compiled
+    * [[graft.expressions.LangId]] kernel, one pass over the code points
+    * per row. It equals the scalar form and the composed
+    * [[detectLanguageHof]] (LangIdSpec), and the composed form is what the
+    * DuckDB mirror replays.
+    */
+  def detectLanguageCol(text: Column): Column =
+    GraftSqlShim.column(graft.expressions.LangId(GraftSqlShim.expression(text)))
+
+  /** Bind a subexpression ONCE and reference it through a lambda variable
+    * (used by [[detectLanguageHof]]). Spark has no let-binding; without
+    * it, Catalyst inlines a copy of the bound expression into every use
+    * site, and inside interpreted higher-order functions each copy
+    * re-evaluates per reference (the `corpus_datacard` pathology: a whole
+    * regexp_replace re-run per character position inside a per-trigram
+    * lambda). A single-element `transform` evaluates its input once per
+    * row and hands the lambda a bound variable.
     */
   private def let(v: Column)(f: Column => Column): Column =
     element_at(transform(array(v), f), 1)
 
-  /** [[detectLanguage]] as a pure column expression (no UDF): trigram
-    * positions via `sequence`+`transform`, profile hits via `filter`+`size`,
-    * argmax via `array_max` over (score, lang) structs. The normalized
-    * text, the trigram array and the argmax struct are each let-bound
-    * (see [[let]]) so every stage is evaluated once per row — O(len)
-    * total — no matter how the enclosing plan treats common
-    * subexpressions. Counting positions whose trigram is in the profile
-    * set equals the scalar version's per-gram overlapping indexOf counts
-    * because each profile's grams are distinct. Semantically identical to
-    * the scalar form (spec-checked) and exactly reproducible in ANSI SQL.
+  /** The composed form [[detectLanguageCol]] replaced, kept as the
+    * equality-spec twin: trigram positions via `sequence`+`transform`,
+    * profile hits via `filter`+`size`, argmax via `array_max` over
+    * (score, lang) structs, each stage let-bound. Counting positions
+    * whose trigram is in the profile set equals the scalar version's
+    * per-gram overlapping indexOf counts because each profile's grams are
+    * distinct. It is the shape `langidChainSql` mirrors in DuckDB.
     */
-  def detectLanguageCol(text: Column): Column = {
+  private[graft] def detectLanguageHof(text: Column): Column = {
     val raw = coalesce(text, lit(""))
     val scoredLang =
       let(concat(lit(" "), regexp_replace(lower(raw), "\\s+", " "), lit(" "))) { t =>
@@ -390,11 +412,9 @@ object TextAnalysis extends Serializable {
     * n-char substrings. Used by n-gram Jaccard dedup; expressible in ANSI
     * SQL so it stays oracle-checkable.
     */
-  def charShingles(text: Column, n: Int): Column = {
-    import org.apache.spark.sql.graftshim.GraftSqlShim
+  def charShingles(text: Column, n: Int): Column =
     GraftSqlShim.column(
       graft.expressions.CharShingles(GraftSqlShim.expression(text), n))
-  }
 
   /** The composed higher-order-function form [[charShingles]] replaced
     * (r13): kept as the equality-spec twin — the fused expression must

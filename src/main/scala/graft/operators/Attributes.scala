@@ -13,11 +13,12 @@ import graft.functions.TextAnalysis
   * "change a threshold → one cheap scan of the (narrow) attribute
   * sidecar" and "change a threshold → re-tokenize the corpus".
   *
-  * Scale shape: the heuristic taggers (quality, language-ID) are pure
-  * per-row projections; the two non-local taggers each shuffle short
-  * keys only — Gopher's repetition ratio pre-aggregates (doc_id, word)
-  * counts map-side, and the exact-dup tagger ships one 32-byte content
-  * hash per doc through a min-aggregate + equi-join (the
+  * Scale shape: every tagger but one is a per-row projection — quality,
+  * language-ID and the Gopher rules (repetition included) read the
+  * compiled [[graft.expressions.WordStats]] and
+  * [[graft.expressions.LangId]] kernels, the word counts bound once per
+  * row. The exact-dup tagger is the one non-local tagger: it ships one
+  * 32-byte content hash per doc through a min-aggregate + equi-join (the
   * [[Dedup.exact]] shape), never the text.
   *
   * Reference behavior anchor: the reference app applies its validation
@@ -30,7 +31,8 @@ object Attributes {
   /** Tag `docs` (doc_id, text, lang) with the standard attribute set:
     * Gopher rule booleans, the composite quality score, predicted
     * language + claimed-language agreement, and an exact-duplicate flag
-    * (first doc_id per content hash survives).
+    * (first doc_id per content hash survives). One projection over
+    * `docs` plus the exact-dup join; `doc_id` is the document key.
     */
   def tag(
       docs: DataFrame,
@@ -40,21 +42,25 @@ object Attributes {
       maxMeanLen: Double = 10.0,
       maxRepetition: Double = 0.125,
       minDistinctStopwords: Int = 2): DataFrame = {
-    val gopher = TextAnalysis.gopherRules(docs, minTokens, maxTokens,
+    val ws = col("_ws")
+    val gopher = TextAnalysis.gopherRulesOf(ws, minTokens, maxTokens,
       minMeanLen, maxMeanLen, maxRepetition, minDistinctStopwords)
+    val hashed = docs
+      .select(col("doc_id"), col("lang"), col("text"),
+        TextAnalysis.wordStats(col("text")).as("_ws"))
+      .select(Seq(col("doc_id"), col("lang"),
+        TextAnalysis.qualityScoreOf(col("text"), ws).as("quality"),
+        TextAnalysis.detectLanguageCol(col("text")).as("lang_pred"),
+        sha2(coalesce(col("text"), lit("")), 256).as("_content_h")) ++ gopher: _*)
       .withColumnRenamed("keep", "gopher_keep")
-    val hashed = docs.select(
-      col("doc_id"), col("lang"),
-      TextAnalysis.qualityScore(col("text")).as("quality"),
-      TextAnalysis.detectLanguageCol(col("text")).as("lang_pred"),
-      sha2(coalesce(col("text"), lit("")), 256).as("_content_h"))
     val firsts = hashed.groupBy("_content_h")
       .agg(min(col("doc_id")).as("_first_doc"))
     hashed.join(firsts, Seq("_content_h"))
-      .withColumn("is_exact_dup", col("doc_id") =!= col("_first_doc"))
-      .drop("_content_h", "_first_doc")
-      .join(gopher, Seq("doc_id"))
-      .withColumn("lang_match", col("lang_pred") === col("lang"))
+      .select(col("doc_id"), col("lang"), col("quality"), col("lang_pred"),
+        (col("doc_id") =!= col("_first_doc")).as("is_exact_dup"),
+        col("n_tokens"), col("rule_word_count"), col("rule_mean_word_len"),
+        col("rule_repetition"), col("rule_stopwords"), col("gopher_keep"),
+        (col("lang_pred") === col("lang")).as("lang_match"))
   }
 
   /** Evaluate an ordered policy over a tagged frame: each rule is

@@ -232,6 +232,36 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestSession {
     assert(!plan("ngram_top_bigrams").contains("ScalaUDF"))
   }
 
+  test("curate taggers: tag is one projection + the exact-dup join; Gopher is per-row") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayFilter, ArrayTransform, Expression, ScalaUDF}
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.expressions.{LangId, WordStats}
+    val helper = new AdaptiveSparkPlanHelper {}
+    def executed(df: DataFrame): SparkPlan = { df.collect(); df.queryExecution.executedPlan }
+    def exprs(p: SparkPlan): Seq[Expression] =
+      helper.collectWithSubqueries(p) { case n => n.expressions.flatMap(_.collect { case e => e }) }.flatten
+    def generates(p: SparkPlan) = helper.collectWithSubqueries(p) { case g: GenerateExec => g }
+    def joins(p: SparkPlan) = helper.collectWithSubqueries(p) { case j: BaseJoinExec => j }
+
+    val tag = executed(operators.Attributes.tag(
+      Tables.documents(spark, sfDir).select("doc_id", "text", "lang")))
+    val interpreted = exprs(tag).collect {
+      case e @ (_: ScalaUDF | _: ArrayTransform | _: ArrayFilter | _: ArrayAggregate) => e.prettyName
+    }
+    assert(interpreted.isEmpty, s"interpreted per-row work in Attributes.tag: $interpreted\n$tag")
+    assert(generates(tag).isEmpty, s"Attributes.tag explodes words:\n$tag")
+    assert(joins(tag).size == 1, s"Attributes.tag joins more than the exact-dup hash:\n$tag")
+    // each kernel runs once per row: the word counts are bound, not inlined per use
+    assert(exprs(tag).count(_.isInstanceOf[WordStats]) == 1, tag)
+    assert(exprs(tag).count(_.isInstanceOf[LangId]) == 1, tag)
+
+    val gopher = executed(SparkEntry.queries("text_gopher_rules")(spark, sfDir))
+    assert(generates(gopher).isEmpty && joins(gopher).isEmpty, s"text_gopher_rules:\n$gopher")
+  }
+
   test("r18 shared-subtree materialization: one corpus pass feeds the multi-branch consumers") {
     // tfidf: the tf stream is materialized once (LoopCheckpoint inside
     // tfidfTopTerms) and BOTH branches (df build + scored stream) read
