@@ -394,7 +394,7 @@ object ScaleEvidence {
         operators.Ann.signature(r.getSeq[Float](0), 8), 8, 1))
       .distinct.length
     val (annTop, tProbe) = timed {
-      operators.Ann.lshTopKPartitioned(spark, layoutPath, queries, k = 5,
+      operators.Ann.lshJoin(spark, layoutPath, queries, k = 5,
         nBits = 8, probeBits = 1)
         .filter(col("rank") === 1).select("query_id", "vec_id")
         .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -432,7 +432,7 @@ object ScaleEvidence {
       .flatMap(r => operators.Ann.nearestCells(r.getSeq[Float](0), ivfCents, 8))
       .distinct.length
     val (ivfpqTop, tIvfpqProbe) = timed {
-      operators.Ann.ivfPqTopK(spark, ivfpqDir, queries, ivfCents, pqBooks, k = 5, nProbe = 8)
+      operators.Ann.ivfPqJoin(spark, ivfpqDir, queries, ivfCents, pqBooks, k = 5, nProbe = 8)
         .select("query_id", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1)))
     }
@@ -442,7 +442,7 @@ object ScaleEvidence {
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     }
     val (ivfpqFullTop, tIvfpqFull) = timed {
-      operators.Ann.ivfPqTopK(spark, ivfpqDir, queries, ivfCents, pqBooks, k = 5, nProbe = 128)
+      operators.Ann.ivfPqJoin(spark, ivfpqDir, queries, ivfCents, pqBooks, k = 5, nProbe = 128)
         .select("query_id", "rank", "vec_id").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     }
@@ -515,7 +515,7 @@ object ScaleEvidence {
     } yield {
       val (pairs, tS) = timed {
         (if (of == 1)
-          operators.Ann.ivfPqTopK(
+          operators.Ann.ivfPqJoin(
             spark, ivfpqDir, queries, ivfCents, pqBooks, k = 5, nProbe = np)
         else
           operators.Ann.ivfPqTopKReranked(
@@ -587,7 +587,7 @@ object ScaleEvidence {
       failures ::= f"opq: flat recall $opqFlatRecall%.3f more than 0.05 below plain $flatPlainEucRecall%.3f"
     val opqSweep = Seq(2, 8, 32).map { np =>
       val (pairs, tS) = timed {
-        operators.Ann.ivfPqTopK(
+        operators.Ann.ivfPqJoin(
           spark, opqDir, queriesRot, opqCents, opqBooks, k = 5, nProbe = np)
           .select("query_id", "vec_id").collect()
           .map(r => (r.getLong(0), r.getLong(1)))

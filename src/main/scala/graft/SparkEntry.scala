@@ -2209,13 +2209,14 @@ object SparkEntry {
       // directory read count, so 16 margin-ordered probes read 16 of
       // 256 directories where the Hamming-2 ball reads 37. Results are
       // spec-pinned identical to the in-memory adaptive form; the
-      // require asserts genuine PartitionFilters pruning (probed
-      // directory count == union of per-query probe sets).
+      // require asserts genuine PartitionFilters pruning (the 5 queries'
+      // probe union is a small share of the 256 directories, so the
+      // join's probed-key set reaches the scan as a static isin).
       val emb = Tables.embeddings(s, dir)
       val layout = operators.Ann.signaturePartitionedLayout(s, emb, annLayoutDir, nBits = 8)
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      val out = operators.Ann.lshTopKPartitionedAdaptive(
+      val out = operators.Ann.lshJoinAdaptive(
         s, layout, qs, k = 2, nBits = 8, nProbes = 16)
         .withColumn("sim", TextAnalysis.floorScale(col("sim"), 6))
         .orderBy("query_id", "rank")
@@ -2233,10 +2234,10 @@ object SparkEntry {
     "ann_lsh_partitioned" -> ((s, dir) => {
       // The 100 TB ANN layout as an oracle-checked query: the corpus is
       // written PARTITIONED BY its murmur LSH signature to a scratch
-      // dir, then the probe set becomes a STATIC isin filter on the
-      // partition column — genuine PartitionFilters pruning (the scan
-      // touches only probed signature directories; spec-asserted in
-      // AnnSpec) — followed by the exact cosine rerank. Pruning is
+      // dir, then the probed signature set becomes a STATIC isin filter
+      // on the partition column — genuine PartitionFilters pruning (the
+      // scan touches only probed signature directories; spec-asserted
+      // in PipelineSpec) — followed by the exact cosine rerank. Pruning is
       // physical, not semantic, so the result hash-matches the same
       // SQL mirror as ann_lsh_probe1.
       // Build-once index: the layout write happens on the first call per
@@ -2246,7 +2247,7 @@ object SparkEntry {
       val layout = operators.Ann.signaturePartitionedLayout(s, emb, annLayoutDir, nBits = 8)
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      operators.Ann.lshTopKPartitioned(s, layout, qs, k = 2, nBits = 8, probeBits = 1)
+      operators.Ann.lshJoin(s, layout, qs, k = 2, nBits = 8, probeBits = 1)
         .withColumn("sim", TextAnalysis.floorScale(col("sim"), 6))
         .orderBy("query_id", "rank")
     }),
@@ -2315,8 +2316,8 @@ object SparkEntry {
       // cell-partitioned layout, exact codegen cosine within the probe.
       // This is the corpus-vs-corpus shape (near-dup sweeps, batch
       // retrieval) at the tier users reach first; Verify hard-gates
-      // EXACT row equality vs the driver-side ivfTopKPartitioned at the
-      // same parameters, and the AnnOracle mirror replays the probe.
+      // EXACT row equality vs the in-memory ivfTopK at the same
+      // parameters, and the AnnOracle mirror replays the probe.
       val emb = Tables.embeddings(s, dir)
       val (centroids, _) =
         operators.Ann.buildIvfCached(s, emb, cacheKey = dir, nCells = 8, maxIter = 3)
@@ -2592,7 +2593,7 @@ object SparkEntry {
       val layout = operators.Ann.ivfPqLayout(s, emb, annLayoutDir, centroids, books)
       val qs = emb.filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      operators.Ann.ivfPqTopK(s, layout, qs, centroids, books, k = 10, nProbe = 8)
+      operators.Ann.ivfPqJoin(s, layout, qs, centroids, books, k = 10, nProbe = 8)
         .orderBy("query_id", "rank")
     }),
 
@@ -2636,17 +2637,17 @@ object SparkEntry {
       val layout = operators.Ann.ivfPqLayout(s, embRot, annLayoutDir, centroids, books)
       val qs = embRot.filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      operators.Ann.ivfPqTopK(s, layout, qs, centroids, books, k = 10, nProbe = 3)
+      operators.Ann.ivfPqJoin(s, layout, qs, centroids, books, k = 10, nProbe = 3)
         .orderBy("query_id", "rank")
     }),
 
     "ann_ivfpq_topk" -> ((s, dir) => {
       // IVF-PQ: the composed 100 TB ANN shape — PQ codes persisted
       // PARTITIONED BY IVF cell (build-once, fingerprint-keyed layout),
-      // probe cells computed driver-side from the tiny centroid set
-      // (static isin → genuine PartitionFilters pruning), ADC scan over
-      // ONLY the probed cells' m-byte codes. Full-probe == flat-ADC is
-      // spec-pinned (AnnSpec); recall vs the exact euclidean top-k is
+      // probe cells from the codegen kernel over the tiny centroid set
+      // (the probed set prunes the scan), ADC scan over ONLY the probed
+      // cells' m-byte codes. Full-probe == flat-ADC is spec-pinned
+      // (PipelineSpec) and Verify-gated; recall vs the exact euclidean top-k is
       // hard-gated in Verify alongside the other approximate queries.
       val emb = Tables.embeddings(s, dir)
       val (centroids, _) = operators.Ann.buildIvfCached(
@@ -2656,7 +2657,7 @@ object SparkEntry {
       val layout = operators.Ann.ivfPqLayout(s, emb, annLayoutDir, centroids, books)
       val qs = emb.filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      operators.Ann.ivfPqTopK(s, layout, qs, centroids, books, k = 10, nProbe = 3)
+      operators.Ann.ivfPqJoin(s, layout, qs, centroids, books, k = 10, nProbe = 3)
         .orderBy("query_id", "rank")
     }),
 
@@ -2748,8 +2749,8 @@ object SparkEntry {
       // retrieval) — queries never collect to the driver; probe cells
       // explode per row, the per-query ADC lookup table is built once
       // per query row, and candidates come from the cell equi-join.
-      // Verify hard-gates EXACT row equality vs the driver-side
-      // ivfPqTopK at the same parameters.
+      // Verify hard-gates its full-probe form EXACTLY against the flat
+      // pqAdcTopK over the same books and queries.
       val emb = Tables.embeddings(s, dir)
       val (centroids, _) = operators.Ann.buildIvfCached(
         s, emb, cacheKey = dir, nCells = 8, maxIter = 3)
@@ -3010,14 +3011,17 @@ object SparkEntry {
     "text_repetition" -> ((s, dir) => {
       // Max single-word frequency ratio per document (Gopher-style
       // repetition filter signal), over the word counts gopherRules
-      // reads; documents without a non-empty word have no row.
+      // reads; documents without a non-empty word have no row. The
+      // counts are bound by a one-row `inline`: a filter on a projected
+      // struct is pushed below the projection and re-evaluates the
+      // kernel, but a filter on generator output stays above it.
       Tables.documents(s, dir)
-        .select(col("doc_id"), TextAnalysis.wordStats(col("text")).as("ws"))
-        .filter(col("ws.n_words") > 0)
-        .select(col("doc_id"), col("ws.top_word_count").cast("long").as("max_word_count"),
-          col("ws.n_words").cast("long").as("n_words"),
+        .select(col("doc_id"), inline(array(TextAnalysis.wordStats(col("text")))))
+        .filter(col("n_words") > 0)
+        .select(col("doc_id"), col("top_word_count").cast("long").as("max_word_count"),
+          col("n_words").cast("long").as("n_words"),
           TextAnalysis.floorScale(
-            col("ws.top_word_count").cast("double") / col("ws.n_words").cast("double"), 6)
+            col("top_word_count").cast("double") / col("n_words").cast("double"), 6)
             .as("repetition_ratio"))
         .orderBy("doc_id")
     }),

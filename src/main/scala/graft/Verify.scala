@@ -198,7 +198,7 @@ object Verify {
       val pqApprox = operators.Ann.pqAdcTopK(emb, books, nQueries = nq, k = 10)
         .select("query_id", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val ivfpqApprox = operators.Ann.ivfPqTopK(
+      val ivfpqApprox = operators.Ann.ivfPqJoin(
         spark, layout, qsIvf, centroids, books, k = 10, nProbe = 3)
         .select("query_id", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -256,7 +256,7 @@ object Verify {
         val layoutR = operators.Ann.ivfPqLayout(spark, embRotV, annLayoutDir, centsR, opqBooks)
         val qsRot = embRotV.filter(col("vec_id") < nq)
           .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-        val got = operators.Ann.ivfPqTopK(
+        val got = operators.Ann.ivfPqJoin(
           spark, layoutR, qsRot, centsR, opqBooks, k = 10, nProbe = 3)
           .select("query_id", "vec_id").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -330,22 +330,22 @@ object Verify {
           require(recall >= thr, s"$name recall $recall below gate $thr")
         }
 
-      // Distributed-join gate: ivfPqJoin must reproduce the driver-side
-      // probe EXACTLY (same LUT arithmetic, same ranking) — equality,
-      // not a recall floor.
+      // Layout-join gate: at full probe, ivfPqJoin must reproduce the
+      // flat in-memory ADC scan over the same books and queries EXACTLY
+      // (same LUT arithmetic, same ranking, raw doubles) — cell pruning
+      // and salting are physical choices; equality, not a recall floor.
       {
         val joined = operators.Ann.ivfPqJoin(
-          spark, layout, qsIvf, centroids, books, k = 10, nProbe = 3)
+          spark, layout, qsIvf, centroids, books, k = 10, nProbe = centroids.length)
           .select("query_id", "rank", "vec_id", "adc_dist").collect()
           .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-        val driverSide = operators.Ann.ivfPqTopK(
-          spark, layout, qsIvf, centroids, books, k = 10, nProbe = 3)
+        val flat = operators.Ann.pqAdcTopK(emb, books, nQueries = nq, k = 10)
           .select("query_id", "rank", "vec_id", "adc_dist").collect()
           .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
         println(s"[equality] ann_ivfpq_join rows=${joined.size} " +
-          s"driver=${driverSide.size} equal=${joined == driverSide}")
-        require(joined == driverSide,
-          "ann_ivfpq_join: distributed join diverged from the driver-side probe")
+          s"flat=${flat.size} equal=${joined == flat}")
+        require(joined == flat,
+          "ann_ivfpq_join: full-probe layout join diverged from the flat ADC scan")
 
         // Adaptive PQ-join gate (r18 — the PQ tier of the adaptive join
         // family): recall vs the exact euclidean top-k must be ≥ the
@@ -356,34 +356,33 @@ object Verify {
           spark, layout, qsIvf, centroids, books, k = 10)
           .select("query_id", "vec_id").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val fixPqPairs = joined.map(r => (r._1, r._3))
         val rAdPq = exactEuc.count(adPq.contains).toDouble / exactEuc.size
-        val rFixPq = exactEuc.count(fixPqPairs.contains).toDouble / exactEuc.size
+        val rFixPq = exactEuc.count(ivfpqApprox.contains).toDouble / exactEuc.size
         println(f"[recall] ann_ivfpq_join_adaptive = $rAdPq%.3f " +
           f"(fixed nProbe=3 = $rFixPq%.3f, gate >= fixed)")
         require(rAdPq >= rFixPq,
           f"ann_ivfpq_join_adaptive recall $rAdPq%.3f below the fixed join's $rFixPq%.3f")
       }
 
-      // Exact-tier distributed-join gate (r15 verdict #2): ivfJoin over
-      // the cell-partitioned layout must reproduce the driver-side
-      // ivfTopKPartitioned EXACTLY — same probe set, same codegen cosine,
-      // same (sim desc, vec_id) cut — row for row including the raw
-      // double sim.
+      // Exact-tier layout-join gate (r15 verdict #2): ivfJoin over the
+      // cell-partitioned layout must reproduce the in-memory ivfTopK
+      // over the same cell assignment EXACTLY — same probe set, same
+      // codegen cosine, same (sim desc, vec_id) cut — row for row
+      // including the raw double sim.
       {
         val cellPath = operators.Ann.cellLayout(spark, emb, annLayoutDir, centroids)
         val joined = operators.Ann.ivfJoin(
           spark, cellPath, qsIvf, centroids, k = 10, nProbe = 3)
           .select("query_id", "rank", "vec_id", "sim").collect()
           .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-        val driverSide = operators.Ann.ivfTopKPartitioned(
-          spark, cellPath, qsIvf, centroids, k = 10, nProbe = 3)
+        val inMem = operators.Ann.ivfTopK(
+          qsIvf, operators.Ann.assignCells(emb, centroids), centroids, k = 10, nProbe = 3)
           .select("query_id", "rank", "vec_id", "sim").collect()
           .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
         println(s"[equality] ann_ivf_join rows=${joined.size} " +
-          s"driver=${driverSide.size} equal=${joined == driverSide}")
-        require(joined == driverSide,
-          "ann_ivf_join: distributed join diverged from the driver-side probe")
+          s"inmem=${inMem.size} equal=${joined == inMem}")
+        require(joined == inMem,
+          "ann_ivf_join: layout join diverged from the in-memory probe")
       }
 
       // LSH-tier distributed-join gate (r16): lshJoin over the murmur
@@ -502,7 +501,7 @@ object Verify {
           .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
         val minusLayout = operators.Ann.ivfPqLayout(
           spark, emb.filter(!col("vec_id").isin(7L, 11L)), baseDir, centroids, books)
-        val rebuilt = operators.Ann.ivfPqTopK(
+        val rebuilt = operators.Ann.ivfPqJoin(
           spark, minusLayout, qsIvf, centroids, books, k = 10, nProbe = 3)
           .select("query_id", "rank", "vec_id", "adc_dist").collect()
           .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet

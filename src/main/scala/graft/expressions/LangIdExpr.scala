@@ -5,8 +5,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.CollationSupport
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.TextAnalysis
@@ -21,8 +19,7 @@ import graft.functions.TextAnalysis
   * Identical to the composed form by construction:
   *  - null or space-only text (`trim` strips spaces only) → "und";
   *  - "zh" when CJK code points are at least half of `length(text)`;
-  *  - the text is lowered by the kernel `lower` runs
-  *    (`CollationSupport.Lower` under `lower`'s own ICU switch), every
+  *  - the text is lowered by the kernel `lower` runs ([[Lowercase]]), every
   *    `\s` run (java.util.regex: `[ \t\n\x0B\f\r]`) becomes one space and
   *    one space is added at each end — `regexp_replace(lower(text),
   *    '\\s+', ' ')` wrapped in spaces;
@@ -42,8 +39,7 @@ case class LangId(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = LangId.stringInput(this, child)
 
   private def collationId: Int = child.dataType.asInstanceOf[StringType].collationId
-  // `lower`'s own switch (Lower.useICU), read the same way
-  private lazy val useICU: Boolean = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+  private lazy val useICU: Boolean = Lowercase.icu
 
   override def eval(input: InternalRow): Any =
     LangId.detect(child.eval(input).asInstanceOf[UTF8String], collationId, useICU)
@@ -106,7 +102,7 @@ object LangId {
       i += Character.charCount(cp)
     }
     if (cjk * 2 >= text.numChars()) return Zh
-    val low = CollationSupport.Lower.exec(text, collationId, useICU).toString
+    val low = Lowercase(text, collationId, useICU).toString
     val t = new Array[Int](low.length + 2)
     var n = 0
     t(n) = ' '; n += 1

@@ -17,8 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Column machinery each step.
   *
   * Bit-identical by construction: the window string is
-  * `UTF8String.concatWs(" ", tokens).toLowerCase` — the same kernels
-  * `array_join` and `lower` execute — hashed through the same
+  * `UTF8String.concatWs(" ", tokens)` lowered by [[Lowercase]] — the
+  * same kernels `array_join` and `lower` execute — hashed through the same
   * [[XxHash64Function]] with `xxhash64`'s seed 42. One divergence, by
   * design: fewer than k tokens yields an EMPTY array, where the raw
   * HOF form would have `sequence(0, n-k)` silently produce a
@@ -34,6 +34,9 @@ case class TokenGramHashes(child: Expression, k: Int)
   override def prettyName: String = "token_gram_hashes"
 
   private val space = UTF8String.fromString(" ")
+  private def collationId: Int =
+    child.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StringType].collationId
+  private lazy val useICU: Boolean = Lowercase.icu
 
   protected override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
@@ -51,7 +54,7 @@ case class TokenGramHashes(child: Expression, k: Int)
         while (w < k) { window(w) = toks(i + w); w += 1 }
         // concatWs skips null inputs — the same array_join semantics as
         // the HOF twin (a null token joins as if absent, no NPE).
-        val gram = UTF8String.concatWs(space, window: _*).toLowerCase
+        val gram = Lowercase(UTF8String.concatWs(space, window: _*), collationId, useICU)
         out(i) = XxHash64Function.hash(gram, StringType, 42L)
         i += 1
       }

@@ -18,8 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * main, now kept only in git history).
   *
   * Bit-identical by construction: tokenization calls the SAME kernels
-  * the composed form bottoms out in — `UTF8String.toLowerCase` (what
-  * `lower` executes under the default collation) and
+  * the composed form bottoms out in — [[Lowercase]] (what `lower`
+  * executes, ICU case mapping included) and
   * `UTF8String.split(pattern, -1)` (what `split` executes) — then one
   * pass emits the non-empty tokens followed by adjacent pairs joined
   * with a single space. Null input → null; 0- or 1-token input → just
@@ -33,10 +33,12 @@ case class WordNgramTerms(child: Expression)
 
   private val splitPattern = UTF8String.fromString("[^\\p{L}\\p{N}]+")
   private val space = UTF8String.fromString(" ")
+  private def collationId: Int = child.dataType.asInstanceOf[StringType].collationId
+  private lazy val useICU: Boolean = Lowercase.icu
 
   protected override def nullSafeEval(input: Any): Any = {
-    val parts = input.asInstanceOf[UTF8String]
-      .toLowerCase.split(splitPattern, -1)
+    val parts = Lowercase(input.asInstanceOf[UTF8String], collationId, useICU)
+      .split(splitPattern, -1)
     var nTok = 0
     var i = 0
     while (i < parts.length) {

@@ -4,8 +4,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.CollationSupport
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.TextAnalysis
@@ -28,8 +26,7 @@ import graft.functions.TextAnalysis
   *    lowered token, and the number of non-empty lowered tokens.
   * Tokens come from the kernels the composed forms run: `UTF8String.trim`
   * (spaces only, so a leading tab makes an empty first token), the
-  * `lower` kernel (`CollationSupport.Lower` under `lower`'s ICU switch)
-  * and java.util.regex's split with limit -1, which is what `split`
+  * `lower` kernel ([[Lowercase]]) and java.util.regex's split with limit -1, which is what `split`
   * executes. Null text → null struct, so every count is null, as
   * `size(split(null))` is.
   */
@@ -41,7 +38,7 @@ case class WordStats(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = LangId.stringInput(this, child)
 
   private def collationId: Int = child.dataType.asInstanceOf[StringType].collationId
-  private lazy val useICU: Boolean = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+  private lazy val useICU: Boolean = Lowercase.icu
 
   protected override def nullSafeEval(input: Any): Any =
     WordStats.of(input.asInstanceOf[UTF8String], collationId, useICU)
@@ -76,7 +73,7 @@ object WordStats {
     var chars = 0
     var i = 0
     while (i < toks.length) { chars += toks(i).codePointCount(0, toks(i).length); i += 1 }
-    val words = Spaces.split(CollationSupport.Lower.exec(trimmed, collationId, useICU).toString, -1)
+    val words = Spaces.split(Lowercase(trimmed, collationId, useICU).toString, -1)
     val counts = new java.util.HashMap[String, Integer]()
     var stops = 0
     var stopMask = 0

@@ -188,9 +188,6 @@ object TextAnalysis extends Serializable {
     if (score == 0) "und" else best
   }
 
-  def detectLanguageUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((s: String) => detectLanguage(s))
-
   /** [[detectLanguage]] as a column: the compiled
     * [[graft.expressions.LangId]] kernel, one pass over the code points
     * per row. It equals the scalar form and the composed

@@ -38,7 +38,4 @@ object VectorOps {
     val denom = l2Norm(a) * l2Norm(b)
     when(denom === 0.0, lit(0.0)).otherwise(dot(a, b) / denom)
   }
-
-  /** Cosine distance = 1 - similarity. */
-  def cosineDist(a: Column, b: Column): Column = lit(1.0) - cosineSim(a, b)
 }

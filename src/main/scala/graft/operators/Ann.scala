@@ -17,13 +17,18 @@ import scala.util.hashing.MurmurHash3
   *  - Random-hyperplane LSH: an `nBits` signature per vector; candidates =
   *    same bucket, multi-probed by flipping up to `probeBits` signature
   *    bits. At scale the corpus is written bucketed by signature so the
-  *    candidate join prunes to matching buckets (no full shuffle).
+  *    candidate join prunes to matching buckets.
   *  - IVF (inverted file): Lloyd's k-means over a sample (deterministic
   *    seeding by min-hash of vec ids), each vector assigned to its nearest
-  *    centroid cell; queries probe the `nProbe` nearest cells.
+  *    centroid cell; queries probe the `nProbe` nearest cells. PQ codes
+  *    (raw, residual, per-cell books, OPQ-rotated) partitioned by cell
+  *    score by asymmetric distance.
   *
-  * Exact brute force ([[Retrieval.knnJoin]]) is the oracle both are
-  * recall-tested against.
+  * Two tiers: the in-memory operators ([[lshTopK]], [[ivfTopK]],
+  * [[pqAdcTopK]]) take an arbitrary corpus frame; every probe of a
+  * persisted layout runs one candidate join, [[probeJoin]], and ends in
+  * [[rankTopK]] or [[rankAdc]]. Exact brute force ([[Retrieval.knnJoin]])
+  * is the oracle both families are recall-tested against.
   */
 object Ann {
 
@@ -150,27 +155,105 @@ object Ann {
     scored.sortBy(_._1).take(nProbes).map(_._2).toArray
   }
 
-  /** The shared rank/cut/select tail of every cosine top-k probe form:
-    * rank candidates per query on the `sim` column (desc, `vec_id` asc
-    * tiebreak), cut at `k`. ONE definition — the Verify-gated
-    * "row-identical across probe forms" claims then hold by
-    * construction, and a ranking-contract change (e.g. the ±0.0 class
-    * of fix [[nearestCells]] took) has one place to land instead of
-    * seven (r16 review). Spark plans this as a map-side Partial
+  /** The shared score/rank/cut/select tail of every cosine top-k probe
+    * form: score each (query, candidate) row by the exact codegen cosine
+    * of `q_embedding` and `embedding`, rank per query on `sim` (desc,
+    * `vec_id` asc tiebreak), cut at `k`. ONE definition — the
+    * Verify-gated "row-identical across probe forms" claims then hold
+    * by construction, and a ranking-contract change (e.g. the ±0.0
+    * class of fix [[nearestCells]] took) has one place to land. Spark
+    * plans this as a map-side Partial
     * [[org.apache.spark.sql.execution.window.WindowGroupLimitExec]]
     * before the query_id exchange, so at scale each task forwards at
     * most k rows per query.
     */
   private def rankTopK(cands: DataFrame, k: Int): DataFrame =
     cands
+      .withColumn("sim", VectorExpressions.cosineSim(col("q_embedding"), col("embedding")))
       .withColumn("rank", row_number().over(
         Window.partitionBy("query_id").orderBy(desc("sim"), asc("vec_id"))))
       .filter(col("rank") <= k)
       .select("query_id", "rank", "vec_id", "sim")
 
-  /** Hot-key SALTED candidate equi-join — the skew guard of the
-    * distributed ANN joins ([[ivfJoin]] / [[lshJoin]] / [[ivfPqJoin]]),
-    * r16 verdict "What's missing" #1. The dedup families cap their
+  /** The ADC twin of [[rankTopK]], the tail of every PQ probe form:
+    * drop self-matches (`vec_id` = `query_id`), score each candidate by
+    * the [[adcFromLut]] lookups of its `m` code columns into the joined
+    * `lut`, floored to 6 decimals so the cut is engine-stable, rank per
+    * query on (`adc_dist` asc, `vec_id` asc), cut at `k`.
+    */
+  private def rankAdc(cands: DataFrame, m: Int, k: Int): DataFrame =
+    cands
+      .filter(col("vec_id") =!= col("query_id"))
+      .withColumn("adc_dist", graft.functions.TextAnalysis.floorScale(adcFromLut(m), 6))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("query_id").orderBy(asc("adc_dist"), asc("vec_id"))))
+      .filter(col("rank") <= k)
+      .select("query_id", "rank", "vec_id", "adc_dist")
+
+  /** The default hot-key cap and salt fan-out of the layout probes
+    * ([[saltedKeyJoin]]): a key is salted once it holds over 2^20 rows.
+    */
+  private val HotKeyCap = 1 << 20
+  private val MaxSalt = 64
+
+  /** The candidate join of every layout-backed probe — the one place a
+    * layout meets a query frame. `probe` turns the query frame into
+    * `(query_id, <key>, payload…)` rows: each query's probed keys plus
+    * what the tail scores with (the query embedding for
+    * [[rankTopK]], an ADC lookup table for [[rankAdc]]). The core
+    *  1. pins a nondeterministic query frame ([[pinned]]): the probe
+    *     rows are read once for the key set and once in the join;
+    *  2. prunes the layout to the probed key set ([[prunedLayout]], with
+    *     its adaptive cutoff) when `keySpace` bounds that set — always
+    *     for cells, for signatures while 2^nBits ≤ 4096. A probe frame
+    *     built on the driver (a local relation) gives its keys without
+    *     a job;
+    *  3. salts the keys the layout's occupancy `sidecar` names hot
+    *     ([[hotKeysOf]], [[saltedKeyJoin]]); without a sidecar (a
+    *     versioned root, whose occupancy moves with every batch) the
+    *     join is unsalted;
+    *  4. equi-joins layout and probe rows on the key. Both sides shuffle
+    *     by the key, so queries stay distributed and scored pairs stay
+    *     O(queries × probed-key occupancy), never queries × corpus.
+    * Pruning and salting are physical choices: the rows are those of
+    * the plain equi-join.
+    */
+  private def probeJoin(
+      spark: SparkSession,
+      layout: DataFrame,
+      sidecar: Option[String],
+      queries: DataFrame,
+      probe: DataFrame => DataFrame,
+      key: String,
+      keySpace: Option[Int],
+      hotKeyCap: Int,
+      maxSalt: Int): DataFrame = {
+    val probed = probe(pinned(queries)).filter(col(key).isNotNull)
+    val scanned = keySpace.fold(layout)(prunedLayout(layout, probed, key, _))
+    saltedKeyJoin(scanned, probed, key, hotKeyCap, maxSalt,
+      sidecar.fold(Seq.empty[(Int, Int)])(hotKeysOf(spark, _, key, hotKeyCap, maxSalt)))
+  }
+
+  /** [[probeJoin]] over a partitioned float layout (signature or cell
+    * directories) with the exact cosine tail: `probes` is each query
+    * row's array of probed keys.
+    */
+  private def cosineProbeJoin(
+      spark: SparkSession,
+      path: String,
+      queries: DataFrame,
+      k: Int,
+      key: String,
+      probes: Column,
+      keySpace: Option[Int],
+      hotKeyCap: Int,
+      maxSalt: Int): DataFrame =
+    rankTopK(probeJoin(spark, spark.read.parquet(path), Some(path), queries,
+      _.select(col("query_id"), explode(probes).as(key), col("q_embedding")),
+      key, keySpace, hotKeyCap, maxSalt), k)
+
+  /** Hot-key SALTED candidate equi-join — the skew guard of
+    * [[probeJoin]], r16 verdict "What's missing" #1. The dedup families cap their
     * Zipf-head buckets by CHANGING semantics (star pairs,
     * [[Dedup.minHashLshPairsHubCapped]]); a top-k join cannot — every
     * (query, candidate-in-probed-bucket) pair must be scored or recall
@@ -295,29 +378,17 @@ object Ann {
       .coalesce(1)
       .write.mode("overwrite").parquet(statsPath(path, key))
 
-  /** The layout's occupancy sidecar, BACKFILLED on first read for
-    * layouts written before the sidecar existed (one aggregation pass,
-    * then every later join reads the KB-sized frame). The sidecar is
-    * bounded by the key space (≤ nCells / 2^nBits rows), so consumers
-    * may broadcast it freely.
-    */
-  private[graft] def keyStats(
-      spark: SparkSession, path: String, key: String): DataFrame = {
-    val sp = statsPath(path, key)
-    Layout.onceAt(spark, sp)(_ => writeKeyStats(spark, path, key))
-    spark.read.parquet(sp)
-  }
-
-  /** Bounded-probe partition pruning shared by the distributed joins:
-    * the distinct probed-key set (bounded by the key space — nCells
-    * cells / 2^nBits signatures) becomes a static `isin` on the
-    * partition column, so unprobed layout directories contribute zero
-    * I/O. The probe frame is executed twice — once here for the key
-    * set, once inside the join — so every pruning caller first runs its
-    * query frame through [[pinned]]: the rows both passes see are the
-    * SAME materialized rows even for a nondeterministic
-    * (rand()/sample()) query frame (r17 ADVICE #1 — the caveat used to
-    * live in scaladoc only while pruning defaulted on).
+  /** Bounded-probe partition pruning of [[probeJoin]]: the distinct
+    * probed-key set (bounded by the key space — nCells cells / 2^nBits
+    * signatures) becomes a static `isin` on the partition column
+    * (genuine `PartitionFilters`), so unprobed layout directories
+    * contribute zero I/O. The probe frame is executed twice — once here
+    * for the key set, once inside the join — so [[probeJoin]] first runs
+    * its query frame through [[pinned]]: the rows both passes see are
+    * the SAME materialized rows even for a nondeterministic
+    * (rand()/sample()) query frame (r17 ADVICE #1). A probe frame that
+    * plans as a local relation (built on the driver) is read directly:
+    * collecting it runs no job.
     *
     * ADAPTIVE CUTOFF (r18): when the probed set covers ≥ half of
     * `keySpace` the isin would keep most directories anyway — it prunes
@@ -331,8 +402,11 @@ object Ann {
   private def prunedLayout(
       layout: DataFrame, probed: DataFrame, key: String,
       keySpace: Int): DataFrame = {
-    val keys = probed.select(key).distinct()
-      .collect().map(_.getInt(0)) // bounded: ≤ |key space| values
+    val keyCol = probed.select(key)
+    val local = keyCol.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    val keys = (if (local) keyCol else keyCol.distinct())
+      .collect().map(_.getInt(0)).distinct // bounded: ≤ |key space| values
     if (keys.isEmpty) layout.filter(lit(false))
     else if (2 * keys.length >= keySpace) layout
     else layout.filter(col(key).isin(keys.map(Integer.valueOf): _*))
@@ -439,14 +513,14 @@ object Ann {
     val probesU = adaptiveProbesUdf(nBits, nProbes)
     val bucketed = corpus.withColumn("sig", signatureCol(nBits)(col("embedding")))
     val probed = queries.withColumn("sig", explode(probesU(col("q_embedding"))))
-    rankTopK(bucketed.join(broadcast(probed), "sig")
-      .withColumn("sim", VectorExpressions.cosineSim(col("q_embedding"), col("embedding"))),
-      k)
+    rankTopK(bucketed.join(broadcast(probed), "sig"), k)
   }
 
   /** LSH-bucketed top-k: join queries to corpus on (probed) signature
     * buckets, exact-rerank candidates. `queries(query_id, q_embedding)`,
-    * `corpus(vec_id, embedding)`.
+    * `corpus(vec_id, embedding)`. The in-memory tier: an arbitrary
+    * corpus frame, signed per call, with the probed query frame
+    * broadcast; [[lshJoin]] probes a persisted layout instead.
     */
   def lshTopK(
       queries: DataFrame,
@@ -457,9 +531,7 @@ object Ann {
     val bucketed = corpus.withColumn("sig", signatureCol(nBits)(col("embedding")))
     val probed = queries
       .withColumn("sig", explode(hammingProbesUdf(nBits, probeBits)(col("q_embedding"))))
-    rankTopK(bucketed.join(broadcast(probed), "sig")
-      .withColumn("sim", VectorExpressions.cosineSim(col("q_embedding"), col("embedding"))),
-      k)
+    rankTopK(bucketed.join(broadcast(probed), "sig"), k)
   }
 
   /** The query-adaptive probe UDF shared by [[lshTopKAdaptive]] and
@@ -473,22 +545,20 @@ object Ann {
       if (v == null) Array.empty[Int]
       else adaptiveProbes(v, nBits, nProbes))
 
-  /** LSH similarity JOIN over a [[writeSignaturePartitioned]] /
-    * [[signaturePartitionedLayout]] layout: top-k bucket-probed
-    * neighbors for EVERY row of an arbitrarily large query frame — the
-    * [[ivfJoin]] / [[ivfPqJoin]] treatment applied to the LSH tier.
-    * [[lshTopK]] keeps queries distributed but BROADCASTS the probed
-    * query frame (right for request batches; impossible when the query
-    * side is itself a corpus), and [[lshTopKPartitioned]] collects the
-    * probe set driver-side for a static isin. This form does neither:
-    * probe signatures explode per query row (the Hamming-≤probeBits
-    * ball of [[probeSignatures]]) and candidates come from a plain
-    * equi-join on the signature key, so BOTH sides shuffle by `sig` and
-    * scored pairs stay O(queries × probed-bucket occupancy) — the
-    * corpus-vs-corpus shape (near-dup between two corpora at LSH speed,
-    * nightly batch retrieval) at the hash-bucket tier. Row-identical to
-    * [[lshTopK]] at the same parameters (spec-pinned and Verify-gated
-    * by exact equality).
+  /** LSH top-k over a [[writeSignaturePartitioned]] /
+    * [[signaturePartitionedLayout]] layout, for every row of a query
+    * frame of any size: probe signatures explode per query row (the
+    * Hamming-≤probeBits ball of [[probeSignatures]], as native XOR
+    * masks over the codegen signature) and candidates come from the
+    * [[probeJoin]] equi-join on the signature key. The same operator
+    * serves a 5-query probe batch (the probed set then prunes the scan
+    * to its directories — `PartitionFilters`) and the corpus-vs-corpus
+    * shape (near-dup between two corpora at LSH speed, nightly batch
+    * retrieval). Signature directories are pruned while 2^nBits ≤ 4096:
+    * past that the probed set is no longer driver-bounded, and probing
+    * most directories would prune little anyway. Row-identical to
+    * [[lshTopK]] at the same parameters (spec-pinned and Verify-gated by
+    * exact equality).
     */
   def lshJoin(
       spark: SparkSession,
@@ -497,27 +567,24 @@ object Ann {
       k: Int,
       nBits: Int = 8,
       probeBits: Int = 1,
-      hotSigCap: Int = 1 << 20,
-      maxSalt: Int = 64,
-      pruneBits: Int = 12): DataFrame =
-    lshJoinCore(spark, path, queries, k,
-      q => explode(probeBallCol(signatureCol(nBits)(q), nBits, probeBits)),
-      nBits, hotSigCap, maxSalt, pruneBits)
+      hotSigCap: Int = HotKeyCap,
+      maxSalt: Int = MaxSalt): DataFrame =
+    cosineProbeJoin(spark, path, queries, k, "sig",
+      probeBallCol(signatureCol(nBits)(col("q_embedding")), nBits, probeBits),
+      sigKeySpace(nBits), hotSigCap, maxSalt)
 
   /** [[lshJoin]] with the QUERY-ADAPTIVE probe order ([[adaptiveProbes]]
     * — r17 verdict "What's missing" #1 lifted into the join tier): each
     * query row probes its `nProbes` best buckets by hyperplane-margin
-    * flip distance instead of the full Hamming ball, with the same
-    * salting + pruning guards and the same rank/cut tail. The probe
-    * budget is EXPLICIT (k probes per query, vs the ball's
-    * 1 + nBits + nBits·(nBits−1)/2 at probeBits=2 = 37 at nBits=8), so
-    * corpus-vs-corpus retrieval gets the same recall-per-probe control
-    * the single-query tier already has — at 100 TB the scored-pair
-    * count is probes × bucket occupancy, and margin-ordered probes buy
-    * strictly better recall at equal pair budget (Verify measures and
-    * gates this against the fixed ball). Row-identical to
-    * [[lshTopKAdaptive]] at the same parameters (spec-pinned), and
-    * hash-checked end-to-end via the AnnOracle murmur multiprobe replay.
+    * flip distance instead of the full Hamming ball. The probe budget
+    * is EXPLICIT (nProbes per query, vs the ball's
+    * 1 + nBits + nBits·(nBits−1)/2 at probeBits=2 = 37 at nBits=8), and
+    * on the layout the probe count IS the directory read count, so
+    * margin-ordered probes buy better recall at an equal pair budget
+    * (Verify measures and gates this against the fixed ball).
+    * Row-identical to [[lshTopKAdaptive]] at the same parameters
+    * (spec-pinned), and hash-checked end-to-end via the AnnOracle
+    * murmur multiprobe replay.
     */
   def lshJoinAdaptive(
       spark: SparkSession,
@@ -526,65 +593,17 @@ object Ann {
       k: Int,
       nBits: Int = 8,
       nProbes: Int = 16,
-      hotSigCap: Int = 1 << 20,
-      maxSalt: Int = 64,
-      pruneBits: Int = 12): DataFrame =
-    lshJoinCore(spark, path, queries, k,
-      q => explode(adaptiveProbesUdf(nBits, nProbes)(q)),
-      nBits, hotSigCap, maxSalt, pruneBits)
+      hotSigCap: Int = HotKeyCap,
+      maxSalt: Int = MaxSalt): DataFrame =
+    cosineProbeJoin(spark, path, queries, k, "sig",
+      adaptiveProbesUdf(nBits, nProbes)(col("q_embedding")),
+      sigKeySpace(nBits), hotSigCap, maxSalt)
 
-  private def lshJoinCore(
-      spark: SparkSession,
-      path: String,
-      queries: DataFrame,
-      k: Int,
-      probeOf: Column => Column,
-      nBits: Int,
-      hotSigCap: Int,
-      maxSalt: Int,
-      pruneBits: Int): DataFrame = {
-    val prune = nBits <= pruneBits && pruneBits >= 0
-    // Pin the query frame when pruning will execute it twice (the
-    // [[pinned]] contract — safe for nondeterministic frames).
-    val qSrc = if (prune) pinned(queries) else queries
-    val probed = qSrc
-      .withColumn("sig", probeOf(col("q_embedding")))
-      .filter(col("sig").isNotNull)
-      .select("query_id", "sig", "q_embedding")
-    // Partition-pruned corpus read (r16 verdict next #6): the layout is
-    // already PARTITIONED BY sig, but partition VALUES are not shuffle
-    // partitioning — the equi-join below must still exchange both sides
-    // by the sig key, so the directory structure buys nothing by
-    // itself. What it CAN buy is scan pruning: the distinct probed-sig
-    // set is bounded by 2^nBits regardless of query count, so when
-    // nBits ≤ pruneBits (≤4096 values — a bounded collect, the
-    // driver-side discipline every layout probe follows) one map-side
-    // distinct over the probe frame turns the corpus read into a
-    // static `isin` on the partition column (genuine PartitionFilters),
-    // and unprobed directories contribute zero I/O. When queries probe
-    // every bucket the filter prunes nothing and costs one cheap
-    // aggregate pass over the query side; when they cluster (two
-    // related corpora, a drifted shard) the corpus scan drops to the
-    // probed fraction. nBits > pruneBits (or pruneBits < 0) falls back
-    // to the full-layout join — the distinct set is no longer
-    // driver-bounded, and probing most of 2^nBits directories would
-    // prune little anyway.
-    val layout0 = spark.read.parquet(path)
-    val layout =
-      if (prune) prunedLayout(layout0, probed, "sig", 1 << nBits)
-      else layout0
-    // Hot-signature salting (see [[saltedKeyJoin]]): a degenerate bucket
-    // — near-identical boilerplate hashing to one signature — is the LSH
-    // analog of the MinHash hub; results are identical, the hot bucket's
-    // pairs just land on nsalt partitions. The hot set resolves
-    // DRIVER-SIDE from the layout's build-time sidecar ([[hotKeysOf]],
-    // memoized on the sidecar mtime) — when nothing is hot the plan IS
-    // the plain equi-join; no per-join corpus aggregation either way.
-    rankTopK(saltedKeyJoin(layout, probed, "sig", hotSigCap, maxSalt,
-      hotKeysOf(spark, path, "sig", hotSigCap, maxSalt))
-      .withColumn("sim", VectorExpressions.cosineSim(col("q_embedding"), col("embedding"))),
-      k)
-  }
+  /** The signature key space [[probeJoin]] prunes within: 2^nBits while
+    * that is at most 4096 values (a bounded driver collect), else none.
+    */
+  private def sigKeySpace(nBits: Int): Option[Int] =
+    if (nBits <= 12) Some(1 << nBits) else None
 
   /** Write the corpus PARTITIONED BY its LSH signature bucket — the
     * physical layout that turns [[lshTopK]]'s candidate pruning into a
@@ -609,43 +628,6 @@ object Ann {
     writeKeyStats(corpus.sparkSession, path, "sig")
   }
 
-  /** [[lshTopK]] over a [[writeSignaturePartitioned]] layout. The probe
-    * signature set is tiny and driver-known (nQueries × probe fan-out),
-    * so it becomes a STATIC `isin` filter on the partition column —
-    * visible as `PartitionFilters` in the scan, i.e. genuine partition
-    * pruning, not a post-scan filter — followed by the same broadcast
-    * candidate join and exact cosine rerank. No corpus shuffle, no full
-    * scan, and results are identical to the in-memory [[lshTopK]] with
-    * the same parameters (spec-asserted).
-    */
-  def lshTopKPartitioned(
-      spark: SparkSession,
-      path: String,
-      queries: DataFrame,
-      k: Int,
-      nBits: Int = 8,
-      probeBits: Int = 1): DataFrame =
-    lshPartitionedCore(spark, path, queries, k,
-      v => probeSignatures(signature(v, nBits), nBits, probeBits))
-
-  /** [[lshTopKPartitioned]] with the query-adaptive probe order
-    * ([[adaptiveProbes]]): the probe count IS the partition-directory
-    * read count on this layout, so margin-ordered probing is exactly
-    * the "same recall class at under half the directory reads" trade
-    * the in-memory gate measures — and the results are IDENTICAL to
-    * the in-memory [[lshTopKAdaptive]] at the same (nBits, nProbes)
-    * (spec-pinned), since both score the same probed buckets exactly.
-    */
-  def lshTopKPartitionedAdaptive(
-      spark: SparkSession,
-      path: String,
-      queries: DataFrame,
-      k: Int,
-      nBits: Int = 8,
-      nProbes: Int = 16): DataFrame =
-    lshPartitionedCore(spark, path, queries, k,
-      v => adaptiveProbes(v, nBits, nProbes).toSeq)
-
   /** Build-once ([[Layout.memoLayout]]) [[writeSignaturePartitioned]]
     * layout — the index-build half of partitioned ANN: a 100 TB layout
     * write is a batch job, not a per-query cost. The `sigm` prefix keeps
@@ -653,8 +635,7 @@ object Ann {
     * squared-Lehmer `sig` layouts an older build may have left under the
     * same base directory: the path carries no signature family, so
     * reusing `sig` would probe a stale layout. Returns the layout path
-    * for [[lshTopKPartitioned]] / [[lshTopKPartitionedAdaptive]] /
-    * [[lshJoin]].
+    * for [[lshJoin]] / [[lshJoinAdaptive]].
     */
   def signaturePartitionedLayout(
       spark: SparkSession,
@@ -678,27 +659,6 @@ object Ann {
   private def indexFp(
       centroids: Array[Array[Float]], books: Iterator[Double] = Iterator.empty): Int =
     MurmurHash3.orderedHash(centroids.iterator.flatten.map(_.toDouble) ++ books)
-
-  private def lshPartitionedCore(
-      spark: SparkSession,
-      path: String,
-      queries: DataFrame,
-      k: Int,
-      probesOf: Seq[Float] => Seq[Int]): DataFrame = {
-    import spark.implicits._
-    val qRows = queries.select("query_id", "q_embedding").collect()
-    val probes: Seq[(Long, Int)] = qRows.toSeq.flatMap { r =>
-      val emb = r.getSeq[Float](1)
-      probesOf(emb).map(s => (r.getLong(0), s))
-    }
-    val sigSet = probes.map(_._2).distinct
-    val corpus = spark.read.parquet(path).filter(col("sig").isin(sigSet: _*))
-    val probed = probes.toDF("query_id", "sig")
-      .join(queries, "query_id") // re-attach q_embedding (queries are small)
-    rankTopK(corpus.join(broadcast(probed), "sig")
-      .withColumn("sim", VectorExpressions.cosineSim(col("q_embedding"), col("embedding"))),
-      k)
-  }
 
   // ----------------------------------------------------------------- IVF
   /** Deterministic Lloyd's k-means over a HASH-SAMPLE of the corpus
@@ -794,8 +754,10 @@ object Ann {
   }
 
   /** The `nProbe` nearest centroid cells of one vector (by cosine,
-    * centroid index as the deterministic tiebreak) — shared by the
-    * distributed probe UDF and the driver-side partitioned probe.
+    * centroid index as the deterministic tiebreak) — the probe of
+    * [[ivfTopK]] and of [[ivfPqLocalTopK]]'s driver-built tables; the
+    * other layout probes run the bit-identical codegen kernel
+    * ([[VectorExpressions.ivfCellProbes]]).
     */
   def nearestCells(
       v: Seq[Float], centroids: Array[Array[Float]], nProbe: Int): Array[Int] = {
@@ -837,10 +799,11 @@ object Ann {
   }
 
   /** Build-once ([[Layout.memoLayout]]) [[writeCellPartitioned]]
-    * layout — the registered probe target of the ANN top-k optimizer
-    * rule ([[graft.plans.AnnTopKRewrite]]): corpus rows plus the `cell`
-    * partition column, so a rewritten brute-force top-k recomputes the
-    * exact same cosine over only the probed cells' directories.
+    * layout — the probe target of [[ivfJoin]] and of the ANN top-k
+    * optimizer rule ([[graft.plans.AnnTopKRewrite]]): corpus rows plus
+    * the `cell` partition column, so a rewritten brute-force top-k
+    * recomputes the exact same cosine over only the probed cells'
+    * directories.
     */
   def cellLayout(
       spark: SparkSession,
@@ -850,39 +813,11 @@ object Ann {
     Layout.memoLayout(spark, corpus, baseDir, s"cells${centroids.length}", vecCols,
       Some(indexFp(centroids)))(writeCellPartitioned(corpus, centroids, _))
 
-  /** [[ivfTopK]] over a [[writeCellPartitioned]] layout: probe cells are
-    * computed driver-side from the tiny centroid set, so the cell filter
-    * is a STATIC `isin` on the partition column — genuine
-    * `PartitionFilters` pruning (spec-asserted), not a post-scan filter —
-    * followed by the same broadcast candidate join and exact cosine
-    * rerank. Results are identical to the in-memory [[ivfTopK]] with the
-    * same centroids and parameters.
-    */
-  def ivfTopKPartitioned(
-      spark: SparkSession,
-      path: String,
-      queries: DataFrame,
-      centroids: Array[Array[Float]],
-      k: Int,
-      nProbe: Int = 3): DataFrame = {
-    import spark.implicits._
-    val qRows = queries.select("query_id", "q_embedding").collect()
-    val probes: Seq[(Long, Int)] = qRows.toSeq.flatMap { r =>
-      nearestCells(r.getSeq[Float](1), centroids, nProbe)
-        .map(c => (r.getLong(0), c))
-    }
-    val cellSet = probes.map(_._2).distinct
-    val corpus = spark.read.parquet(path).filter(col("cell").isin(cellSet: _*))
-    val probed = probes.toDF("query_id", "cell").join(queries, "query_id")
-    rankTopK(corpus.join(broadcast(probed), "cell")
-      .withColumn("sim", VectorExpressions.cosineSim(col("q_embedding"), col("embedding"))),
-      k)
-  }
-
   /** IVF top-k: each query probes its `nProbe` nearest cells, exact-reranks
-    * within them. Cell filtering happens before any scoring — at scale the
-    * corpus is partitioned by cell ([[writeCellPartitioned]] /
-    * [[ivfTopKPartitioned]]) so probes touch only those partitions.
+    * within them. The in-memory tier: an arbitrary cell-assigned corpus
+    * frame with the probed query frame broadcast; at scale the corpus
+    * is partitioned by cell ([[writeCellPartitioned]]) and [[ivfJoin]]
+    * reads only the probed cells' directories.
     */
   def ivfTopK(
       queries: DataFrame,
@@ -892,32 +827,22 @@ object Ann {
       nProbe: Int = 3): DataFrame = {
     val probeUdf = udf { (v: Seq[Float]) => nearestCells(v, centroids, nProbe) }
     val probed = queries.withColumn("cell", explode(probeUdf(col("q_embedding"))))
-    rankTopK(assignedCorpus.join(broadcast(probed), "cell")
-      .withColumn("sim", VectorExpressions.cosineSim(col("q_embedding"), col("embedding"))),
-      k)
+    rankTopK(assignedCorpus.join(broadcast(probed), "cell"), k)
   }
 
-  /** Exact-cosine IVF similarity JOIN over a [[writeCellPartitioned]] /
-    * [[cellLayout]] layout: top-k neighbors for EVERY row of an
-    * arbitrarily large query frame — the [[ivfPqJoin]] treatment applied
-    * to the plain (un-quantized) IVF tier, which is the tier users reach
-    * first for corpus-vs-corpus shapes (near-dup between two large
-    * corpora, nightly batch retrieval; reference analog
-    * chroma_utils.py:237-263 applied corpus-wide). [[ivfTopKPartitioned]]
-    * collects its queries driver-side (fine for bounded probe batches,
-    * and it buys a static `PartitionFilters` isin); this form keeps
-    * queries DISTRIBUTED: probe cells explode per query row from the
-    * broadcast centroid array, candidates come from a plain equi-join on
-    * the cell key (the standard banded-candidate shape — scored pairs
-    * stay O(queries × probed-cell occupancy), never queries × corpus),
-    * and the exact codegen cosine reranks within the probe. The join
-    * shuffles BOTH sides by cell — at 100 TB that is the right plan when
-    * the query side is itself corpus-sized (a broadcast would not fit);
-    * for small probe batches use [[ivfTopKPartitioned]].
+  /** Exact-cosine IVF top-k over a [[writeCellPartitioned]] /
+    * [[cellLayout]] layout, for every row of a query frame of any size
+    * (reference analog chroma_utils.py:237-263, applied corpus-wide
+    * when the query side is itself a corpus). Probe cells explode per
+    * query row from the CODEGEN top-nProbe kernel
+    * ([[VectorExpressions.ivfCellProbes]], bit-identical to
+    * [[nearestCells]]), candidates come from the [[probeJoin]] equi-join
+    * on the cell key (the probed cells prune the scan), and the exact
+    * codegen cosine reranks within the probe.
     *
-    * Row-identical to [[ivfTopK]]/[[ivfTopKPartitioned]] at the same
-    * centroids and parameters (spec-pinned and Verify-gated by exact
-    * equality); like them it does not exclude self-matches.
+    * Row-identical to [[ivfTopK]] at the same centroids and parameters
+    * (spec-pinned and Verify-gated by exact equality); like it, it does
+    * not exclude self-matches.
     */
   def ivfJoin(
       spark: SparkSession,
@@ -926,43 +851,11 @@ object Ann {
       centroids: Array[Array[Float]],
       k: Int,
       nProbe: Int = 3,
-      hotCellCap: Int = 1 << 20,
-      maxSalt: Int = 64,
-      pruneCells: Boolean = true): DataFrame = {
-    // Pin the query frame when pruning will execute it twice (the
-    // [[pinned]] contract — safe for nondeterministic frames). The
-    // probe itself is the CODEGEN top-nProbe kernel
-    // ([[VectorExpressions.ivfCellProbes]], bit-identical to
-    // [[nearestCells]]) — the query side is corpus-sized by contract,
-    // so per-row Seq boxing is the same class the IvfCellAssign kernel
-    // removed from the corpus side.
-    val qSrc = if (pruneCells) pinned(queries) else queries
-    val probed = qSrc
-      .withColumn("cell", explode(
-        VectorExpressions.ivfCellProbes(col("q_embedding"), centroids, nProbe)))
-      .select("query_id", "cell", "q_embedding")
-    // Partition-pruned corpus read (the [[lshJoin]] treatment): the
-    // distinct probed-cell set is bounded by nCells regardless of query
-    // count, so one map-side distinct over the probe frame turns the
-    // corpus read into a static `isin` on the partition column —
-    // unprobed cell directories contribute zero I/O. The equi-join
-    // still exchanges both sides by the cell key (partition values are
-    // not shuffle partitioning); pruning only cuts the scan.
-    val layout0 = spark.read.parquet(path)
-    val layout =
-      if (pruneCells) prunedLayout(layout0, probed, "cell", centroids.length) else layout0
-    // Hot-cell salting (see [[saltedKeyJoin]]): a dense semantic cluster
-    // landing in one cell is the ANN analog of the MinHash hub; results
-    // are identical, the hot cell's candidate pairs just land on nsalt
-    // shuffle partitions instead of one. The hot set resolves
-    // DRIVER-SIDE from the layout's build-time sidecar ([[hotKeysOf]],
-    // memoized on the sidecar mtime) — when nothing is hot the plan IS
-    // the plain equi-join; no per-join corpus aggregation either way.
-    rankTopK(saltedKeyJoin(layout, probed, "cell", hotCellCap, maxSalt,
-      hotKeysOf(spark, path, "cell", hotCellCap, maxSalt))
-      .withColumn("sim", VectorExpressions.cosineSim(col("q_embedding"), col("embedding"))),
-      k)
-  }
+      hotCellCap: Int = HotKeyCap,
+      maxSalt: Int = MaxSalt): DataFrame =
+    cosineProbeJoin(spark, path, queries, k, "cell",
+      VectorExpressions.ivfCellProbes(col("q_embedding"), centroids, nProbe),
+      Some(centroids.length), hotCellCap, maxSalt)
 
   /** The `ann_ivf_join_adaptive` operating point — ONE source of truth
     * shared by the SparkEntry registration, the AnnOracle mirror's
@@ -984,10 +877,9 @@ object Ann {
     * a single probe; a boundary query spends the full cap where recall
     * is actually at risk — at equal AVERAGE probe budget the adaptive
     * join dominates the fixed-nProbe form (measured and gated in
-    * Verify). Same sidecar-driven salting + probed-cell pruning guards
-    * as [[ivfJoin]]; the probe rule is rank-monotone, so the DuckDB
-    * mirror replays it as a rank + distance-ratio predicate over the
-    * same captured-centroid arithmetic (hash-checked end to end).
+    * Verify). The probe rule is rank-monotone, so the DuckDB mirror
+    * replays it as a rank + distance-ratio predicate over the same
+    * captured-centroid arithmetic (hash-checked end to end).
     */
   def ivfJoinAdaptive(
       spark: SparkSession,
@@ -997,23 +889,11 @@ object Ann {
       k: Int,
       nProbeMax: Int = IvfJoinAdaptiveProbeMax,
       ratio: Double = IvfJoinAdaptiveRatio,
-      hotCellCap: Int = 1 << 20,
-      maxSalt: Int = 64,
-      pruneCells: Boolean = true): DataFrame = {
-    val qSrc = if (pruneCells) pinned(queries) else queries
-    val probed = qSrc
-      .withColumn("cell", explode(
-        VectorExpressions.ivfCellProbesAdaptive(
-          col("q_embedding"), centroids, nProbeMax, ratio)))
-      .select("query_id", "cell", "q_embedding")
-    val layout0 = spark.read.parquet(path)
-    val layout =
-      if (pruneCells) prunedLayout(layout0, probed, "cell", centroids.length) else layout0
-    rankTopK(saltedKeyJoin(layout, probed, "cell", hotCellCap, maxSalt,
-      hotKeysOf(spark, path, "cell", hotCellCap, maxSalt))
-      .withColumn("sim", VectorExpressions.cosineSim(col("q_embedding"), col("embedding"))),
-      k)
-  }
+      hotCellCap: Int = HotKeyCap,
+      maxSalt: Int = MaxSalt): DataFrame =
+    cosineProbeJoin(spark, path, queries, k, "cell",
+      VectorExpressions.ivfCellProbesAdaptive(col("q_embedding"), centroids, nProbeMax, ratio),
+      Some(centroids.length), hotCellCap, maxSalt)
 
   /** Per-vector symmetric int8 quantization: scale by 127/max|x| and
     * floor. 4× less storage/bandwidth than float32 — at 100 TB the
@@ -1635,10 +1515,10 @@ object Ann {
     * LUT costs the same arithmetic ONCE per query on the driver
     * (microseconds), and the scan's per-row work collapses to m
     * codegen'd literal-array lookups. Queries are a bounded probe batch
-    * by contract (the same contract under which [[ivfPqTopK]] computes
-    * probe cells driver-side).
+    * by contract (the same contract under which [[ivfPqLocalTopK]]
+    * builds its per-cell tables on the driver).
     */
-  private def adcLut(
+  private[graft] def adcLut(
       codebooks: Seq[Seq[Seq[Double]]], q: Seq[Float]): Seq[Seq[Double]] = {
     val dsub = codebooks.head.head.length
     codebooks.zipWithIndex.map { case (cents, s) =>
@@ -1658,7 +1538,7 @@ object Ann {
     * bit-identical arithmetic (subspace sums added left to right, the
     * same association as the LUT-free column form).
     */
-  private def adcFromLut(m: Int): Column =
+  private[graft] def adcFromLut(m: Int): Column =
     (0 until m).map(s =>
       element_at(element_at(col("lut"), s + 1), col(s"code_$s") + 1))
       .reduce(_ + _)
@@ -1727,13 +1607,7 @@ object Ann {
       .select("vec_id", "embedding").collect()
       .map(r => (r.getLong(0), adcLut(codebooks, r.getSeq[Float](1)))).toSeq
       .toDF("query_id", "lut")
-    codes.join(broadcast(luts), col("vec_id") =!= col("query_id"))
-      .withColumn("adc_dist", graft.functions.TextAnalysis.floorScale(
-        adcFromLut(codebooks.length), 6))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(asc("adc_dist"), asc("vec_id"))))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "adc_dist")
+    rankAdc(codes.crossJoin(broadcast(luts)), codebooks.length, k)
   }
 
   // ------------------------------------------------------------- IVF-PQ
@@ -1766,7 +1640,7 @@ object Ann {
   /** Build-once ([[Layout.memoLayout]]) [[writeIvfPqPartitioned]]
     * layout, keyed by the corpus AND the index (centroids + codebooks,
     * [[indexFp]]): retrained centroids or codebooks get a fresh path.
-    * Returns the layout path for [[ivfPqTopK]].
+    * Returns the layout path for [[ivfPqJoin]].
     */
   def ivfPqLayout(
       spark: SparkSession,
@@ -1779,62 +1653,22 @@ object Ann {
       Some(indexFp(centroids, codebooks.iterator.flatten.flatten)))(
       writeIvfPqPartitioned(corpus, centroids, codebooks, _))
 
-  /** IVF-PQ top-k over a [[writeIvfPqPartitioned]] layout: probe cells
-    * are computed driver-side from the tiny centroid set (a STATIC
-    * `isin` on the partition column — genuine `PartitionFilters`
-    * pruning, spec-asserted), then the ADC scan of [[pqAdcTopK]] runs
-    * over ONLY the probed cells' codes. The scan streams m-byte codes
-    * from `nProbe` partition directories; neither the float corpus nor
-    * the unprobed cells contribute any I/O. With `nProbe = nCells` the
-    * result is IDENTICAL to the flat [[pqAdcTopK]] over the same
-    * codebooks (spec-pinned) — cell pruning is a physical optimization;
-    * the ADC arithmetic, floored-distance ranking and vec_id tiebreak
-    * are shared code ([[adcLut]]/[[adcFromLut]]).
-    */
-  def ivfPqTopK(
-      spark: SparkSession,
-      path: String,
-      queries: DataFrame,
-      centroids: Array[Array[Float]],
-      codebooks: Seq[Seq[Seq[Double]]],
-      k: Int,
-      nProbe: Int = 3): DataFrame = {
-    import spark.implicits._
-    val qRows = queries.select("query_id", "q_embedding").collect()
-    val probes: Seq[(Long, Int, Seq[Seq[Double]])] = qRows.toSeq.flatMap { r =>
-      val lut = adcLut(codebooks, r.getSeq[Float](1))
-      nearestCells(r.getSeq[Float](1), centroids, nProbe)
-        .map(c => (r.getLong(0), c, lut))
-    }
-    val cellSet = probes.map(_._2).distinct
-    val codes = spark.read.parquet(path).filter(col("cell").isin(cellSet: _*))
-    val probed = probes.toDF("query_id", "cell", "lut")
-    codes.join(broadcast(probed), "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc_dist", graft.functions.TextAnalysis.floorScale(
-        adcFromLut(codebooks.length), 6))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(asc("adc_dist"), asc("vec_id"))))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "adc_dist")
-  }
-
-  /** IVF-PQ similarity JOIN: top-k ADC neighbors from the layout for
-    * EVERY row of an arbitrarily large query frame — ANN as a JOIN, not
-    * a probe batch. [[ivfPqTopK]] collects its queries driver-side
-    * (bounded probe batches, static `PartitionFilters`); this form keeps
-    * queries DISTRIBUTED for the corpus-vs-corpus shapes (embedding
-    * near-dup sweeps, nightly batch retrieval) where the query side is
-    * itself millions of rows: probe cells come from a per-row UDF over
-    * the broadcast centroid array, the per-query ADC lookup table is
-    * built ONCE per query row as an array column (the HOF arithmetic
-    * runs on query rows only — never per scored row; scoring is the
-    * same codegen'd [[adcFromLut]] lookups), and candidates come from an
-    * equi-join on the cell key — the standard banded-candidate shape
-    * every Dedup operator here uses, so scored pairs stay
-    * O(queries × probed-cell occupancy), never queries × corpus.
-    * Row-identical to [[ivfPqTopK]] at the same parameters (spec-pinned
-    * and Verify-gated by exact equality).
+  /** IVF-PQ top-k over a [[writeIvfPqPartitioned]] / [[ivfPqLayout]]
+    * layout — ANN as a JOIN: top-k ADC neighbors for every row of a
+    * query frame of any size, from a 3-query probe batch to the
+    * corpus-vs-corpus shapes (embedding near-dup sweeps, nightly batch
+    * retrieval). Probe cells explode per query row from the CODEGEN
+    * top-nProbe kernel, the per-query ADC lookup table is built ONCE per
+    * query row as an array column (the HOF arithmetic of
+    * [[subspaceDists]] runs on query rows only — bit-identical to
+    * [[adcLut]]; scoring is the codegen'd [[adcFromLut]] lookups), and
+    * candidates come from the [[probeJoin]] equi-join on the cell key:
+    * the probed cells prune the scan, which streams only the m-byte
+    * codes of those directories. With `nProbe = nCells` the result is
+    * IDENTICAL to the flat [[pqAdcTopK]] over the same codebooks
+    * (spec-pinned and Verify-gated) — cell pruning is a physical
+    * optimization; the ADC arithmetic, floored-distance ranking and
+    * vec_id tiebreak are [[rankAdc]].
     */
   def ivfPqJoin(
       spark: SparkSession,
@@ -1844,39 +1678,11 @@ object Ann {
       codebooks: Seq[Seq[Seq[Double]]],
       k: Int,
       nProbe: Int = 3,
-      hotCellCap: Int = 1 << 20,
-      maxSalt: Int = 64,
-      pruneCells: Boolean = true): DataFrame = {
-    val dsub = codebooks.head.head.length
-    val lutCol = array(codebooks.zipWithIndex.map { case (cents, s) =>
-      subspaceDists(cents, col("q_embedding"), s, dsub)
-    }: _*)
-    // Pinned query frame (see [[pinned]]) + codegen probe kernel — the
-    // [[ivfJoin]] treatment; the LUT column stays the HOF form (it runs
-    // on query rows only, never per scored row).
-    val qSrc = if (pruneCells) pinned(queries) else queries
-    val probed = qSrc
-      .withColumn("lut", lutCol)
-      .withColumn("cell", explode(
-        VectorExpressions.ivfCellProbes(col("q_embedding"), centroids, nProbe)))
-      .select("query_id", "cell", "lut")
-    // Probed-cell pruning + hot-cell salting — the same pair of guards
-    // as [[ivfJoin]], the hot set driver-resolved from the build-time
-    // sidecar ([[hotKeysOf]]).
-    val layout0 = spark.read.parquet(path)
-    val layout =
-      if (pruneCells) prunedLayout(layout0, probed.select("query_id", "cell"), "cell", centroids.length)
-      else layout0
-    saltedKeyJoin(layout, probed, "cell", hotCellCap, maxSalt,
-      hotKeysOf(spark, path, "cell", hotCellCap, maxSalt))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc_dist", graft.functions.TextAnalysis.floorScale(
-        adcFromLut(codebooks.length), 6))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(asc("adc_dist"), asc("vec_id"))))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "adc_dist")
-  }
+      hotCellCap: Int = HotKeyCap,
+      maxSalt: Int = MaxSalt): DataFrame =
+    rankAdc(probeJoin(spark, spark.read.parquet(path), Some(path), queries,
+      lutProbe(codebooks, VectorExpressions.ivfCellProbes(col("q_embedding"), centroids, nProbe)),
+      "cell", Some(centroids.length), hotCellCap, maxSalt), codebooks.length, k)
 
   /** [[ivfPqJoin]] with the QUERY-ADAPTIVE probe budget — the PQ tier
     * of [[ivfJoinAdaptive]] (one shared operating point,
@@ -1885,8 +1691,8 @@ object Ann {
     * distance-ratio ball, so at 100 TB — where the PQ join is the tier
     * that actually streams, codes being m bytes/vector — the probe
     * budget concentrates on boundary queries instead of paying a flat
-    * nProbe everywhere. Same guards, same mirror discipline (the
-    * rank-monotone cut replays in SQL), hash-checked end to end.
+    * nProbe everywhere. Same mirror discipline (the rank-monotone cut
+    * replays in SQL), hash-checked end to end.
     */
   def ivfPqJoinAdaptive(
       spark: SparkSession,
@@ -1897,34 +1703,33 @@ object Ann {
       k: Int,
       nProbeMax: Int = IvfJoinAdaptiveProbeMax,
       ratio: Double = IvfJoinAdaptiveRatio,
-      hotCellCap: Int = 1 << 20,
-      maxSalt: Int = 64,
-      pruneCells: Boolean = true): DataFrame = {
+      hotCellCap: Int = HotKeyCap,
+      maxSalt: Int = MaxSalt): DataFrame =
+    rankAdc(probeJoin(spark, spark.read.parquet(path), Some(path), queries,
+      lutProbe(codebooks,
+        VectorExpressions.ivfCellProbesAdaptive(col("q_embedding"), centroids, nProbeMax, ratio)),
+      "cell", Some(centroids.length), hotCellCap, maxSalt), codebooks.length, k)
+
+  /** The per-query ADC lookup table of `v` as an array column — the
+    * column form of [[adcLut]], same doubles.
+    */
+  private def lutCol(codebooks: Seq[Seq[Seq[Double]]], v: Column): Column = {
     val dsub = codebooks.head.head.length
-    val lutCol = array(codebooks.zipWithIndex.map { case (cents, s) =>
-      subspaceDists(cents, col("q_embedding"), s, dsub)
+    array(codebooks.zipWithIndex.map { case (cents, s) =>
+      subspaceDists(cents, v, s, dsub)
     }: _*)
-    val qSrc = if (pruneCells) pinned(queries) else queries
-    val probed = qSrc
-      .withColumn("lut", lutCol)
-      .withColumn("cell", explode(
-        VectorExpressions.ivfCellProbesAdaptive(
-          col("q_embedding"), centroids, nProbeMax, ratio)))
-      .select("query_id", "cell", "lut")
-    val layout0 = spark.read.parquet(path)
-    val layout =
-      if (pruneCells) prunedLayout(layout0, probed.select("query_id", "cell"), "cell", centroids.length)
-      else layout0
-    saltedKeyJoin(layout, probed, "cell", hotCellCap, maxSalt,
-      hotKeysOf(spark, path, "cell", hotCellCap, maxSalt))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc_dist", graft.functions.TextAnalysis.floorScale(
-        adcFromLut(codebooks.length), 6))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(asc("adc_dist"), asc("vec_id"))))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "adc_dist")
   }
+
+  /** The `(query_id, cell, lut)` probe rows of a raw-code PQ layout:
+    * the lookup table is built before the cells explode, so a query's
+    * probed cells share one table.
+    */
+  private def lutProbe(codebooks: Seq[Seq[Seq[Double]]], cells: Column)(
+      queries: DataFrame): DataFrame =
+    queries
+      .withColumn("lut", lutCol(codebooks, col("q_embedding")))
+      .withColumn("cell", explode(cells))
+      .select("query_id", "cell", "lut")
 
   /** Two-stage IVF-PQ: ADC over-fetches `k * overfetch` candidates per
     * query from the probed cells, then an exact float EUCLIDEAN rerank
@@ -1951,7 +1756,7 @@ object Ann {
       nProbe: Int = 3,
       overfetch: Int = 4): DataFrame =
     exactEuclideanRerank(
-      ivfPqTopK(spark, path, queries, centroids, codebooks,
+      ivfPqJoin(spark, path, queries, centroids, codebooks,
         k * overfetch, nProbe).select("query_id", "vec_id"),
       queries, corpus, k)
 
@@ -2101,20 +1906,18 @@ object Ann {
       Some(indexFp(centroids, codebooks.iterator.flatten.flatten)))(
       writeIvfPqResidualPartitioned(corpus, centroids, codebooks, _))
 
-  /** Residual-encoded IVF-PQ top-k (IVFADC proper): the probed frame
-    * already carries each candidate row's `cell`, so the ADC lookup
-    * tables are built from the QUERY RESIDUAL `q − centroid(cell)` —
-    * per (query, probed cell), not per query — and the scored distance
-    * is exactly `‖q − (centroid(cell) + reconstruction(codes))‖²`, the
+  /** Residual-encoded IVF-PQ top-k (IVFADC proper): the ADC lookup
+    * tables are built from the QUERY RESIDUAL `q − centroid(cell)` — per
+    * (query, probed cell), not per query — and the scored distance is
+    * exactly `‖q − (centroid(cell) + reconstruction(codes))‖²`, the
     * distance from the query to the candidate's full reconstruction
     * (spec-pinned against a brute-force scan of reconstructions). The
-    * residual LUT is computed driver-side per (query, probed cell) —
-    * `adcLut` over the FLOAT residual `q − centroid(cell)`, the same
-    * float subtract [[residualCol]] applies on the encode side;
-    * everything else (partition-pruned scan, floored ranking, vec_id
-    * tiebreak) is the [[ivfPqTopK]] shape. LUT cost is nProbe× the
+    * residual is the same float subtraction [[residualCol]] applies on
+    * the encode side, let-bound once per probe row, and its table is
+    * [[lutCol]]'s; everything else (cell probes, [[probeJoin]], floored
+    * ranking) is the [[ivfPqJoin]] shape. Table cost is nProbe× the
     * raw-code path's — the standard IVFADC trade, paid once per probe
-    * pair on the driver, never per scanned row.
+    * row, never per scanned row.
     */
   def ivfPqResidualTopK(
       spark: SparkSession,
@@ -2124,26 +1927,14 @@ object Ann {
       codebooks: Seq[Seq[Seq[Double]]],
       k: Int,
       nProbe: Int = 3): DataFrame = {
-    import spark.implicits._
-    val qRows = queries.select("query_id", "q_embedding").collect()
-    val probes: Seq[(Long, Int, Seq[Seq[Double]])] = qRows.toSeq.flatMap { r =>
-      val q = r.getSeq[Float](1)
-      nearestCells(q, centroids, nProbe).map { c =>
-        val res = Array.tabulate(q.length)(i => q(i) - centroids(c)(i))
-        (r.getLong(0), c, adcLut(codebooks, res))
-      }
-    }
-    val cellSet = probes.map(_._2).distinct
-    val codes = spark.read.parquet(path).filter(col("cell").isin(cellSet: _*))
-    val probed = probes.toDF("query_id", "cell", "lut")
-    codes.join(broadcast(probed), "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc_dist", graft.functions.TextAnalysis.floorScale(
-        adcFromLut(codebooks.length), 6))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(asc("adc_dist"), asc("vec_id"))))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "adc_dist")
+    val residualProbe = (q: DataFrame) => q
+      .withColumn("cell", explode(
+        VectorExpressions.ivfCellProbes(col("q_embedding"), centroids, nProbe)))
+      .withColumn("lut", letCol(
+        residualCol(centroids, col("cell"), col("q_embedding")))(lutCol(codebooks, _)))
+      .select("query_id", "cell", "lut")
+    rankAdc(probeJoin(spark, spark.read.parquet(path), Some(path), queries, residualProbe,
+      "cell", Some(centroids.length), HotKeyCap, MaxSalt), codebooks.length, k)
   }
 
   // ------------------------------------------- per-cell (local) codebooks
@@ -2291,10 +2082,12 @@ object Ann {
 
   /** [[ivfPqResidualTopK]] under per-cell books: the (query, probed
     * cell) LUT is built from the query residual with THAT CELL's
-    * codebooks — everything else (partition-pruned scan, broadcast
-    * probe frame, floored ADC ranking) is the residual path verbatim.
-    * Probed cells that hold no corpus rows have no books and no
-    * candidates; they are skipped.
+    * codebooks. The books differ per cell, so the tables are built on
+    * the driver ([[adcLut]]) from the collected queries — a bounded
+    * probe batch by contract — and enter [[probeJoin]] as a local
+    * frame; the candidate join and the floored ADC ranking are the
+    * residual path's. Probed cells that hold no corpus rows have no
+    * books and no candidates; they are skipped.
     */
   def ivfPqLocalTopK(
       spark: SparkSession,
@@ -2316,17 +2109,9 @@ object Ann {
           (r.getLong(0), c, adcLut(localBooks(c), res))
         }
     }
-    val cellSet = probes.map(_._2).distinct
-    val codes = spark.read.parquet(path).filter(col("cell").isin(cellSet: _*))
-    val probed = probes.toDF("query_id", "cell", "lut")
-    codes.join(broadcast(probed), "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc_dist", graft.functions.TextAnalysis.floorScale(
-        adcFromLut(m), 6))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(asc("adc_dist"), asc("vec_id"))))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "adc_dist")
+    rankAdc(probeJoin(spark, spark.read.parquet(path), Some(path),
+      probes.toDF("query_id", "cell", "lut"), identity,
+      "cell", Some(centroids.length), HotKeyCap, MaxSalt), m, k)
   }
 
   /** LOPQ with refinement: per-cell codes order candidates, the shared
@@ -2397,15 +2182,12 @@ object Ann {
   /** The LIVE code rows of a versioned root: every batch's codes
     * (partition discovery over `batch=`/`cell=`), minus tombstoned ids
     * (left-anti — Spark broadcasts the tombstone side while it is small;
-    * compaction keeps it small). `extraFilter` is pushed below the
-    * anti-join so cell pruning stays a `PartitionFilters` predicate.
+    * compaction keeps it small). A cell filter on the result is pushed
+    * below the anti-join, so cell pruning stays a `PartitionFilters`
+    * predicate.
     */
-  def ivfPqLiveCodes(
-      spark: SparkSession,
-      rootPath: String,
-      extraFilter: Option[Column] = None): DataFrame = {
-    val codes0 = spark.read.option("basePath", rootPath).parquet(rootPath)
-    val codes = extraFilter.fold(codes0)(codes0.filter)
+  def ivfPqLiveCodes(spark: SparkSession, rootPath: String): DataFrame = {
+    val codes = spark.read.option("basePath", rootPath).parquet(rootPath)
     val tombPath = new org.apache.hadoop.fs.Path(s"$rootPath/_tombstones")
     val fs = tombPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(tombPath))
@@ -2415,11 +2197,14 @@ object Ann {
     else codes
   }
 
-  /** [[ivfPqTopK]] over a VERSIONED root ([[ivfPqAppendBatch]] /
-    * [[ivfPqDeleteByKey]]): identical scoring/ranking, reading the live
-    * rows — so a base-layout query and a query over (base write + batch
-    * appends − tombstones) of the same corpus are row-for-row equal
-    * (spec-pinned). The cell probe prunes partitions across all batches.
+  /** [[ivfPqJoin]] over a VERSIONED root ([[ivfPqAppendBatch]] /
+    * [[ivfPqDeleteByKey]]): identical probes, scoring and ranking over
+    * the live rows ([[ivfPqLiveCodes]]) — so a base-layout query and a
+    * query over (base write + batch appends − tombstones) of the same
+    * corpus are row-for-row equal (spec-pinned). The probed cells prune
+    * partitions across all batches (the filter sits below the tombstone
+    * anti-join). No occupancy sidecar: the root's occupancy moves with
+    * every batch, so the join is unsalted.
     */
   def ivfPqTopKVersioned(
       spark: SparkSession,
@@ -2428,27 +2213,10 @@ object Ann {
       centroids: Array[Array[Float]],
       codebooks: Seq[Seq[Seq[Double]]],
       k: Int,
-      nProbe: Int = 3): DataFrame = {
-    import spark.implicits._
-    val qRows = queries.select("query_id", "q_embedding").collect()
-    val probes: Seq[(Long, Int, Seq[Seq[Double]])] = qRows.toSeq.flatMap { r =>
-      val lut = adcLut(codebooks, r.getSeq[Float](1))
-      nearestCells(r.getSeq[Float](1), centroids, nProbe)
-        .map(c => (r.getLong(0), c, lut))
-    }
-    val cellSet = probes.map(_._2).distinct
-    val codes = ivfPqLiveCodes(spark, rootPath,
-      Some(col("cell").isin(cellSet: _*)))
-    val probed = probes.toDF("query_id", "cell", "lut")
-    codes.join(broadcast(probed), "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc_dist", graft.functions.TextAnalysis.floorScale(
-        adcFromLut(codebooks.length), 6))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(asc("adc_dist"), asc("vec_id"))))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "adc_dist")
-  }
+      nProbe: Int = 3): DataFrame =
+    rankAdc(probeJoin(spark, ivfPqLiveCodes(spark, rootPath), None, queries,
+      lutProbe(codebooks, VectorExpressions.ivfCellProbes(col("q_embedding"), centroids, nProbe)),
+      "cell", Some(centroids.length), HotKeyCap, MaxSalt), codebooks.length, k)
 
   /** The canonical VERSIONED-root path for a (corpus, index) pair —
     * keyed as [[ivfPqLayout]] (prefix `ivfpqv_`), but computed WITHOUT

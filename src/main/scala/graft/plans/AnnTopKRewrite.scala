@@ -21,8 +21,10 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
   * This is the retriever query shape of the reference
   * (langchain_utils.py:13 — similarity top-k over the vector store) as a
   * user would naively spell it against the raw corpus. The operator tier
-  * ([[graft.operators.Ann.ivfTopKPartitioned]]) fixes code that calls
-  * it; this rule fixes the PLAN for code that doesn't: at 100 TB the
+  * ([[graft.operators.Ann.ivfJoin]] over the same cell layout) fixes
+  * code that calls it; this rule fixes the PLAN for code that doesn't,
+  * and keeps its own probe because it rewrites a plan whose query
+  * vector is a literal, not a query frame: at 100 TB the
   * difference is scanning `nProbe/nCells` of the corpus instead of all
   * of it. Same design split as [[HammingJoinRewrite]] — the rewrite
   * needs facts Catalyst cannot derive (which layout materializes this

@@ -260,7 +260,7 @@ class AnnRuleSpec extends AnyFunSuite with SparkTestSession {
       assert(df.collect().nonEmpty)
       // the rewrite's coarse stage must score with EXACTLY the operator
       // tier's residual ADC: adcDistToQueryResidual's CASE-selected
-      // per-cell LUT chain vs ivfPqResidualTopK's driver-built LUT rows
+      // per-cell LUT chain vs ivfPqResidualTopK's per-probe-row LUT column
       // (query_id = -1 so its self-exclusion filter is vacuous), same
       // (adc_dist, vec_id) order
       val cells = Ann.nearestCells(q.toSeq, centroids, 2).toSeq

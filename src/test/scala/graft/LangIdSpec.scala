@@ -39,7 +39,8 @@ class LangIdSpec extends AnyFunSuite with SparkTestSession {
     "\tthe and the", "\n de la que", "\u00A0the\u00A0and\u00A0",
     "ACCIÓN Y NACIÓN", "la nación y la acción", "die Kinder spielen",
     "中文", "中文 the and", "中 a", "🙂🙂中中", "𠀀𠀀中",
-    "de", " de ", "le de la", "en", "12345 67890")
+    "de", " de ", "le de la", "en", "12345 67890",
+    "\u2C2F\uA7C0 THE AND", "İSTANBUL DE LA", "ΟΔΟΣ ΣΑΣ")
 
   private def samples(n: Int): Seq[String] =
     (1 to n).map(i => textGen.pureApply(Gen.Parameters.default, Seed(i.toLong)))

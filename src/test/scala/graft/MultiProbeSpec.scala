@@ -49,7 +49,7 @@ class MultiProbeSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "rank", "vec_id", "sim")
         .as[(Long, Int, Long, Double)].collect().toSet
-    val part = rows(Ann.lshTopKPartitionedAdaptive(
+    val part = rows(Ann.lshJoinAdaptive(
       spark, s"$dir/sig", queries, k = 5, nBits = 8, nProbes = 16))
     val mem = rows(Ann.lshTopKAdaptive(queries, corpus, k = 5, nBits = 8, nProbes = 16))
     assert(part == mem)

@@ -382,7 +382,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
   test("signature-partitioned corpus: probes prune partitions, match in-memory LSH") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sigpart").toString
     Ann.writeSignaturePartitioned(corpus.select("vec_id", "embedding"), dir, nBits = 8)
-    val df = Ann.lshTopKPartitioned(spark, dir, queries, k = 5, nBits = 8, probeBits = 2)
+    val df = Ann.lshJoin(spark, dir, queries, k = 5, nBits = 8, probeBits = 2)
     val out = df.select("query_id", "rank", "vec_id", "sim")
       .as[(Long, Int, Long, Double)].collect().toSet
     val mem = Ann.lshTopK(queries, corpus, k = 5, nBits = 8, probeBits = 2)
@@ -398,7 +398,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     val (centroids, assigned) = Ann.buildIvf(spark, corpus, nCells = 8, maxIter = 3)
     val dir = java.nio.file.Files.createTempDirectory("graft_cellpart").toString
     Ann.writeCellPartitioned(corpus.select("vec_id", "embedding"), centroids, dir)
-    val df = Ann.ivfTopKPartitioned(spark, dir, queries, centroids, k = 5, nProbe = 3)
+    val df = Ann.ivfJoin(spark, dir, queries, centroids, k = 5, nProbe = 3)
     val out = df.select("query_id", "rank", "vec_id")
       .as[(Long, Int, Long)].collect().toSet
     val mem = Ann.ivfTopK(queries, assigned, centroids, k = 5, nProbe = 3)
@@ -712,7 +712,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
       .select($"vec_id".as("query_id"), $"embedding".as("q_embedding"))
     // full probe: cell pruning is physical only — the composed path must
     // reproduce the flat ADC scan row for row (ranks, ids, distances)
-    val full = Ann.ivfPqTopK(spark, dir, qs, centroids, books, k = 7, nProbe = 8)
+    val full = Ann.ivfPqJoin(spark, dir, qs, centroids, books, k = 7, nProbe = 8)
       .select("query_id", "rank", "vec_id", "adc_dist")
       .as[(Long, Int, Long, Double)].collect().toSet
     val flat = Ann.pqAdcTopK(vecs, books, nQueries = 3, k = 7)
@@ -721,7 +721,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     assert(full == flat, "full-probe IVF-PQ must equal the flat ADC scan")
     // partial probe: the cell filter must reach the scan as a genuine
     // partition-pruning predicate, not a post-scan filter
-    val partial = Ann.ivfPqTopK(spark, dir, qs, centroids, books, k = 7, nProbe = 2)
+    val partial = Ann.ivfPqJoin(spark, dir, qs, centroids, books, k = 7, nProbe = 2)
     val plan = partial.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("cell"),
       s"probe must prune cell partitions:\n${plan.take(800)}")
@@ -788,7 +788,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     }
     // partial probe + modest over-fetch: recall vs exact must not go DOWN
     // when the rerank is added on top of the same probed candidate set
-    val plain = Ann.ivfPqTopK(spark, dir, qs, centroids, books, k = 5, nProbe = 2)
+    val plain = Ann.ivfPqJoin(spark, dir, qs, centroids, books, k = 5, nProbe = 2)
       .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
     val rr = Ann.ivfPqTopKReranked(
       spark, dir, qs, vecs, centroids, books, k = 5, nProbe = 2, overfetch = 4)
@@ -911,7 +911,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     val versioned = Ann.ivfPqTopKVersioned(
       spark, root, qs, centroids, books, k = 7, nProbe = 3)
     assert(rows(versioned) ==
-      rows(Ann.ivfPqTopK(spark, flatDir, qs, centroids, books, k = 7, nProbe = 3)),
+      rows(Ann.ivfPqJoin(spark, flatDir, qs, centroids, books, k = 7, nProbe = 3)),
       "base + appended batch must equal the rebuilt layout")
     // the probe must still prune cell partitions across batch directories
     val plan = versioned.queryExecution.executedPlan.toString
@@ -935,7 +935,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     Ann.writeIvfPqPartitioned(
       vecs.filter(!$"vec_id".isin(victims: _*)), centroids, books, flatMinus)
     assert(rows(afterDelete) ==
-      rows(Ann.ivfPqTopK(spark, flatMinus, qs, centroids, books, k = 7, nProbe = 3)),
+      rows(Ann.ivfPqJoin(spark, flatMinus, qs, centroids, books, k = 7, nProbe = 3)),
       "tombstoned layout must equal a rebuild without the victims")
     assert(rows(afterDelete) != rows(versioned),
       "victims were in the result set — the delete must change it")
@@ -968,7 +968,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
       df.select("query_id", "rank", "vec_id", "adc_dist")
         .as[(Long, Int, Long, Double)].collect().toSet
     val joined = rows(Ann.ivfPqJoin(spark, dir, qs, centroids, books, k = 5, nProbe = 2))
-    val driver = rows(Ann.ivfPqTopK(spark, dir, qs, centroids, books, k = 5, nProbe = 2))
+    val driver = rows(AnnDriverReference.ivfPqTopK(spark, dir, qs, centroids, books, k = 5, nProbe = 2))
     assert(joined == driver, "distributed join must equal the driver-side probe")
     assert(joined.nonEmpty)
   }
@@ -987,7 +987,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
       df.select("query_id", "rank", "vec_id", "sim")
         .as[(Long, Int, Long, Double)].collect().toSet
     val joined = rows(Ann.ivfJoin(spark, dir, qs, centroids, k = 5, nProbe = 2))
-    val driver = rows(Ann.ivfTopKPartitioned(spark, dir, qs, centroids, k = 5, nProbe = 2))
+    val driver = rows(AnnDriverReference.ivfTopK(spark, dir, qs, centroids, k = 5, nProbe = 2))
     val mem = rows(Ann.ivfTopK(qs, assigned, centroids, k = 5, nProbe = 2))
     assert(joined == driver, "distributed join must equal the driver-side layout probe")
     assert(joined == mem, "distributed join must equal the in-memory probe")
@@ -1031,16 +1031,15 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "rank", "vec_id", "sim")
         .as[(Long, Int, Long, Double)].collect().toSet
-    val full = rows(Ann.lshJoin(spark, dir, qs, k = 5, nBits = 8, probeBits = 1,
-      pruneBits = -1))
+    val full = rows(Ann.lshTopK(qs, vecs, k = 5, nBits = 8, probeBits = 1))
     assert(rows(pruned) == full,
-      "pruned scan must return exactly the full-layout join's rows")
+      "pruned scan must return exactly the in-memory probe's rows")
     assert(full.nonEmpty)
   }
 
   test("ivfJoin prunes the layout scan to the probed cells") {
     val vecs = corpus.select("vec_id", "embedding")
-    val (centroids, _) = Ann.buildIvf(spark, vecs, nCells = 8, maxIter = 3)
+    val (centroids, assigned) = Ann.buildIvf(spark, vecs, nCells = 8, maxIter = 3)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_prune").toString
     Ann.writeCellPartitioned(vecs, centroids, dir)
     // ONE query probing 2 of 8 cells — safely under the r18 adaptive
@@ -1059,10 +1058,9 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "rank", "vec_id", "sim")
         .as[(Long, Int, Long, Double)].collect().toSet
-    val full = rows(Ann.ivfJoin(spark, dir, qs, centroids, k = 5, nProbe = 2,
-      pruneCells = false))
+    val full = rows(Ann.ivfTopK(qs, assigned, centroids, k = 5, nProbe = 2))
     assert(rows(pruned) == full,
-      "pruned scan must return exactly the full-layout join's rows")
+      "pruned scan must return exactly the in-memory probe's rows")
     assert(full.nonEmpty)
   }
 
@@ -1073,7 +1071,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     // (the distinct pass already ran; the choice is free). Rows must be
     // identical either way.
     val vecs = corpus.select("vec_id", "embedding")
-    val (centroids, _) = Ann.buildIvf(spark, vecs, nCells = 8, maxIter = 3)
+    val (centroids, assigned) = Ann.buildIvf(spark, vecs, nCells = 8, maxIter = 3)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_diffuse").toString
     Ann.writeCellPartitioned(vecs, centroids, dir)
     // many queries at high nProbe: the probed set is most of the 8 cells
@@ -1097,8 +1095,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "rank", "vec_id", "sim")
         .as[(Long, Int, Long, Double)].collect().toSet
-    val full = rows(Ann.ivfJoin(spark, dir, qs, centroids, k = 5, nProbe = 6,
-      pruneCells = false))
+    val full = rows(Ann.ivfTopK(qs, assigned, centroids, k = 5, nProbe = 6))
     assert(rows(adaptive) == full, "adaptive cutoff must not change any row")
     assert(full.nonEmpty)
   }

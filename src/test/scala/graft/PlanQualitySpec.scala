@@ -18,6 +18,19 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestSession {
     df.queryExecution.executedPlan.toString
   }
 
+  private val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  /** The final executed plan (AQE stages resolved by running it). */
+  private def executed(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.execution.SparkPlan = {
+    df.collect()
+    df.queryExecution.executedPlan
+  }
+
+  /** Every expression node of every plan node, subqueries included. */
+  private def exprs(
+      p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
+    helper.collectWithSubqueries(p) { case n => n.expressions.flatMap(_.collect { case e => e }) }.flatten
+
   test("q1: shipdate predicate reaches PushedFilters and columns are pruned") {
     val p = plan("q1_pricing_summary")
     assert(p.contains("PushedFilters") && p.contains("LessThanOrEqual(l_shipdate"))
@@ -233,16 +246,10 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("curate taggers: tag is one projection + the exact-dup join; Gopher is per-row") {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayFilter, ArrayTransform, Expression, ScalaUDF}
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayFilter, ArrayTransform, ScalaUDF}
     import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import graft.expressions.{LangId, WordStats}
-    val helper = new AdaptiveSparkPlanHelper {}
-    def executed(df: DataFrame): SparkPlan = { df.collect(); df.queryExecution.executedPlan }
-    def exprs(p: SparkPlan): Seq[Expression] =
-      helper.collectWithSubqueries(p) { case n => n.expressions.flatMap(_.collect { case e => e }) }.flatten
     def generates(p: SparkPlan) = helper.collectWithSubqueries(p) { case g: GenerateExec => g }
     def joins(p: SparkPlan) = helper.collectWithSubqueries(p) { case j: BaseJoinExec => j }
 
@@ -260,6 +267,13 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestSession {
 
     val gopher = executed(SparkEntry.queries("text_gopher_rules")(spark, sfDir))
     assert(generates(gopher).isEmpty && joins(gopher).isEmpty, s"text_gopher_rules:\n$gopher")
+  }
+
+  test("text_repetition runs the WordStats kernel once per row") {
+    // a filter on a projected struct of the counts is pushed below the
+    // projection and evaluates the kernel a second time
+    val rep = executed(SparkEntry.queries("text_repetition")(spark, sfDir))
+    assert(exprs(rep).count(_.isInstanceOf[graft.expressions.WordStats]) == 1, rep)
   }
 
   test("r18 shared-subtree materialization: one corpus pass feeds the multi-branch consumers") {

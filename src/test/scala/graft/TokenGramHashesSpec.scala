@@ -27,9 +27,16 @@ class TokenGramHashesSpec extends AnyFunSuite with SparkTestSession {
   private def samples(count: Int): Seq[Seq[String]] =
     (1 to count).map(i => toksGen.pureApply(Gen.Parameters.default, Seed(2000L + i)))
 
+  /** Case-mapping edges: ICU (what `lower` runs) lowers U+2C2F, U+A7C0
+    * and U+A7CB, the JVM's tables do not; `İ` lowers to two code points;
+    * a word-final capital sigma lowers to `ς`.
+    */
+  private val caseEdges: Seq[String] = Seq("\u2C2F", "\uA7C0", "İSTANBUL", "ΟΔΟΣ", "ΣΑΣ",
+    "\u2C5F", "\uA7C1", "i", "Σ", "\uA7CB", "\u2C2F\uA7C0", "ΑΣ", "İ", "y")
+
   test("property: fused window hashes == HOF form for k in {2, 5, 13}") {
     for (k <- Seq(2, 5, 13)) {
-      val df = samples(200).zipWithIndex
+      val df = (caseEdges +: samples(200)).zipWithIndex
         .map { case (t, i) => (i.toLong, t) }.toDF("id", "toks")
         .filter(size(col("toks")) >= k)
       val both = df.select(

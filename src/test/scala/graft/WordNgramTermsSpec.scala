@@ -29,8 +29,18 @@ class WordNgramTermsSpec extends AnyFunSuite with SparkTestSession {
   private def samples(count: Int): Seq[String] =
     (1 to count).map(i => textGen.pureApply(Gen.Parameters.default, Seed(1000L + i)))
 
+  /** Case-mapping edges: ICU (what `lower` runs) lowers U+2C2F, U+A7C0,
+    * U+A7CB and U+A7DC, the JVM's tables do not; `İ` lowers to two code
+    * points; a word-final capital sigma lowers to `ς`. Only U+A7CB and
+    * U+A7DC lower to code points the JVM's `\p{L}` knows (ɤ, ƛ), so they
+    * are the edges the `[^\p{L}\p{N}]+` split keeps.
+    */
+  private val caseEdges: Seq[String] = Seq(
+    "\u2C2F \u2C5F \u2C2F", "\uA7C0 old \uA7C1", "İSTANBUL İ i", "ΟΔΟΣ ΣΑΣ", "ΣΑΣ.",
+    "\uA7CB ram \uA7DC")
+
   test("property: fused terms == HOF form, order included") {
-    val df = (samples(200) ++ Seq("", "one", "two words", "  ", null, "ΣΣ ΣΣ"))
+    val df = (samples(200) ++ Seq("", "one", "two words", "  ", null, "ΣΣ ΣΣ") ++ caseEdges)
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     val both = df.select(
         col("id"),

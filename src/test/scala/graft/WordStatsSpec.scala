@@ -122,7 +122,7 @@ class WordStatsSpec extends AnyFunSuite with SparkTestSession {
     "a\u00A0the of", "word  word\t\tword ",
     // U+2C2F lowers to U+2C5F under ICU (what `lower` runs) but not under
     // the JVM's older tables: one repeated word, not two distinct ones
-    "\u2C2F \u2C5F \u2C2F the")
+    "\u2C2F \u2C5F \u2C2F the", "\uA7C0 \uA7C1 the", "ΟΔΟΣ ΣΑΣ the")
 
   private def docs(n: Int): DataFrame =
     (fixed ++ (1 to n).map(i => textGen.pureApply(Gen.Parameters.default, Seed(i.toLong))))
