@@ -177,9 +177,12 @@ object Bench {
     * hostname + whether any base was overridden so an off-host reading
     * is recognizably uncalibrated instead of silently wrong.
     */
+  private def envKey(prop: String): String =
+    prop.toUpperCase(java.util.Locale.ROOT).replace('.', '_')
+
   private def baseOverride(prop: String, default: Double): Double =
     sys.props.get(prop)
-      .orElse(sys.env.get(prop.toUpperCase.replace('.', '_')))
+      .orElse(sys.env.get(envKey(prop)))
       .map { v =>
         // A clear message naming the knob: an unguarded toDouble here
         // surfaces as an opaque ExceptionInInitializerError at the
@@ -187,7 +190,7 @@ object Bench {
         // exactly on the off-host runs the override exists for.
         try v.toDouble catch {
           case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$prop (or ${prop.toUpperCase.replace('.', '_')}): " +
+            s"$prop (or ${envKey(prop)}): " +
               s"cannot parse '$v' as a double")
         }
       }.getOrElse(default)
@@ -213,7 +216,7 @@ object Bench {
     Seq("graft.calib.cpu.base", "graft.calib.shuffle.base",
       "graft.calib.text.base", "graft.calib.overhead.base").exists(p =>
       sys.props.contains(p) ||
-        sys.env.contains(p.toUpperCase.replace('.', '_')))
+        sys.env.contains(envKey(p)))
 
   /** One calibration checkpoint: each probe twice, keep the min (the
     * second-shortest estimator would need 3+ runs; min-of-2 already

@@ -21,8 +21,8 @@ import graft.operators.Dedup
   *  - [[agreementSql]] ↔ `Dedup.sigAgreement`;
   *  - [[simHashSql]] / [[simHashBandsSql]] ↔ `TextAnalysis.simHashMod`
   *    and the banded operators' `Dedup.bandCut`;
-  *  - [[candidatesSql]] ↔ the pairwise band join, or
-  *    `Dedup.hubCappedCandidates` under a cap;
+  *  - [[candidatesSql]] ↔ `Dedup.bandCandidates`, with or without its
+  *    hub cap, and [[agreedSql]] ↔ `Dedup.agreed`;
   *  - [[editVerifySql]] ↔ `Dedup.verifyPairsByEdit`;
   *  - [[embeddingNearDupSql]] ↔ `Dedup.embeddingNearDupBucketed` over
   *    `Dedup.portableSignature`, with [[cosineSql]] as its recheck.
@@ -194,10 +194,10 @@ private[graft] object DedupOracle {
   private def hammingSql(a: String, b: String): String = s"bit_count(xor($a, $b))"
 
   /** Candidate pairs `cand` (doc_a, doc_b, `p`_a, `p`_b) over the banded
-    * CTE `bd` (doc_id, `p`, b, band): every pair sharing a band, or under
-    * `hubCap` ↔ `Dedup.hubCappedCandidates` — bucket sizes, the over-cap
-    * hot set, the min-id hub with its payload, cold all-pairs and star
-    * emission for hot buckets.
+    * CTE `bd` (doc_id, `p`, b, band) ↔ `Dedup.bandCandidates`: every
+    * pair sharing a band, or under `hubCap` (its `maxBandSize`) bucket
+    * sizes, the over-cap hot set, the min-id hub with its payload, cold
+    * all-pairs and star emission for hot buckets.
     */
   private def candidatesSql(p: String, hubCap: Option[Int] = None): String = hubCap match {
     case None =>
@@ -377,7 +377,8 @@ private[graft] object DedupOracle {
        |WHERE ${hammingSql("a.simhash", "b.simhash")} <= $SimHashMaxHamming
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  /** ↔ `Dedup.simHashPairsHubCapped` on the hot-copy fixture. */
+  /** ↔ `Dedup.simHashPairsBanded` under `maxBandSize = HubCap` on the
+    * hot-copy fixture. */
   private def simHashHubCapSql: String =
     s"""WITH input AS (
        |  ${sliceSql(hot = true)}),

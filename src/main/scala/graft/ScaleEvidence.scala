@@ -177,7 +177,7 @@ object ScaleEvidence {
       // Materialize before the two independent counts — without it the
       // whole hub-capped pipeline executes once per action and `sec`
       // would record ~2x the real cost next to uniform_sec.
-      val pairs = operators.Dedup.minHashLshPairsHubCapped(
+      val pairs = operators.Dedup.minHashLshPairsPortable(
         skewed, maxBandSize = skewCap).localCheckpoint()
       val hub = pairs.filter(col("doc_a") === 7L).count()
       val planted = pairs.filter(col("doc_b") === col("doc_a") + lit(nBase) &&

@@ -394,7 +394,7 @@ object SparkEntry {
       // The SimHash twin of dedup_minhash_hubcap: same Zipf-head
       // fixture (all three portable-fingerprint bands go hot), same star
       // semantics.
-      Dedup.simHashPairsHubCapped(
+      Dedup.simHashPairsBanded(
         DedupOracle.withHotCopies(DedupOracle.slice(s, dir)),
         maxHamming = DedupOracle.SimHashMaxHamming, maxBandSize = DedupOracle.HubCap)
         .orderBy("doc_a", "doc_b")
@@ -405,7 +405,7 @@ object SparkEntry {
       // over the cap, so it emits a STAR to hub doc 0 instead of 465
       // quadratic pairs; cold buckets stay byte-identical to
       // dedup_minhash_lsh.
-      Dedup.minHashLshPairsHubCapped(
+      Dedup.minHashLshPairsPortable(
         DedupOracle.withHotCopies(DedupOracle.slice(s, dir)),
         maxBandSize = DedupOracle.HubCap)
         .withColumn("est_jaccard", round(col("est_jaccard"), 6))
@@ -430,7 +430,7 @@ object SparkEntry {
       // cold candidates verify byte-identically to
       // dedup_minhash_verified, and leaf↔leaf verdicts inside the hot
       // bucket come from cluster closure over verified hub edges.
-      Dedup.minHashVerifiedPairsHubCapped(
+      Dedup.minHashVerifiedPairs(
         DedupOracle.withHotCopies(DedupOracle.salted(DedupOracle.slice(s, dir))),
         minAgreement = DedupOracle.LooseFloor, minEditSim = DedupOracle.EditFloor,
         maxBandSize = DedupOracle.HubCap)
@@ -2223,9 +2223,14 @@ object SparkEntry {
       val expectedDirs = qs.select("q_embedding").collect()
         .flatMap(r => operators.Ann.adaptiveProbes(r.getSeq[Float](0), 8, 16))
         .distinct.length
-      val scanned = out.queryExecution.executedPlan.toString
-      require(scanned.contains("PartitionFilters"),
-        "ann_lsh_partitioned_adaptive: no PartitionFilters in the scan")
+      // The scan's own partition filters, not the join's inferred
+      // isnotnull(sig), which every plan carries.
+      val partitionFilters = "PartitionFilters: \\[([^\\]]*)\\]".r
+        .findAllMatchIn(out.queryExecution.executedPlan.collectLeaves().mkString)
+        .map(_.group(1)).mkString(";")
+      require((partitionFilters.contains(" IN (") || partitionFilters.contains("INSET")) &&
+        partitionFilters.contains("sig"),
+        s"ann_lsh_partitioned_adaptive: no static sig IN/INSET in the scan: $partitionFilters")
       require(expectedDirs <= 5 * 16,
         s"ann_lsh_partitioned_adaptive: probe union $expectedDirs exceeds budget")
       out

@@ -9,7 +9,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Distinct, binary-sorted character n-gram shingles of a string — the
   * fused replacement for the composed higher-order-function form
   * (`array_sort(array_distinct(transform(sequence(...), i -> substr)))`,
-  * kept as [[graft.functions.TextAnalysis.charShinglesHof]] for the
+  * kept in test sources as `TwinReference.charShinglesHof` for the
   * equality spec). HOFs evaluate their lambda interpreted, once per
   * position, and `substr` re-walks the string from byte 0 each call —
   * O(len²) with a lambda frame per window. This expression walks the

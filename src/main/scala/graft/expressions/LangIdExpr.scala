@@ -12,7 +12,8 @@ import graft.functions.TextAnalysis
 /** The trigram-profile language ID of
   * [[graft.functions.TextAnalysis.detectLanguageCol]] in one pass over the
   * code points. Replaces the composed form (kept as
-  * `TextAnalysis.detectLanguageHof` for the equality spec), whose
+  * `TwinReference.detectLanguageHof` in test sources for the equality
+  * spec), whose
   * `transform`/`filter` lambdas evaluate interpreted once per trigram
   * per profile with an `isin` over the profile's list.
   *

@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * array — the per-window kernel of the span-dedup family
   * ([[graft.operators.Dedup.repeatedSpanDedup]]/`gramIndex`/
   * `incrementalSpanDedup`), fused. Replaces the composed form (kept as
-  * `Dedup.gramHashesHof` for the equality spec)
+  * `TwinReference.gramHashesHof` in test sources for the equality spec)
   * `transform(sequence(0, n-k), i -> xxhash64(lower(array_join(slice(
   * toks, i+1, k), " "))))`, whose lambda evaluates interpreted per
   * window and re-materializes a sliced array + joined string through

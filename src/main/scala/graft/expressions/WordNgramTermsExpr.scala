@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * hashed-n-gram feature space of Xie et al. 2023 that
   * [[graft.operators.Scale.dsirFeatures]] and the quality classifier
   * consume. Replaces the composed form (kept as
-  * `Scale.dsirTermsColHof` for the equality spec)
+  * `TwinReference.dsirTermsColHof` in test sources for the equality spec)
   * `concat(toks, zip_with(slice(toks,1,n-1), slice(toks,2,n-1), concat))`
   * whose slice/zip_with lambdas evaluate interpreted per token — the
   * bigram stage alone measured ~3× the cost of the codegen'd tokenize

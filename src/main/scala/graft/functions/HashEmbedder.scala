@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
+import java.util.Locale
 import scala.util.hashing.MurmurHash3
 
 /** Deterministic local text embedder (SURVEY.md T-3).
@@ -23,7 +24,7 @@ object HashEmbedder extends Serializable {
   private val Seed = 0x5eed42
 
   def tokens(text: String): Array[String] =
-    text.toLowerCase.split("[^\\p{L}\\p{N}]+").filter(_.nonEmpty)
+    text.toLowerCase(Locale.ROOT).split("[^\\p{L}\\p{N}]+").filter(_.nonEmpty)
 
   def embed(text: String, dim: Int = Dim): Array[Float] = {
     val v = new Array[Double](dim)

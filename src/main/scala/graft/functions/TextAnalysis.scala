@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftSqlShim
+import java.util.Locale
 import scala.util.hashing.MurmurHash3
 
 /** Text-analysis operators for large-scale training-data pipelines:
@@ -175,7 +176,7 @@ object TextAnalysis extends Serializable {
     // and any engine that counts characters — astral-plane text would
     // otherwise split the two implementations
     if (cjk * 2 >= cps.length) return "zh"
-    val t = " " + text.toLowerCase.replaceAll("\\s+", " ") + " "
+    val t = " " + text.toLowerCase(Locale.ROOT).replaceAll("\\s+", " ") + " "
     val scores = LangProfiles.collect { case (lang, grams) if grams.nonEmpty =>
       var s = 0
       grams.foreach { g =>
@@ -190,52 +191,12 @@ object TextAnalysis extends Serializable {
 
   /** [[detectLanguage]] as a column: the compiled
     * [[graft.expressions.LangId]] kernel, one pass over the code points
-    * per row. It equals the scalar form and the composed
-    * [[detectLanguageHof]] (LangIdSpec), and the composed form is what the
+    * per row. It equals the scalar form and the composed HOF form kept
+    * in test sources (LangIdSpec), and the composed form is what the
     * DuckDB mirror replays.
     */
   def detectLanguageCol(text: Column): Column =
     GraftSqlShim.column(graft.expressions.LangId(GraftSqlShim.expression(text)))
-
-  /** Bind a subexpression ONCE and reference it through a lambda variable
-    * (used by [[detectLanguageHof]]). Spark has no let-binding; without
-    * it, Catalyst inlines a copy of the bound expression into every use
-    * site, and inside interpreted higher-order functions each copy
-    * re-evaluates per reference (the `corpus_datacard` pathology: a whole
-    * regexp_replace re-run per character position inside a per-trigram
-    * lambda). A single-element `transform` evaluates its input once per
-    * row and hands the lambda a bound variable.
-    */
-  private def let(v: Column)(f: Column => Column): Column =
-    element_at(transform(array(v), f), 1)
-
-  /** The composed form [[detectLanguageCol]] replaced, kept as the
-    * equality-spec twin: trigram positions via `sequence`+`transform`,
-    * profile hits via `filter`+`size`, argmax via `array_max` over
-    * (score, lang) structs, each stage let-bound. Counting positions
-    * whose trigram is in the profile set equals the scalar version's
-    * per-gram overlapping indexOf counts because each profile's grams are
-    * distinct. It is the shape `langidChainSql` mirrors in DuckDB.
-    */
-  private[graft] def detectLanguageHof(text: Column): Column = {
-    val raw = coalesce(text, lit(""))
-    val scoredLang =
-      let(concat(lit(" "), regexp_replace(lower(raw), "\\s+", " "), lit(" "))) { t =>
-        let(when(length(t) < 3, array().cast("array<string>"))
-            .otherwise(transform(sequence(lit(0), length(t) - 3), i => t.substr(i + 1, lit(3))))) { tris =>
-          let(array_max(array(LangProfiles.toSeq.sortBy(_._1).collect {
-            case (lang, grams) if grams.nonEmpty =>
-              struct(size(filter(tris, g => g.isin(grams: _*))).as("s"), lit(lang).as("l"))
-          }: _*))) { best =>
-            when(best.getField("s") === 0, lit("und")).otherwise(best.getField("l"))
-          }
-        }
-      }
-    val cjk = length(regexp_replace(raw, "[^\\x{4E00}-\\x{9FFF}\\x{3400}-\\x{4DBF}]", ""))
-    when(length(trim(raw)) === 0, lit("und"))
-      .when(cjk * 2 >= length(text), lit("zh"))
-      .otherwise(scoredLang)
-  }
 
   // --------------------------------------------------------- PII redaction
   /** Redact common PII patterns (emails, phone numbers, IPv4, SSN-shaped
@@ -278,7 +239,7 @@ object TextAnalysis extends Serializable {
     */
   def fingerprint(text: String): Long = {
     if (text == null) return 0L
-    val norm = text.toLowerCase.replaceAll("\\s+", " ").trim
+    val norm = text.toLowerCase(Locale.ROOT).replaceAll("\\s+", " ").trim
     var h = 1125899906842597L // prime
     var i = 0
     while (i < norm.length) { h = 31 * h + norm.charAt(i); i += 1 }
@@ -296,7 +257,7 @@ object TextAnalysis extends Serializable {
     */
   def fingerprintMod(text: String): Long = {
     if (text == null) return 0L
-    val norm = text.toLowerCase.replaceAll("\\s+", " ").trim
+    val norm = text.toLowerCase(Locale.ROOT).replaceAll("\\s+", " ").trim
     var h = 7L
     var i = 0
     while (i < norm.length) {
@@ -412,17 +373,6 @@ object TextAnalysis extends Serializable {
   def charShingles(text: Column, n: Int): Column =
     GraftSqlShim.column(
       graft.expressions.CharShingles(GraftSqlShim.expression(text), n))
-
-  /** The composed higher-order-function form [[charShingles]] replaced
-    * (r13): kept as the equality-spec twin — the fused expression must
-    * match it bit for bit on any input (TextAnalysisSpec).
-    */
-  private[graft] def charShinglesHof(text: Column, n: Int): Column =
-    when(length(text) < n, array().cast("array<string>"))
-      .otherwise(array_sort(array_distinct(
-        transform(
-          sequence(lit(0), length(text) - n),
-          i => text.substr(i + 1, lit(n))))))
 
   /** Word w-shingles via Scala (for MinHash); lowercased. */
   def wordShingles(text: String, w: Int): Array[String] = {

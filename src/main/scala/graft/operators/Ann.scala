@@ -255,7 +255,7 @@ object Ann {
   /** Hot-key SALTED candidate equi-join — the skew guard of
     * [[probeJoin]], r16 verdict "What's missing" #1. The dedup families cap their
     * Zipf-head buckets by CHANGING semantics (star pairs,
-    * [[Dedup.minHashLshPairsHubCapped]]); a top-k join cannot — every
+    * the `maxBandSize` hub cap of [[Dedup.minHashLshPairsPortable]]); a top-k join cannot — every
     * (query, candidate-in-probed-bucket) pair must be scored or recall
     * silently drops. So the guard redistributes instead of capping: a
     * key whose corpus occupancy exceeds `hotKeyCap` is split into

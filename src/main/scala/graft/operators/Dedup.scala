@@ -23,14 +23,6 @@ object Dedup {
       graft.expressions.TokenGramHashes(GraftSqlShim.expression(toks), k))
   }
 
-  /** The composed HOF form [[gramHashes]] replaced (r13) — the
-    * equality-spec twin (TokenGramHashesSpec pins bit-identity on
-    * size >= k inputs, the guard every call site applies). */
-  private[graft] def gramHashesHof(toks: Column, k: Int): Column =
-    transform(
-      sequence(lit(0), size(toks) - k),
-      i => xxhash64(lower(array_join(slice(toks, i + 1, lit(k)), " "))))
-
   /** C4-style cross-document LINE dedup: a line that occurs in several
     * documents survives only at its first occurrence corpus-wide (min
     * (doc_id, line_idx)); every later copy is stripped. This is the rule
@@ -400,8 +392,8 @@ object Dedup {
       .select("doc_a", "doc_b", "cont_a_in_b", "cont_b_in_a")
 
   /** MinHash+LSH near-dup candidate pairs: shingle → signature → band
-    * hashes → equi-join on (band, hash) → distinct pairs, verified by
-    * estimated Jaccard (signature agreement) >= threshold.
+    * hashes → [[bandCandidates]] → distinct pairs, verified by
+    * estimated Jaccard (signature agreement, [[agreed]]) >= threshold.
     */
   def minHashLshPairs(
       docs: DataFrame,
@@ -419,22 +411,7 @@ object Dedup {
     val signed = Scale.parallelismFloor(docs)
       .select(col("doc_id"), sigUdf(col("text")).as("sig"))
     val banded = signed.select(col("doc_id"), col("sig"), explode(bandUdf(col("sig"))).as("band"))
-    val a = banded.as("a"); val b = banded.as("b")
-    val cands = a.join(b, col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-      .dropDuplicates("doc_a", "doc_b")
-    val estJaccard = udf { (x: Seq[Long], y: Seq[Long]) =>
-      var agree = 0
-      var i = 0
-      while (i < x.length) { if (x(i) == y(i)) agree += 1; i += 1 }
-      agree.toDouble / x.length
-    }
-    cands
-      .withColumn("est_jaccard", estJaccard(col("sig_a"), col("sig_b")))
-      .filter(col("est_jaccard") >= threshold)
-      .select("doc_a", "doc_b", "est_jaccard")
+    agreed(bandCandidates(banded, "sig"), threshold)
   }
 
   /** (doc_id, sig, band) rows with the portable mod-p MinHash signature
@@ -463,12 +440,30 @@ object Dedup {
             element_at(col("sig"), b * rows + r + 1))): _*)): _*)).as("band"))
   }
 
-  /** Fraction of signature positions on which `a` and `b` agree — the
-    * MinHash estimate of Jaccard similarity.
+  /** Fraction of signature positions on which two MinHash signatures
+    * agree (`agree / numHashes`) — the MinHash estimate of Jaccard
+    * similarity, replayed by `DedupOracle.agreementSql`. A Scala
+    * function on purpose: a `ScalaUDF` compiles into its stage's
+    * generated code, where a `zip_with`/`filter` composition would be an
+    * interpreted `CodegenFallback` on curate's plan.
     */
-  private def sigAgreement(a: Column, b: Column, numHashes: Int): Column =
-    size(filter(zip_with(a, b, (x, y) => x === y), v => v))
-      .cast("double") / numHashes
+  private val sigAgreement = udf { (x: Seq[Long], y: Seq[Long]) =>
+    var agree = 0
+    var i = 0
+    while (i < x.length) { if (x(i) == y(i)) agree += 1; i += 1 }
+    agree.toDouble / x.length
+  }
+
+  /** The agreement tail of the MinHash pair operators, the engine twin
+    * of `DedupOracle.agreedSql`: the (doc_a, doc_b, sig_a, sig_b)
+    * candidates whose [[sigAgreement]] clears `threshold`, as
+    * (doc_a, doc_b, est_jaccard).
+    */
+  private def agreed(cands: DataFrame, threshold: Double): DataFrame =
+    cands
+      .withColumn("est_jaccard", sigAgreement(col("sig_a"), col("sig_b")))
+      .filter(col("est_jaccard") >= threshold)
+      .select("doc_a", "doc_b", "est_jaccard")
 
   /** (band, blocker) admission index over a standing corpus: one row per
     * LSH band key, carrying the smallest corpus doc id holding it. This
@@ -490,10 +485,11 @@ object Dedup {
 
   /** [[minHashLshPairs]] with the portable mod-p signature
     * ([[TextAnalysis.minHashSignaturePortable]]): identical join/banding
-    * shape (explode band keys → equi-join → distinct pairs → signature
-    * agreement), but every hash is exactly reproducible in ANSI SQL, so
-    * the whole operator — candidate generation included — is
-    * oracle-checkable. 16 hashes × 4 bands keeps the oracle SQL tractable.
+    * shape (explode band keys → [[bandCandidates]] → [[agreed]]), but
+    * every hash is exactly reproducible in ANSI SQL, so the whole
+    * operator — candidate generation included — is oracle-checkable.
+    * 16 hashes × 4 bands keeps the oracle SQL tractable. `maxBandSize`
+    * is the hub cap of [[bandCandidates]] (default: none).
     *
     * Not a drop-in for [[minHashLshPairs]]: delegated to this operator at
     * curate's parameters (3-word shingles, 64 hashes, 16 bands), the
@@ -509,118 +505,90 @@ object Dedup {
       shingleWords: Int = 3,
       numHashes: Int = 16,
       bands: Int = 4,
-      threshold: Double = 0.5): DataFrame = {
-    val banded = bandedSignaturesPortable(docs, shingleWords, numHashes, bands)
-    val a = banded.as("a"); val b = banded.as("b")
-    val cands = a.join(b, col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-      .dropDuplicates("doc_a", "doc_b")
-    cands
-      .withColumn("est_jaccard", sigAgreement(col("sig_a"), col("sig_b"), numHashes))
-      .filter(col("est_jaccard") >= threshold)
-      .select("doc_a", "doc_b", "est_jaccard")
-  }
+      threshold: Double = 0.5,
+      maxBandSize: Int = Int.MaxValue): DataFrame =
+    agreed(bandCandidates(
+      bandedSignaturesPortable(docs, shingleWords, numHashes, bands), "sig", maxBandSize),
+      threshold)
 
-  /** [[minHashLshPairsPortable]] with HUB-CAPPED band buckets — the
-    * Zipf-head guard the plain pairwise form lacks: a web corpus
-    * guarantees some boilerplate page duplicated 10⁵–10⁷ times, and all
-    * of its copies share every band key, so the within-bucket self-join
-    * is quadratic in the bucket (10⁵ copies → 5×10⁹ candidate pairs
-    * from ONE bucket). Buckets over `maxBandSize` switch from all-pairs
-    * to STAR emission: every member pairs with the bucket's min-doc-id
-    * hub only — linear in the bucket, and exactly what the downstream
-    * clustering ([[duplicateClusters]]) needs, since a star keeps the
-    * bucket connected. Cold buckets are byte-identical to the uncapped
-    * operator.
+  /** The band-candidate join of the near-dup family, the engine twin of
+    * `DedupOracle.candidatesSql`: over (doc_id, `payload`, band) rows,
+    * the distinct pairs doc_a < doc_b that share a band, as
+    * (doc_a, doc_b, `payload`_a, `payload`_b). At the default
+    * `maxBandSize` (`Int.MaxValue`, no cap) it is the plain band
+    * self-join: no checkpoint, no bucket-size aggregate, no broadcast.
     *
-    * Scale shape: bucket sizes are ONE map-side-combinable aggregate
-    * (never a window over the bucket); the hot set is one row per hot
-    * (band, bucket) — bounded by the number of distinct hot TEXTS ×
-    * bands, the Zipf head, tiny next to the corpus — so both the
+    * `maxBandSize` is the HUB CAP, the Zipf-head guard the plain
+    * self-join lacks. A web corpus guarantees some boilerplate page
+    * duplicated 10⁵–10⁷ times, and all of its copies share every band
+    * key, so the within-bucket self-join is quadratic in the bucket
+    * (10⁵ copies → 5×10⁹ candidate pairs from ONE bucket), and every
+    * later stage pays per pair: a verifying caller
+    * ([[minHashVerifiedPairs]]) pays a string `levenshtein` (O(len²))
+    * on each. Buckets over the cap switch from all-pairs to STAR
+    * emission: every member pairs with the bucket's min-doc-id hub only
+    * — linear in the bucket, and exactly what the downstream clustering
+    * ([[duplicateClusters]]) needs, since a star keeps the bucket
+    * connected. Cold buckets pair exactly as without a cap.
+    *
+    * Scale shape under a cap: bucket sizes are ONE map-side-combinable
+    * aggregate (never a window over the bucket); the hot set is one row
+    * per hot (band, bucket) — bounded by the number of distinct hot
+    * TEXTS × bands, the Zipf head, tiny next to the corpus — so both the
     * anti-join (cold side) and the hub attach (hot side) broadcast, and
-    * the hot bucket's 10⁵ rows never shuffle on their shared key at
-    * all: the hub pairs are emitted map-side.
+    * the hot bucket's rows never shuffle on their shared key at all:
+    * the hub pairs are emitted map-side.
     *
     * Semantics trade (documented, deliberate): within a hot bucket,
-    * member↔member pairs that would have cleared the signature-agreement
-    * threshold are represented only through the hub. For true duplicate
-    * mass (the case that makes buckets hot) every member agrees with the
-    * hub and the cluster is identical; run [[exact]] dedup first if
-    * exact-copy mass should never reach the near-dup stage at all.
+    * member↔member pairs are represented only through the hub, so the
+    * caller's check (signature agreement, Hamming distance, edit
+    * similarity) applies to star pairs only, and a leaf↔leaf pair is
+    * claimed only by CLUSTER CLOSURE over the checked hub edges (filter
+    * the verdict, then [[duplicateClusters]]/[[duplicateClustersStar]]:
+    * leaf−hub + hub−leaf edges connect the leaves transitively). For
+    * true duplicate mass — the case that makes buckets hot — every
+    * member passes against the hub and the closure equals the uncapped
+    * verdict. A hot bucket of merely-similar-to-hub texts can
+    * transitively claim leaf pairs that fail the check directly
+    * (closure is one edit-radius wider than pairwise), and the
+    * pigeonhole EXACTNESS of banded SimHash holds for cold buckets only.
+    * Callers needing pairwise-exact verdicts inside hot buckets should
+    * run [[exact]] dedup first, so exact-copy mass never reaches the
+    * near-dup stage.
     */
-  def minHashLshPairsHubCapped(
-      docs: DataFrame,
-      shingleWords: Int = 3,
-      numHashes: Int = 16,
-      bands: Int = 4,
-      threshold: Double = 0.5,
-      maxBandSize: Int = 64): DataFrame =
-    hubCappedCandidates(
-      bandedSignaturesPortable(docs, shingleWords, numHashes, bands),
-      "sig", maxBandSize)
-      .withColumn("est_jaccard", sigAgreement(col("sig_a"), col("sig_b"), numHashes))
-      .filter(col("est_jaccard") >= threshold)
-      .select("doc_a", "doc_b", "est_jaccard")
-
-  /** [[simHashPairsBanded]] under the same Zipf-head guard (see
-    * [[minHashLshPairsHubCapped]] — identical hazard: exact-duplicate
-    * mass shares every band, making the within-bucket self-join
-    * quadratic). Buckets over `maxBandSize` star to their min-id hub;
-    * the hamming verification applies to star pairs too, so true
-    * duplicate mass (hamming 0 to the hub) always survives. The
-    * pigeonhole EXACTNESS of the uncapped form holds for cold buckets
-    * only — the documented trade wherever a hub cap is active.
-    */
-  def simHashPairsHubCapped(
-      docs: DataFrame,
-      maxHamming: Int = 2,
-      maxBandSize: Int = 64): DataFrame = {
-    val hashed = docs.select(col("doc_id"), TextAnalysis.simHashModUdf(col("text")).as("simhash"))
-    hubCappedCandidates(simHashBands(hashed, 31, maxHamming), "simhash", maxBandSize)
-      .withColumn("hamming", TextAnalysis.hamming(col("simhash_a"), col("simhash_b")))
-      .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
-  }
-
-  /** Shared hub-capped candidate generation over a (doc_id, `payload`,
-    * band) frame: cold buckets pair all-vs-all exactly like the
-    * uncapped operators; buckets over `maxBandSize` emit one star pair
-    * per member against the bucket's min-doc-id hub. Bucket sizes are
-    * one map-side-combinable aggregate; the hot set (one row per hot
-    * bucket, bounded by the Zipf head) broadcasts into both the cold
-    * anti-join and the hub attach, so hot rows never shuffle on their
-    * shared key. Output: (doc_a, doc_b, `payload`_a, `payload`_b),
-    * deduplicated.
-    */
-  private def hubCappedCandidates(
-      banded0: DataFrame, payload: String, maxBandSize: Int): DataFrame = {
-    // Materialize the banded frame ONCE: four distinct sub-plans consume
-    // it (sizes, hub attach, cold self-join both sides, hot star), and
-    // the broadcast joins block exchange reuse — unmaterialized, the
-    // shingle+signature UDF stage (the CPU stage) would re-execute per
-    // consumer. Transient: a per-query frame must not write
-    // reliable-mode files nothing deletes.
-    val banded = LoopCheckpoint.transient(banded0)
-    val sizes = banded.groupBy("band")
-      .agg(count(lit(1)).as("n"), min(col("doc_id")).as("hub"))
-    val hot = sizes.filter(col("n") > maxBandSize).select("band", "hub")
-    val hubRow = banded.join(broadcast(hot), Seq("band"))
-      .filter(col("doc_id") === col("hub"))
-      .select(col("band"), col("hub"), col(payload).as("hub_payload"))
-    val cold = banded.join(broadcast(hot.select("band")), Seq("band"), "left_anti")
-    val a = cold.as("a"); val b = cold.as("b")
-    val coldPairs = a.join(b, col("a.band") === col("b.band") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col(s"a.$payload").as(s"${payload}_a"), col(s"b.$payload").as(s"${payload}_b"))
-    val hotPairs = banded.join(broadcast(hubRow), Seq("band"))
-      .filter(col("doc_id") =!= col("hub"))
-      .select(col("hub").as("doc_a"), col("doc_id").as("doc_b"),
-        col("hub_payload").as(s"${payload}_a"), col(payload).as(s"${payload}_b"))
-    coldPairs.unionByName(hotPairs).dropDuplicates("doc_a", "doc_b")
+  private def bandCandidates(
+      banded: DataFrame, payload: String, maxBandSize: Int = Int.MaxValue): DataFrame = {
+    def pairs(rows: DataFrame): DataFrame = {
+      val a = rows.as("a"); val b = rows.as("b")
+      a.join(b, col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
+        .select(
+          col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+          col(s"a.$payload").as(s"${payload}_a"), col(s"b.$payload").as(s"${payload}_b"))
+    }
+    val cands =
+      if (maxBandSize == Int.MaxValue) pairs(banded)
+      else {
+        // Materialize the banded frame ONCE: four distinct sub-plans
+        // consume it (sizes, hub attach, cold self-join both sides, hot
+        // star), and the broadcast joins block exchange reuse —
+        // unmaterialized, the shingle+signature UDF stage (the CPU stage)
+        // would re-execute per consumer. Transient: a per-query frame
+        // must not write reliable-mode files nothing deletes.
+        val once = LoopCheckpoint.transient(banded)
+        val hot = once.groupBy("band")
+          .agg(count(lit(1)).as("n"), min(col("doc_id")).as("hub"))
+          .filter(col("n") > maxBandSize).select("band", "hub")
+        val hubRow = once.join(broadcast(hot), Seq("band"))
+          .filter(col("doc_id") === col("hub"))
+          .select(col("band"), col("hub"), col(payload).as("hub_payload"))
+        val hotPairs = once.join(broadcast(hubRow), Seq("band"))
+          .filter(col("doc_id") =!= col("hub"))
+          .select(col("hub").as("doc_a"), col("doc_id").as("doc_b"),
+            col("hub_payload").as(s"${payload}_a"), col(payload).as(s"${payload}_b"))
+        pairs(once.join(broadcast(hot.select("band")), Seq("band"), "left_anti"))
+          .unionByName(hotPairs)
+      }
+    cands.dropDuplicates("doc_a", "doc_b")
   }
 
   /** LSH candidates VERIFIED by normalized edit similarity — the
@@ -640,7 +608,10 @@ object Dedup {
     * set — banding bounds it — never all-pairs; the text attach is two
     * id equi-joins. At 100 TB the candidate frame is the small side by
     * construction, exactly the property that makes two-stage dedup the
-    * production standard.
+    * production standard. `maxBandSize` is the hub cap of
+    * [[bandCandidates]] (default: none); under it only star pairs are
+    * edit-verified, linear in a hot bucket, and leaf↔leaf verdicts come
+    * from cluster closure as documented there.
     */
   def minHashVerifiedPairs(
       docs: DataFrame,
@@ -648,47 +619,10 @@ object Dedup {
       minEditSim: Double = 0.8,
       shingleWords: Int = 3,
       numHashes: Int = 16,
-      bands: Int = 4): DataFrame =
-    verifyPairsByEdit(
-      minHashLshPairsPortable(docs, shingleWords, numHashes, bands, minAgreement),
-      docs, minEditSim)
-
-  /** [[minHashVerifiedPairs]] with HUB-CAPPED candidate generation — the
-    * Zipf-head guard for the two-stage pipeline: the uncapped form feeds
-    * every within-bucket pair into edit verification, so one 10⁵-copy
-    * boilerplate bucket costs 5×10⁹ `levenshtein` calls (each O(len²))
-    * — the verification stage inherits exactly the quadratic bucket the
-    * hub cap exists to prevent, and pays STRING edit distance on it,
-    * far worse than the signature agreement the plain banded form pays.
-    * Candidates come from [[minHashLshPairsHubCapped]]: hot buckets emit
-    * one star pair per member against the min-id hub, and only those
-    * star pairs are edit-verified — linear in the bucket.
-    *
-    * SEMANTICS (the documented hub-cap trade, sharpened for the
-    * verified form): within a hot bucket, a leaf↔leaf pair is never
-    * DIRECTLY edit-checked — a leaf pair is claimed duplicate only via
-    * CLUSTER CLOSURE through verified hub edges (filter `verified`,
-    * then [[duplicateClusters]]/[[duplicateClustersStar]]: leaf−hub +
-    * hub−leaf edges connect the leaves transitively). For true
-    * duplicate mass — the case that makes buckets hot — every member
-    * verifies against the hub and the closure equals the uncapped
-    * verdict; a hot bucket of merely-similar-to-hub texts can
-    * transitively claim leaf pairs whose direct edit similarity is
-    * below the floor (closure is one edit-radius wider than pairwise).
-    * Callers needing pairwise-exact verdicts inside hot buckets should
-    * run [[exact]] dedup first so exact-copy mass never reaches the
-    * near-dup stage.
-    */
-  def minHashVerifiedPairsHubCapped(
-      docs: DataFrame,
-      minAgreement: Double = 0.25,
-      minEditSim: Double = 0.8,
-      shingleWords: Int = 3,
-      numHashes: Int = 16,
       bands: Int = 4,
-      maxBandSize: Int = 64): DataFrame =
+      maxBandSize: Int = Int.MaxValue): DataFrame =
     verifyPairsByEdit(
-      minHashLshPairsHubCapped(
+      minHashLshPairsPortable(
         docs, shingleWords, numHashes, bands, minAgreement, maxBandSize),
       docs, minEditSim)
 
@@ -758,7 +692,7 @@ object Dedup {
         col("b.sig").as("sig_a"), col("a.sig").as("sig_b"))
     val blockers = vsCorpus.unionByName(vsBatch)
       .dropDuplicates("doc_id", "blocker")
-      .filter(sigAgreement(col("sig_a"), col("sig_b"), numHashes) >= threshold)
+      .filter(sigAgreement(col("sig_a"), col("sig_b")) >= threshold)
       .groupBy("doc_id")
       .agg(min(col("blocker")).as("blocked_by"))
     incoming.select(col("doc_id"))
@@ -976,12 +910,18 @@ object Dedup {
     * qualifying pair: the result is provably identical to the exact
     * all-pairs form (which stays as the oracle and the spec cross-check),
     * while the plan is hash-partitioned equi-joins on short band keys —
-    * no O(n²) theta self-join.
+    * no O(n²) theta self-join. `maxBandSize` is the hub cap of
+    * [[bandCandidates]] (default: none); the Hamming check applies to
+    * star pairs too, so true duplicate mass (Hamming 0 to the hub)
+    * always survives.
     */
-  def simHashPairsBanded(docs: DataFrame, maxHamming: Int = 2): DataFrame =
+  def simHashPairsBanded(
+      docs: DataFrame,
+      maxHamming: Int = 2,
+      maxBandSize: Int = Int.MaxValue): DataFrame =
     simHashBandPairs(
       docs.select(col("doc_id"), TextAnalysis.simHashModUdf(col("text")).as("simhash")),
-      31, maxHamming)
+      31, maxHamming, maxBandSize)
 
   /** Contiguous cut of a `bits`-wide fingerprint into `nBands` bands, as
     * (offset, mask) per band; widths differ by at most one. A 64-bit band
@@ -1008,21 +948,17 @@ object Dedup {
             .bitwiseAND(lit(mask)).cast("string"))
       }: _*)).as("band"))
 
-  /** Band equi-join of (doc_id, simhash) rows, verified by exact Hamming
-    * distance — shared by the murmur and portable fingerprints.
+  /** [[bandCandidates]] over the [[simHashBands]] of (doc_id, simhash)
+    * rows, verified by exact Hamming distance — shared by the murmur and
+    * portable fingerprints.
     */
-  private def simHashBandPairs(hashed: DataFrame, bits: Int, maxHamming: Int): DataFrame = {
-    val banded = simHashBands(hashed, bits, maxHamming)
-    val a = banded.as("a"); val b = banded.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.simhash").as("sim_a"), col("b.simhash").as("sim_b"))
-      .dropDuplicates("doc_a", "doc_b")
-      .withColumn("hamming", TextAnalysis.hamming(col("sim_a"), col("sim_b")))
+  private def simHashBandPairs(
+      hashed: DataFrame, bits: Int, maxHamming: Int,
+      maxBandSize: Int = Int.MaxValue): DataFrame =
+    bandCandidates(simHashBands(hashed, bits, maxHamming), "simhash", maxBandSize)
+      .withColumn("hamming", TextAnalysis.hamming(col("simhash_a"), col("simhash_b")))
       .filter(col("hamming") <= maxHamming)
       .select("doc_a", "doc_b", "hamming")
-  }
 
   /** Benchmark-contamination check: documents sharing any `n`-word shingle
     * with a benchmark/eval set (the standard 13-gram decontamination rule
@@ -1072,8 +1008,9 @@ object Dedup {
     * `localCheckpoint` truncating the growing lineage; iterations are
     * bounded by component diameter (near-dup components are clique-like,
     * so a handful). At 1000-executor scale the same loop holds — both
-    * sides hash-partition on the node id — with the large-star/small-star
-    * optimization as the known upgrade path for adversarial chain graphs.
+    * sides hash-partition on the node id. For adversarial chain graphs
+    * the upgrade is the large-star/small-star form,
+    * [[duplicateClustersStar]], which converges in O(log n) rounds.
     */
   def duplicateClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     // ONE pass over the (expensive) pair-generation lineage: the
@@ -1197,23 +1134,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Embedding-cosine near-dup pairs above a similarity threshold — exact
-    * all-pairs form. Kept ONLY as the brute-force cross-check for
-    * [[embeddingNearDupBucketed]]'s recall spec; the registered/production
-    * path is the bucketed variant (this one is a BroadcastNestedLoopJoin
-    * and does not survive a corpus that outgrows one executor).
-    */
-  def embeddingNearDupPairs(vecs: DataFrame, threshold: Double): DataFrame = {
-    val a = vecs.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"))
-    val b = vecs.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"))
-    a.crossJoin(b)
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cos_sim",
-        graft.expressions.VectorExpressions.cosineSim(col("emb_a"), col("emb_b")))
-      .filter(col("cos_sim") >= threshold)
-      .select("id_a", "id_b", "cos_sim")
-  }
-
   /** PORTABLE random-hyperplane LSH signature: bit b of the signature is
     * the sign of ⟨v, h_b⟩ where hyperplane component h_b[i] derives from a
     * SQUARED Lehmer hash of index `b * 1024 + i` (stride 1024 > any
@@ -1251,7 +1171,8 @@ object Dedup {
   }
 
   /** Embedding-cosine near-dup with LSH-bucketed candidate generation —
-    * the scale form of [[embeddingNearDupPairs]]. Candidates = pairs
+    * the scale form of the exact all-pairs cosine join (kept in test
+    * sources as the recall spec's cross-check). Candidates = pairs
     * agreeing on at least one of `bands` signature bands (rows =
     * nBits/bands bits each); survivors get the exact codegen-cosine
     * recheck against `threshold`. The only shuffle is the equi-join on

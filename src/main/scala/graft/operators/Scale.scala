@@ -278,8 +278,10 @@ object Scale {
     * cumulative split weights — by construction no cluster can straddle.
     *
     * Scale shape: clusters come from the iterative components pass over
-    * the pairs frame ([[Dedup.duplicateClusters]] — O(log n) rounds of
-    * short-key equi-joins); the assignment itself is a broadcast-free
+    * the pairs frame ([[Dedup.duplicateClusters]] — min-label
+    * propagation, one short-key equi-join + min-aggregate per round,
+    * rounds bounded by component diameter and capped at its `maxIter`
+    * of 20); the assignment itself is a broadcast-free
     * left join plus a pure integer projection ([[knuthHash32]], the
     * shard_deterministic discipline), so re-splitting under new weights
     * re-runs only the projection.
@@ -446,17 +448,6 @@ object Scale {
     import org.apache.spark.sql.graftshim.GraftSqlShim
     GraftSqlShim.column(
       graft.expressions.WordNgramTerms(GraftSqlShim.expression(text)))
-  }
-
-  /** The composed HOF form [[dsirTermsCol]] replaced (r13) — kept as the
-    * equality-spec twin (WordNgramTermsSpec pins bit-identity).
-    */
-  private[graft] def dsirTermsColHof(text: Column): Column = {
-    val toks = TextRetrieval.tokensCol(text)
-    val n1 = greatest(size(toks) - 1, lit(0))
-    concat(toks,
-      zip_with(slice(toks, lit(1), n1), slice(toks, lit(2), n1),
-        (a, b) => concat(a, lit(" "), b)))
   }
 
   /** Term → feature bucket in [0, nBuckets). The scale default is the

@@ -180,26 +180,30 @@ object DocLoader {
   def extractPdfPages(bytes: Array[Byte]): Seq[(Int, String)] = {
     if (bytes == null || bytes.length < 5 ||
       !new String(bytes, 0, 5, StandardCharsets.ISO_8859_1).startsWith("%PDF")) return null
-    try {
-      val objs = parseObjects(bytes)
-      val pageOrder: Seq[Int] = pageTreeOrder(objs).getOrElse(
-        objs.toSeq
-          .filter { case (_, o) => "/Type\\s*/Page(?![a-zA-Z])".r.findFirstIn(o.dict).isDefined }
-          .map(_._1).sorted)
-      val refRe = "(\\d+)\\s+\\d+\\s+R".r
-      pageOrder.zipWithIndex.map { case (pn, idx) =>
-        val dict = objs(pn).dict
-        val fonts = pageFontDecoders(objs, dict)
-        val contents = "/Contents\\s*(\\[[^\\]]*\\]|\\d+\\s+\\d+\\s+R)".r
-          .findFirstMatchIn(dict).map(_.group(1)).getOrElse("")
-        val streamBytes = refRe.findAllMatchIn(contents).map(_.group(1).toInt).toSeq
-          .flatMap(objs.get).flatMap(o => Option(o.stream))
-        val text = streamBytes
-          .map(b => contentStreamText(new String(b, StandardCharsets.UTF_8), fonts))
-          .mkString("\n")
-        (idx + 1, text)
-      }
-    } catch { case _: Exception => null }
+    try pagesOf(parseObjects(bytes))
+    catch { case _: Exception => null }
+  }
+
+  /** The (page_number, text) rows of [[extractPdfPages]] over already
+    * parsed objects. */
+  private def pagesOf(objs: Map[Int, PdfObj]): Seq[(Int, String)] = {
+    val pageOrder: Seq[Int] = pageTreeOrder(objs).getOrElse(
+      objs.toSeq
+        .filter { case (_, o) => "/Type\\s*/Page(?![a-zA-Z])".r.findFirstIn(o.dict).isDefined }
+        .map(_._1).sorted)
+    val refRe = "(\\d+)\\s+\\d+\\s+R".r
+    pageOrder.zipWithIndex.map { case (pn, idx) =>
+      val dict = objs(pn).dict
+      val fonts = pageFontDecoders(objs, dict)
+      val contents = "/Contents\\s*(\\[[^\\]]*\\]|\\d+\\s+\\d+\\s+R)".r
+        .findFirstMatchIn(dict).map(_.group(1)).getOrElse("")
+      val streamBytes = refRe.findAllMatchIn(contents).map(_.group(1).toInt).toSeq
+        .flatMap(objs.get).flatMap(o => Option(o.stream))
+      val text = streamBytes
+        .map(b => contentStreamText(new String(b, StandardCharsets.UTF_8), fonts))
+        .mkString("\n")
+      (idx + 1, text)
+    }
   }
 
   /** Whole-document PDF text: pages joined with `\n`. */
@@ -248,10 +252,7 @@ object DocLoader {
           !fontDecoder(objs, o.dict).exists(_.isInstanceOf[CMapFont])
       }
       if (undecodableType0) (null, StatusUnsupportedFont)
-      else {
-        val text = extractPdf(bytes)
-        if (text == null) (null, StatusParseError) else (text, StatusOk)
-      }
+      else (pagesOf(objs).map(_._2).mkString("\n"), StatusOk)
     } catch { case _: Exception => (null, StatusParseError) }
   }
 

@@ -35,7 +35,7 @@ class CharShinglesSpec extends AnyFunSuite with SparkTestSession {
       val both = df.select(
           col("id"),
           TextAnalysis.charShingles(col("text"), n).as("fused"),
-          TextAnalysis.charShinglesHof(col("text"), n).as("hof"))
+          TwinReference.charShinglesHof(col("text"), n).as("hof"))
         .collect()
       both.foreach { r =>
         assert(r.get(1) == r.get(2) ||
@@ -52,7 +52,7 @@ class CharShinglesSpec extends AnyFunSuite with SparkTestSession {
       .head().getSeq[String](0)
     assert(got == Seq("a🙂", "🙂b").sorted || got.toSet == Set("a🙂", "🙂b"))
     // exact binary order cross-check against the HOF twin
-    val hof = df.select(TextAnalysis.charShinglesHof(col("text"), 2))
+    val hof = df.select(TwinReference.charShinglesHof(col("text"), 2))
       .head().getSeq[String](0)
     assert(got == hof)
   }

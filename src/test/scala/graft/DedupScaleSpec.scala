@@ -55,7 +55,7 @@ class DedupScaleSpec extends AnyFunSuite with SparkTestSession {
     // corpus exceeds a corpus-sized cap).
     val uncapped = Dedup.minHashLshPairsPortable(docs)
       .as[(Long, Long, Double)].collect().toSet
-    val inactive = Dedup.minHashLshPairsHubCapped(docs, maxBandSize = 100000)
+    val inactive = Dedup.minHashLshPairsPortable(docs, maxBandSize = 100000)
       .as[(Long, Long, Double)].collect().toSet
     assert(inactive == uncapped, "inactive cap must not change the pair set")
     // A planted hot mass (500 copies of doc 0's text, ids 90000+) over
@@ -65,7 +65,7 @@ class DedupScaleSpec extends AnyFunSuite with SparkTestSession {
     val hot = docs.filter(col("doc_id") === 0).select("text")
       .crossJoin(spark.range(500).toDF("i"))
       .select((col("i") + lit(90000L)).as("doc_id"), col("text"))
-    val capped = Dedup.minHashLshPairsHubCapped(
+    val capped = Dedup.minHashLshPairsPortable(
       docs.select("doc_id", "text").unionByName(hot), maxBandSize = 64)
       .as[(Long, Long, Double)].collect()
     val hotPairs = capped.filter(p => p._2 >= 90000L)
@@ -91,7 +91,7 @@ class DedupScaleSpec extends AnyFunSuite with SparkTestSession {
       .crossJoin(spark.range(500).toDF("i"))
       .select((col("i") + lit(90000L)).as("doc_id"), col("text"))
     val input = docs.select("doc_id", "text").unionByName(hot)
-    val verified = Dedup.minHashVerifiedPairsHubCapped(
+    val verified = Dedup.minHashVerifiedPairs(
       input, minAgreement = 0.25, minEditSim = 0.9, maxBandSize = 64)
       .as[(Long, Long, Double, Double, Boolean)].collect()
     val hotPairs = verified.filter(p => p._2 >= 90000L)

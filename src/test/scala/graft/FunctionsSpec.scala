@@ -40,6 +40,63 @@ class HashEmbedderSpec extends AnyFunSuite {
     val far = HashEmbedder.embed("cooking pasta requires salted water")
     assert(cos(base, near) > cos(base, far))
   }
+
+  test("src/main maps case only with an explicit locale") {
+    // String.toLowerCase()/toUpperCase() read the JVM's default locale:
+    // under tr/az/lt, "I" lowers to a dotless ı, and every embedding,
+    // fingerprint and language ID of the text would move with the way
+    // the JVM was started.
+    val bare = """\.to(?:Lower|Upper)Case\b(?!\s*\(\s*(?:java\.util\.)?Locale\.)""".r
+    val root = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(root), s"no sources at ${root.toAbsolutePath}")
+    val files = java.nio.file.Files.walk(root).iterator()
+    val hits = scala.collection.mutable.ArrayBuffer.empty[String]
+    while (files.hasNext) {
+      val f = files.next()
+      if (f.toString.endsWith(".scala")) {
+        val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        text.split("\n").zipWithIndex.foreach { case (line, i) =>
+          val code = line.trim
+          val isComment = code.startsWith("*") || code.startsWith("/**") || code.startsWith("//")
+          if (!isComment && bare.findFirstIn(line).isDefined) hits += s"$f:${i + 1}: $code"
+        }
+      }
+    }
+    assert(hits.isEmpty, hits.mkString("case mapping without a locale:\n", "\n", ""))
+  }
+
+  test("scalar tokenizers lower the same under a Turkish default locale") {
+    // A child JVM, so the shared test JVM's default locale never changes.
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val cmd = Seq(javaBin, "-Xmx128m", "-Duser.language=tr", "-Duser.country=TR",
+      "-cp", System.getProperty("java.class.path"), "graft.LocaleProbe")
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(proc.getInputStream, "UTF-8").mkString
+    assert(proc.waitFor() == 0, out)
+    val got = out.split("\n").map(_.trim).filter(_.contains("=")).map { l =>
+      val i = l.indexOf('='); l.take(i) -> l.drop(i + 1)
+    }.toMap
+    assert(got.get("dotless").contains("true"), s"the child JVM is not Turkish:\n$out")
+    assert(got.get("tokens").contains("title index"), out)
+    assert(got.get("fingerprint").contains("true"), out)
+    assert(got.get("fingerprintMod").contains("true"), out)
+    assert(got.get("detectLanguage").contains("true"), out)
+  }
+}
+
+/** Run by the Turkish-locale test in a child JVM: prints whether the
+  * default locale lowers "TITLE" to a dotless ı, and what the scalar
+  * tokenizers make of upper-case text. */
+object LocaleProbe {
+  def main(args: Array[String]): Unit = {
+    val upper = "THE TITLE AND THE INDEX OF THE BOOK IS IN THE LIST"
+    val lower = "the title and the index of the book is in the list"
+    println(s"dotless=${"TITLE".toLowerCase == "t\u0131tle"}")
+    println(s"tokens=${HashEmbedder.tokens("TITLE INDEX").mkString(" ")}")
+    println(s"fingerprint=${TextAnalysis.fingerprint(upper) == TextAnalysis.fingerprint(lower)}")
+    println(s"fingerprintMod=${TextAnalysis.fingerprintMod(upper) == TextAnalysis.fingerprintMod(lower)}")
+    println(s"detectLanguage=${TextAnalysis.detectLanguage(upper) == TextAnalysis.detectLanguage(lower)}")
+  }
 }
 
 class TextAnalysisScalaSpec extends AnyFunSuite {

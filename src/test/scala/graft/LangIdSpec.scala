@@ -50,7 +50,7 @@ class LangIdSpec extends AnyFunSuite with SparkTestSession {
     val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
       .select(col("id"), col("text"),
         TextAnalysis.detectLanguageCol(col("text")).as("kernel"),
-        TextAnalysis.detectLanguageHof(col("text")).as("hof"))
+        TwinReference.detectLanguageHof(col("text")).as("hof"))
       .collect()
     assert(rows.length == texts.length)
     val langs = rows.map { r =>

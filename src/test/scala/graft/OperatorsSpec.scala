@@ -551,7 +551,7 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     val vecs = Seq(
       (0L, Array(1f, 0f)), (1L, Array(0.99f, 0.14f)), (2L, Array(0f, 1f)))
       .toDF("vec_id", "embedding")
-    val out = Dedup.embeddingNearDupPairs(vecs, 0.9)
+    val out = TwinReference.embeddingNearDupPairs(vecs, 0.9)
       .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
     assert(out == Set((0L, 1L)))
   }
@@ -580,7 +580,7 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     val dups = (0 until 5).map(i =>
       (100L + i, base(i)._2.map(x => x + 0.001f * (i + 1))))
     val vecs = (base ++ dups).toDF("vec_id", "embedding")
-    val exact = Dedup.embeddingNearDupPairs(vecs, 0.98)
+    val exact = TwinReference.embeddingNearDupPairs(vecs, 0.98)
       .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
     val bucketed = Dedup.embeddingNearDupBucketed(vecs, 0.98, nBits = 16, bands = 4)
       .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet

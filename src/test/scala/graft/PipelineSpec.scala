@@ -342,6 +342,34 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     .select("query_id", "vec_id").as[(Long, Long)].collect()
     .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
 
+  /** Asserts the branch of the layout probe's adaptive cutoff that a
+    * probed set of `probed` keys out of `keySpace` takes. Under the
+    * cutoff (2·probed < keySpace) the set must reach the scan as a
+    * static per-value `IN`/`INSET` on `key`. Over it the scan must carry
+    * no static per-value filter: the join's inferred `isnotnull(key)`
+    * and a runtime `dynamicpruningexpression` are always allowed, so
+    * neither can pass for pruning.
+    */
+  private def assertProbeBranch(
+      df: org.apache.spark.sql.DataFrame, key: String, probed: Int, keySpace: Int): Unit = {
+    val leaves = df.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString
+    val pf = "PartitionFilters: \\[([^\\]]*)\\]".r
+      .findAllMatchIn(leaves).map(_.group(1)).mkString(";")
+    val static = pf.contains(" IN (") || pf.contains("INSET")
+    if (2 * probed < keySpace)
+      assert(static && pf.contains(key),
+        s"$probed of $keySpace probed ${key}s must reach the scan as a static IN/INSET: $pf")
+    else
+      assert(!static,
+        s"$probed of $keySpace probed ${key}s must not pay the static per-value filter: $pf")
+  }
+
+  /** Distinct cells the IVF probes of `qs` (query_id, q_embedding) visit. */
+  private def probedCells(
+      qs: org.apache.spark.sql.DataFrame, centroids: Array[Array[Float]], nProbe: Int): Int =
+    qs.select("q_embedding").collect()
+      .flatMap(r => Ann.nearestCells(r.getSeq[Float](0), centroids, nProbe)).distinct.length
+
   private def recall(approx: Array[(Long, Long)]): Double = {
     val byQ = approx.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val hits = exact.map { case (q, truth) =>
@@ -389,9 +417,9 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
       .select("query_id", "rank", "vec_id", "sim")
       .as[(Long, Int, Long, Double)].collect().toSet
     assert(out == mem, "partitioned layout must not change results")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("sig"),
-      s"probe must prune partitions, not post-filter:\n${plan.take(800)}")
+    val probedSigs = queries.select("q_embedding").collect().flatMap(r =>
+      Ann.probeSignatures(Ann.signature(r.getSeq[Float](0), 8), 8, 2)).distinct.length
+    assertProbeBranch(df, "sig", probedSigs, 1 << 8)
   }
 
   test("cell-partitioned IVF layout: probes prune partitions, match in-memory IVF") {
@@ -404,9 +432,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     val mem = Ann.ivfTopK(queries, assigned, centroids, k = 5, nProbe = 3)
       .select("query_id", "rank", "vec_id").as[(Long, Int, Long)].collect().toSet
     assert(out == mem, "cell-partitioned layout must not change results")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("cell"),
-      s"probe must prune partitions, not post-filter:\n${plan.take(800)}")
+    assertProbeBranch(df, "cell", probedCells(queries, centroids, 3), centroids.length)
   }
 
   test("fingerprint-keyed layout: reused for identical corpus, rebuilt on mutation") {
@@ -722,9 +748,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     // partial probe: the cell filter must reach the scan as a genuine
     // partition-pruning predicate, not a post-scan filter
     val partial = Ann.ivfPqJoin(spark, dir, qs, centroids, books, k = 7, nProbe = 2)
-    val plan = partial.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("cell"),
-      s"probe must prune cell partitions:\n${plan.take(800)}")
+    assertProbeBranch(partial, "cell", probedCells(qs, centroids, 2), centroids.length)
     // and the probed subset still finds most of what the flat scan finds
     val got = partial.select("query_id", "vec_id").as[(Long, Long)].collect().toSet
     val hits = flat.map(r => (r._1, r._3)).count(got.contains).toDouble / flat.size
@@ -914,9 +938,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
       rows(Ann.ivfPqJoin(spark, flatDir, qs, centroids, books, k = 7, nProbe = 3)),
       "base + appended batch must equal the rebuilt layout")
     // the probe must still prune cell partitions across batch directories
-    val plan = versioned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("cell"),
-      s"versioned probe must prune cell partitions:\n${plan.take(800)}")
+    assertProbeBranch(versioned, "cell", probedCells(qs, centroids, 3), centroids.length)
     // idempotency: re-delivering the same batch must not double-insert
     val before = spark.read.option("basePath", root).parquet(root).count()
     Ann.ivfPqAppendBatch(spark, root, batch, centroids, books, "b1")

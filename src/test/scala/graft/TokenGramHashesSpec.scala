@@ -42,7 +42,7 @@ class TokenGramHashesSpec extends AnyFunSuite with SparkTestSession {
       val both = df.select(
           col("id"),
           Dedup.gramHashes(col("toks"), k).as("fused"),
-          Dedup.gramHashesHof(col("toks"), k).as("hof"))
+          TwinReference.gramHashesHof(col("toks"), k).as("hof"))
         .collect()
       assert(both.nonEmpty)
       both.foreach { r =>
@@ -70,7 +70,7 @@ class TokenGramHashesSpec extends AnyFunSuite with SparkTestSession {
     for (k <- Seq(2, 3)) {
       val both = df.select(
           Dedup.gramHashes(col("toks"), k).as("fused"),
-          Dedup.gramHashesHof(col("toks"), k).as("hof"))
+          TwinReference.gramHashesHof(col("toks"), k).as("hof"))
         .collect()
       both.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1)))
     }

@@ -45,7 +45,7 @@ class WordNgramTermsSpec extends AnyFunSuite with SparkTestSession {
     val both = df.select(
         col("id"),
         Scale.dsirTermsCol(col("text")).as("fused"),
-        Scale.dsirTermsColHof(col("text")).as("hof"))
+        TwinReference.dsirTermsColHof(col("text")).as("hof"))
       .collect()
     both.foreach { r =>
       assert((r.isNullAt(1) && r.isNullAt(2)) ||

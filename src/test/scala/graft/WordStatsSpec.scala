@@ -79,7 +79,7 @@ object WordStatsReference {
     val hashed = docs.select(
       col("doc_id"), col("lang"),
       qualityScore(col("text")).as("quality"),
-      TextAnalysis.detectLanguageHof(col("text")).as("lang_pred"),
+      TwinReference.detectLanguageHof(col("text")).as("lang_pred"),
       sha2(coalesce(col("text"), lit("")), 256).as("_content_h"))
     val firsts = hashed.groupBy("_content_h")
       .agg(min(col("doc_id")).as("_first_doc"))
