@@ -8,28 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class AnnProbeCoreSpec extends AnyFunSuite {
 
-  private val lines: Seq[String] = {
-    val p = java.nio.file.Paths.get("src/main/scala/graft/operators/Ann.scala")
-    assert(java.nio.file.Files.exists(p), s"no source at ${p.toAbsolutePath}")
-    new String(java.nio.file.Files.readAllBytes(p), "UTF-8").split("\n").toSeq
-  }
-
-  private val TopDef = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r
-
-  /** The top-level `def` enclosing each code occurrence of `needle`
-    * (scaladoc and line comments skipped, the needle's own definition
-    * excluded).
-    */
-  private def callers(needle: String): Seq[String] = {
-    var current = ""
-    lines.flatMap { line =>
-      TopDef.findFirstMatchIn(line).foreach(m => current = m.group(1))
-      val code = line.trim
-      val isComment = code.startsWith("*") || code.startsWith("/**") || code.startsWith("//")
-      val isDefinition = line.contains(s"def $needle")
-      if (!isComment && !isDefinition && line.contains(needle)) Some(current) else None
-    }
-  }
+  private val ann = new SourcePin("src/main/scala/graft/operators/Ann.scala")
+  import ann.{callers, lines}
 
   test("every layout probe runs through one candidate join and one ADC tail") {
     assert(callers("saltedKeyJoin(") == Seq("probeJoin"), callers("saltedKeyJoin("))

@@ -68,28 +68,8 @@ class DedupOracleSpec extends AnyFunSuite {
     }
   }
 
-  private val dedupLines: Seq[String] = {
-    val p = java.nio.file.Paths.get("src/main/scala/graft/operators/Dedup.scala")
-    assert(java.nio.file.Files.exists(p), s"no source at ${p.toAbsolutePath}")
-    new String(java.nio.file.Files.readAllBytes(p), "UTF-8").split("\n").toSeq
-  }
-
-  private val TopDef = """^  (?:private(?:\[\w+\])? )?(?:def|val) (\w+)""".r
-
-  /** The top-level definition enclosing each code occurrence of `needle`
-    * in `Dedup.scala` (scaladoc and line comments skipped, the needle's
-    * own definition excluded).
-    */
-  private def callers(needle: String): Seq[String] = {
-    var current = ""
-    dedupLines.flatMap { line =>
-      TopDef.findFirstMatchIn(line).foreach(m => current = m.group(1))
-      val code = line.trim
-      val isComment = code.startsWith("*") || code.startsWith("/**") || code.startsWith("//")
-      val isDefinition = line.contains(s"def $needle")
-      if (!isComment && !isDefinition && line.contains(needle)) Some(current) else None
-    }
-  }
+  private val dedup = new SourcePin("src/main/scala/graft/operators/Dedup.scala")
+  import dedup.callers
 
   test("Dedup has the oracle's shape: one band-candidate join, one agreement form") {
     // The band self-join: the core, plus the two operators that keep
@@ -109,7 +89,7 @@ class DedupOracleSpec extends AnyFunSuite {
       callers("sigAgreement("))
     assert(callers("zip_with").isEmpty && callers("udf { (x: Seq[Long], y: Seq[Long])") ==
       Seq("sigAgreement"), "the signature agreement has one form")
-    assert(!dedupLines.exists(_.contains("HubCapped")),
+    assert(!dedup.lines.exists(_.contains("HubCapped")),
       "the hub cap is the maxBandSize parameter, not a twin operator")
   }
 

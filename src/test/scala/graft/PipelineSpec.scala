@@ -745,8 +745,8 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
       .select("query_id", "rank", "vec_id", "adc_dist")
       .as[(Long, Int, Long, Double)].collect().toSet
     assert(full == flat, "full-probe IVF-PQ must equal the flat ADC scan")
-    // partial probe: the cell filter must reach the scan as a genuine
-    // partition-pruning predicate, not a post-scan filter
+    // partial probe: the scan takes the adaptive-cutoff branch its
+    // probed cells call for
     val partial = Ann.ivfPqJoin(spark, dir, qs, centroids, books, k = 7, nProbe = 2)
     assertProbeBranch(partial, "cell", probedCells(qs, centroids, 2), centroids.length)
     // and the probed subset still finds most of what the flat scan finds
@@ -937,7 +937,8 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     assert(rows(versioned) ==
       rows(Ann.ivfPqJoin(spark, flatDir, qs, centroids, books, k = 7, nProbe = 3)),
       "base + appended batch must equal the rebuilt layout")
-    // the probe must still prune cell partitions across batch directories
+    // across batch directories the scan takes the adaptive-cutoff
+    // branch its probed cells call for
     assertProbeBranch(versioned, "cell", probedCells(qs, centroids, 3), centroids.length)
     // idempotency: re-delivering the same batch must not double-insert
     val before = spark.read.option("basePath", root).parquet(root).count()
